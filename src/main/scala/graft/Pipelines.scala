@@ -412,7 +412,7 @@ object Pipelines {
   def burnFeeAreaPage(s: SparkSession, cacheDir: String,
                       after: Option[(Long, Long)], pageSize: Int): DataFrame = {
     require(pageSize > 0, "pageSize must be positive")
-    val area = s.read.parquet(s"$cacheDir/burn_fee_area")
+    val area = Tables.parquet(s, s"$cacheDir/burn_fee_area")
       .select(col("address"), col("height"), col("cum_filled"))
     val page = after match {
       case Some((a, h)) => area.filter(col("address") > a ||
@@ -467,10 +467,10 @@ object Pipelines {
     *   - rateOfReturn carries real values (the reference's packRR ships
     *     empty lists — superseded to intent, SURVEY §2.12 R4). */
   def dashboard(s: SparkSession, cacheDir: String): String = {
-    val blocks = s.read.parquet(s"$cacheDir/block_info")
-    val chain = s.read.parquet(s"$cacheDir/mining_info")
-    val area = s.read.parquet(s"$cacheDir/burn_fee_area")
-    def rr(name: String) = s.read.parquet(s"$cacheDir/$name")
+    val blocks = Tables.parquet(s, s"$cacheDir/block_info")
+    val chain = Tables.parquet(s, s"$cacheDir/mining_info")
+    val area = Tables.parquet(s, s"$cacheDir/burn_fee_area")
+    def rr(name: String) = Tables.parquet(s, s"$cacheDir/$name")
 
     // currentStatus (mining_monitor_rpc.js:1-21): tail-20 series + averages
     val b20 = blocks
@@ -489,7 +489,7 @@ object Pipelines {
     require(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$cacheDir/chain_tip")),
       s"dashboard: $cacheDir has no chain_tip relation — re-run refreshCache (cache layout predates the derived tip timestamp)")
-    val tipTs = s.read.parquet(s"$cacheDir/chain_tip")
+    val tipTs = Tables.parquet(s, s"$cacheDir/chain_tip")
       .select(col("tip_ts")).head().getLong(0)
     // Locale.ROOT: the f-interpolator uses the default locale, which would
     // emit comma decimals (invalid JSON) on comma-decimal JVMs
@@ -568,7 +568,7 @@ object Pipelines {
     val stx = pr.getLong(0).toDouble / 1000.0
     val btc = pr.getLong(1) * 10000L
     val hashPower = pr.getString(2)
-    val btcTotal = s.read.parquet(s"$cacheDir/btc_total")
+    val btcTotal = Tables.parquet(s, s"$cacheDir/btc_total")
       .select(col("btc_total")).head().getDouble(0)
 
     s"""{"currentStatus":$currentStatus,""" +

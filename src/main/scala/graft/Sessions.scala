@@ -33,15 +33,24 @@ object Sessions {
       // sf100 rehearsal a 32-way shuffle meant 2 GB sort/hash partitions —
       // the source of a13's 12.8× and f1's 17.8× per-decade superlinearity
       // (spill, not compute). 512 initial keeps those partitions ≤ ~125 MB.
-      // On a real cluster this is exactly AQE's documented role; the env
-      // override exists for A/B probes, not production tuning.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "512"))
-      // A/B probe knob only (default = Spark's default, on): lets a dev
-      // measure AQE's per-stage orchestration share on the round-loop
-      // families without rebuilding.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // On a real cluster this is exactly AQE's documented role.
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
+      .config("spark.sql.adaptive.enabled", "true")
+      // Spark's generated-code cache holds 100 classes by default, fewer
+      // than one pass of the engine's queries needs, so Janino recompiled
+      // the same classes on every pass (~137 compiles, ~1.5 s of each
+      // 14-query pass at sf0.01). One pass of all 193 registered queries
+      // compiles 1 767 distinct classes (sf0.001, local[4]); at 2000 a warm
+      // pass compiles none. Static conf: it must be set before the first
+      // session of the JVM generates code.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // The cache is keyed by the generated source, and a whole-stage
+      // class name carries its codegen stage id, which AQE assigns in
+      // stage-completion order — so a racy completion order (g4's three
+      // independent branches) produced "new" source for the same pipeline
+      // and recompiled it on some passes. Without the id the source is a
+      // function of the plan alone.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       // NOT set: spark.serializer=Kryo — A/B'd for the r14 RDD round loops
       // (graph family) and measured a wash at gate scale (the loop shuffles

@@ -11,7 +11,7 @@ object Sql {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "graft-sql")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)
+      Tables.parquet(spark, s"$sfDir/$t.parquet").createOrReplaceTempView(t)
     }
     Tables.events(spark, sfDir).createOrReplaceTempView("events")
     spark.sql(sql).show(100, truncate = false)
