@@ -1,21 +1,47 @@
 package graft
 
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped materialization cache for SHARED QUERY CORES — the
-  * relations several registered queries are composed from (d6's cluster
-  * labels, the d2 LSH candidate pairs, tx9's scored TF-IDF pairs). Without
-  * it, every composing query re-runs the core's shuffles: tx17 paid tx9's
-  * whole candidate join again (1.9 s at sf0.1), and d2/d4/d10/d6 each
-  * re-ran the signature + band self-join (~1.2 s × 3 redundant runs).
+/** The engine's one cache layer: every value derived from a source table
+  * and reused across queries of a session goes through here.
   *
-  * Entries are localCheckpoint(true)-materialized DataFrames keyed by
-  * (session, data dir, core tag, SOURCE MTIME): regenerating the source
-  * parquet at the same path invalidates the entry instead of serving stale
-  * results (the KMeansCodebook fingerprint contract), and entries of
-  * stopped sessions are purged on access — their checkpoint RDDs die with
-  * the session, and the map must not pin dead sessions in a long-lived JVM
-  * (the Dedup.clusterCache contract, ADVICE r3, now shared here).
+  * Three entry points, one lookup ([[value]]):
+  *   - [[value]]: driver-side data — a row count, a tip height, trained
+  *     centroids, a BPE merge list. Stored as computed.
+  *   - [[cached]]: a SHARED QUERY CORE, the relation several registered
+  *     queries are composed from (d6's cluster labels, the d2 LSH
+  *     candidate pairs, tx9's scored TF-IDF pairs), materialized with
+  *     localCheckpoint(true). Without it every composing query re-runs the
+  *     core's shuffles: tx17 paid tx9's whole candidate join again (1.9 s
+  *     at sf0.1), and d2/d4/d10/d6 each re-ran the signature + band
+  *     self-join.
+  *   - [[cachedParquet]]: an index-sized core, written as parquet under
+  *     the session's scratch root instead.
+  *
+  * THE KEY. One entry per (session, data dir, tag). The tag names every
+  * input besides the dir (`kmeans_k${k}_i$iters`, `bpe_batched_exact`, a
+  * needle). The entry holds the fingerprint of its source file `srcFile`
+  * under `dir` at build time — [[Tables.fingerprint]], the same
+  * (path, length, mtime) listing the relation resolver keys on — so the
+  * rule for when cached state goes stale lives in `Tables`, and the
+  * mechanism lives here:
+  *   - a call whose source fingerprint differs from the entry's rebuilds,
+  *     and the new entry REPLACES the old one (a source restamped every
+  *     refresh holds one entry, not one per stamp);
+  *   - a missing source throws before anything is built or stored;
+  *   - entries of stopped sessions are purged on access — their checkpoint
+  *     RDDs die with the session, and the map must not pin dead sessions
+  *     in a long-lived JVM.
+  *
+  * Every core's output depends only on its named source. (a13_cum also
+  * reads supplier and the lineitem height domain, but only to size a
+  * broadcast and a bucket width; its rows are independent of both.)
+  *
+  * Every build runs inside [[timedBuild]], so Bench and the benchmark see
+  * each build once, with nested builds' time excluded from their parent.
   *
   * At 100 TB this is exactly the "materialize the candidate-pair /
   * cluster-label intermediate once" step a real pipeline persists to
@@ -23,8 +49,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * equivalent (MEMORY_AND_DISK, spills instead of OOM-ing).
   */
 object Memo {
+
+  /** What one (session, dir, tag) holds: the source fingerprint it was
+    * built at and the built value. */
+  private final class Entry(val fingerprint: Seq[(String, Long, Long)], val value: Any)
+
   private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, Long), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Entry]()
 
   /** Wall-clock of every core build this JVM has run, drained by Bench:
     * memoization made per-query bench attribution ORDER-DEPENDENT (the
@@ -35,10 +66,6 @@ object Memo {
     * outside Bench (Verify, specs) accumulate harmlessly until drained. */
   private val buildLog =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-
-  /** Record a core build (also used by KMeansCodebook's training, which is
-    * the same build-once-compose-many shape outside this cache). */
-  def logBuild(tag: String, sec: Double): Unit = buildLog.add((tag, sec))
 
   /** Per-thread stack of in-progress build frames; each frame accumulates
     * the wall-clock of its DIRECT child builds so a parent logs only its
@@ -53,7 +80,7 @@ object Memo {
 
   /** Time `f` as the build of `tag`, logging EXCLUSIVE seconds (total
     * minus nested timedBuild spans on this thread). */
-  def timedBuild[T](tag: String)(f: => T): T = {
+  private def timedBuild[T](tag: String)(f: => T): T = {
     val stack = frames.get()
     stack.push(Array(0.0))
     val t0 = System.nanoTime()
@@ -71,7 +98,7 @@ object Memo {
       // nothing to balance the subtraction (ADVICE r9).
       if (ok) {
         if (!stack.isEmpty) stack.peek()(0) += total
-        logBuild(tag, math.max(0.0, total - child))
+        buildLog.add((tag, math.max(0.0, total - child)))
       }
     }
   }
@@ -84,87 +111,73 @@ object Memo {
     out.toSeq
   }
 
-  /** The memoized core: `build` runs (and is eagerly materialized) only on
-    * the first call per (session, dir, tag, source-mtime). `srcFile` names
-    * the parquet the core derives from, relative to `dir`.
+  /** A memoized driver-side value: `compute` runs once per (session, dir,
+    * tag) and fingerprint of `srcFile` under `dir`. This is the one lookup
+    * [[cached]] and [[cachedParquet]] go through too.
     *
-    * get/putIfAbsent rather than computeIfAbsent: cores COMPOSE (the LSH
-    * pair core builds on the hashed-shingle core), so `build` may re-enter
-    * this cache for a different tag — a nested computeIfAbsent on the same
-    * ConcurrentHashMap throws "Recursive update". The benign race (two
-    * threads both building, loser's checkpoint dropped) is acceptable:
-    * Bench/Verify run queries sequentially, and correctness is unaffected. */
-  def cached(s: SparkSession, dir: String, tag: String, srcFile: String)(
-      build: => DataFrame): DataFrame = {
+    * get + merge rather than computeIfAbsent: builds NEST (cell_asg runs
+    * the k-means value build, pq_codes the PQ sub-codebook build), so
+    * `compute` may re-enter this map for a different tag, and a nested
+    * computeIfAbsent on one ConcurrentHashMap throws "Recursive update".
+    * merge's remapping function only compares fingerprints and never
+    * re-enters the map. Two threads racing one key both build; the first
+    * to land wins unless the second saw a newer source. Bench/Verify run
+    * queries sequentially, and correctness is unaffected either way. */
+  def value[T](s: SparkSession, dir: String, tag: String, srcFile: String)(
+      compute: => T): T = {
     cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val fp = new java.io.File(s"$dir/$srcFile").lastModified
-    val key = (s, dir, tag, fp)
+    val fp = Tables.fingerprint(s, s"$dir/$srcFile")
+    val key = (s, dir, tag)
     val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val built = timedBuild(tag)(build.localCheckpoint(true))
-      val prev = cache.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
+    val entry =
+      if (hit != null && hit.fingerprint == fp) hit
+      else cache.merge(key, new Entry(fp, timedBuild(tag)(compute)),
+        (old: Entry, nu: Entry) => if (old.fingerprint == nu.fingerprint) old else nu)
+    entry.value.asInstanceOf[T]
   }
 
+  /** A memoized shared core, eagerly materialized with
+    * localCheckpoint(true) on its first call per key. */
+  def cached(s: SparkSession, dir: String, tag: String, srcFile: String)(
+      build: => DataFrame): DataFrame =
+    value(s, dir, tag, srcFile)(build.localCheckpoint(true))
+
   /** [[cached]] for INDEX-SIZED cores: materialize as compressed parquet
-    * in a session-scoped scratch dir instead of a serialized RDD
+    * in the session's scratch root instead of a serialized RDD
     * checkpoint. A localCheckpoint stores deserialized-then-serialized
     * rows with no columnar encoding — the sf100 trigram postings
     * (~1.5 B (gram, doc_id) rows) ENOSPC'd the box at ~30 GB where
     * parquet's dictionary + RLE holds the same relation in a few GB —
     * and parquet IS the artifact a production build persists anyway (the
-    * bucketed-layout story BucketingSpec drives). Session-scoped path,
-    * so staleness across code changes is impossible (same lifetime as a
-    * checkpoint); same (session, dir, tag, mtime) keying, same build
-    * attribution. */
+    * bucketed-layout story BucketingSpec drives).
+    *
+    * Every build writes a directory of its own (tag plus a random id), so
+    * no two builds — two data dirs sharing a tag, two threads racing one
+    * key, a rebuild after a restamp — ever write the same path (ADVICE
+    * r12). A superseded build's directory stays until the application
+    * ends: a frame handed out earlier may still read it. */
   def cachedParquet(s: SparkSession, dir: String, tag: String,
-                    srcFile: String)(build: => DataFrame): DataFrame = {
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val fp = new java.io.File(s"$dir/$srcFile").lastModified
-    val key = (s, dir, tag, fp)
-    val hit = cache.get(key)
-    if (hit != null) hit
-    else {
-      val built = timedBuild(tag) {
-        // The scratch path carries EVERY cache-key component that varies
-        // within a session: tag, DATA DIR (hashed — two scale dirs used in
-        // one session share tags, and dirs generated together share
-        // mtimes; omitting the dir made the second build overwrite the
-        // parquet backing the first's still-cached DataFrame, ADVICE r12),
-        // and source mtime.
-        val dirHash = java.lang.Integer.toHexString(dir.hashCode)
-        val path = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          s"graft-memo-${s.sparkContext.applicationId}",
-          s"${tag}_${dirHash}_$fp")
-        // Build into a unique temp dir and atomically rename: two threads
-        // racing the first call would otherwise both write THE SAME final
-        // path with mode=overwrite, and the loser's overwrite races the
-        // winner's readers (ADVICE r12 — computeIfAbsent is not an option
-        // here, cores compose and re-enter this map). rename(2) of a
-        // directory fails if the target exists, so exactly one build
-        // lands; the loser discards its files and reads the winner's.
-        val tmp = java.nio.file.Paths.get(
-          path.toString + "_tmp_" + java.util.UUID.randomUUID().toString)
-        build.write.mode("overwrite").parquet(tmp.toString)
-        try java.nio.file.Files.move(tmp, path,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case e: java.nio.file.FileSystemException =>
-            // rename refused. If the target exists we lost the race (or a
-            // prior run of this app left it) — it is a COMPLETE index for
-            // this exact (tag, dirHash, mtime) key, so drop ours and read
-            // theirs; anything else is a real failure and must surface.
-            if (!java.nio.file.Files.exists(path)) throw e
-            deleteRecursively(tmp.toFile)
-        }
-        s.read.parquet(path.toString)
-      }
-      val prev = cache.putIfAbsent(key, built)
-      if (prev != null) prev else built
+                    srcFile: String)(build: => DataFrame): DataFrame =
+    value(s, dir, tag, srcFile) {
+      val path = scratchRoot(s).resolve(s"${tag}_${java.util.UUID.randomUUID()}")
+      build.write.parquet(path.toString)
+      s.read.parquet(path.toString)
     }
+
+  /** `java.io.tmpdir/graft-memo-<appId>`. Whichever call creates it also
+    * registers its deletion at application end, so it is registered once
+    * per application and nothing outlives `spark.stop()`. */
+  private def scratchRoot(s: SparkSession): Path = {
+    val root = Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft-memo-${s.sparkContext.applicationId}")
+    try {
+      Files.createDirectory(root)
+      s.sparkContext.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+          deleteRecursively(root.toFile)
+      })
+    } catch { case _: FileAlreadyExistsException => }
+    root
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -172,4 +185,8 @@ object Memo {
     if (kids != null) kids.foreach(deleteRecursively)
     f.delete(): Unit
   }
+
+  /** Entries held for `tag` across live sessions and dirs (specs). */
+  private[graft] def entries(tag: String): Int =
+    cache.keySet.stream().filter(_._3 == tag).count().toInt
 }

@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.StructType
   * path, file fingerprint) and hands every call a FRESH
   * `spark.read.schema(resolved).parquet(path)`: no inference job, and new
   * attribute ids per call, so two reads of one table still self-join.
-  *   - Fingerprint: one recursive listing of the path per call —
+  *   - Fingerprint ([[fingerprint]], which [[Memo]] keys on too): one
+  *     recursive listing of the path per call —
   *     (path, length, mtime) of every visible entry, partition
   *     subdirectories included, skipping `_`/`.`-prefixed names exactly as
   *     Spark's file index does. A rewritten or restamped source re-resolves
@@ -88,11 +89,20 @@ object Tables {
     if (root.isDirectory) walk(p) else Seq(root)
   }
 
+  private def fingerprintOf(files: Seq[FileStatus]): Seq[(String, Long, Long)] =
+    files.map(st =>
+      (st.getPath.toString, st.getLen, st.getModificationTime)).sortBy(_._1)
+
+  /** The staleness rule of every session-scoped cache in the engine (this
+    * resolver and [[Memo]]): (path, length, mtime) of every visible entry
+    * under `path`, sorted. A missing path throws FileNotFoundException. */
+  private[graft] def fingerprint(s: SparkSession, path: String): Seq[(String, Long, Long)] =
+    fingerprintOf(listing(s, path))
+
   private def resolve(s: SparkSession, path: String): Resolved = {
     resolved.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val files = listing(s, path)
-    val fp = files.map(st =>
-      (st.getPath.toString, st.getLen, st.getModificationTime)).sortBy(_._1)
+    val fp = fingerprintOf(files)
     val key = (s, path)
     val hit = resolved.get(key)
     if (hit != null && hit.fingerprint == fp) hit

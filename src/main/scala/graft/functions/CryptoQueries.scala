@@ -121,25 +121,13 @@ object CryptoQueries {
     * (15 M) shuffles. */
   private val BroadcastRowCap = 4000000L
 
-  /** orders row count memoized per (dir, mtime) — the guard must not run
-    * a fresh Spark count job on every plan CONSTRUCTION (Bench warmup +
-    * timed run, Verify, plan-shape specs; review r9). Same contract as
+  /** orders row count, memoized — the guard must not run a fresh Spark
+    * count job on every plan CONSTRUCTION (Bench warmup + timed run,
+    * Verify, plan-shape specs; review r9). Same contract as
     * Similarity.corpusN. */
-  private val orderRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  private def orderRows(s: SparkSession, d: String): Long = {
-    // lastModified = 0 for a missing path would cache under fingerprint 0
-    // and then serve that count forever once the file appears — fail loud
-    // instead (the join needs the table anyway) (ADVICE r9)
-    val f = new java.io.File(s"$d/orders.parquet")
-    require(f.exists, s"orders.parquet missing under $d")
-    // routed through timedBuild so the one parquet-metadata count Bench
-    // triggers lands in its own builds line item instead of inside
-    // whichever f1-family query plans first (ADVICE r9)
-    orderRowsCache.computeIfAbsent((d, f.lastModified),
-      _ => graft.Memo.timedBuild("orders_rowcount")(Tables.orders(s, d).count()))
-      .longValue
-  }
+  private def orderRows(s: SparkSession, d: String): Long =
+    graft.Memo.value(s, d, "orders_rowcount", "orders.parquet")(
+      Tables.orders(s, d).count())
 
   /** F2–F4 — address book: a deterministic compressed-pubkey per supplier
     * (02 ‖ SHA-256(name)), hashed to both BTC base58check and Stacks

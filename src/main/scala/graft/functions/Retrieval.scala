@@ -330,14 +330,11 @@ object Retrieval {
     * with contains() probes over a 1-in-64 doc_id sample (one row-local
     * scan of ~1.6% of the corpus, k longs collected — geometry-bounded),
     * ties broken lexically so the order is deterministic. Memoized per
-    * (dir, needle, source mtime) and routed through Memo.timedBuild, so
-    * plan construction never re-runs the sample (the orderRows contract)
-    * and Bench attributes the one pass to its own builds line; an
-    * explicit frame with no dir (spec fixtures) just computes. An empty
-    * sample degrades to lexical order — still correct, conjunction
-    * commutes. */
-  private val gramOrderCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), Seq[String]]()
+    * (dir, needle) — the needle is part of the memo tag — so plan
+    * construction never re-runs the sample (the orderRows contract) and
+    * Bench attributes the one pass to its own builds line; an explicit
+    * frame with no dir (spec fixtures) just computes. An empty sample
+    * degrades to lexical order — still correct, conjunction commutes. */
   private[graft] def gramOrder(docs: DataFrame, needle: String,
                                dir: Option[String] = None): Seq[String] = {
     val grams = needle.sliding(3).toSeq.distinct
@@ -356,9 +353,8 @@ object Retrieval {
     }
     dir match {
       case Some(d) =>
-        val fp = new java.io.File(s"$d/documents.parquet").lastModified
-        gramOrderCache.computeIfAbsent((d, needle, fp),
-          _ => graft.Memo.timedBuild("tx16_gram_dfs")(measure()))
+        graft.Memo.value(docs.sparkSession, d, s"tx16_gram_dfs:$needle",
+          "documents.parquet")(measure())
       case None => measure()
     }
   }

@@ -356,17 +356,12 @@ object Similarity {
 
   /** X3's fixed codebook — the 16 lowest vec_ids, so both engines derive
     * identical cells (x3b k-means-trains instead). A 16-row collect,
-    * memoized per (dir, mtime) like the trained codebook. */
-  private val fixedCb =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[(Long, Seq[Double])]]()
-  private[graft] def fixedCodebook(s: SparkSession, d: String): Seq[(Long, Seq[Double])] = {
-    val fp = new java.io.File(s"$d/embeddings.parquet").lastModified
-    fixedCb.computeIfAbsent((d, fp), { _ =>
+    * memoized like the trained codebook. */
+  private[graft] def fixedCodebook(s: SparkSession, d: String): Seq[(Long, Seq[Double])] =
+    graft.Memo.value(s, d, "x3_fixed_codebook", "embeddings.parquet")(
       vecs(s, d).filter(col("vec_id") < NCells)
         .select(col("vec_id"), col("v")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    })
-  }
+        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq)
 
   /** X3 — IVF-style ANN: the plan shape (assign map-side, equi-join on
     * cell, exact re-rank) is the coarse-quantization scale path
@@ -374,14 +369,11 @@ object Similarity {
   private val x3: Q = (s, d) =>
     rerank(ivfCands(vecs(s, d), fixedCodebook(s, d)), Seq("cell_id"))
 
-  /** Corpus size — ONE count against parquet row-group metadata, memoized
-    * per (dir, mtime); the input every adaptive-k decision derives from. */
-  private val nCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  private[graft] def corpusN(s: SparkSession, d: String): Long = {
-    val fp = new java.io.File(s"$d/embeddings.parquet").lastModified
-    nCache.computeIfAbsent((d, fp), _ => Tables.embeddings(s, d).count()).longValue
-  }
+  /** Corpus size — ONE count against parquet row-group metadata,
+    * memoized; the input every adaptive-k decision derives from. */
+  private[graft] def corpusN(s: SparkSession, d: String): Long =
+    graft.Memo.value(s, d, "embeddings_rowcount", "embeddings.parquet")(
+      Tables.embeddings(s, d).count())
 
   /** ADAPTIVE codebook size k = max(8, ⌈√n⌉) — the blocking/IVF key must
     * REFINE as the corpus grows (VERDICT r8 item 1/7): a fixed k means
@@ -565,49 +557,43 @@ object Similarity {
     * build, replacing x5's slices-of-the-fixed-codebook codewords). Each
     * training is KMeansCodebook.train on the sliced vectors: bounded
     * sample, decimal means, deterministic — so the codewords embed in the
-    * oracle as exact literals (the scaledCodebook contract). Memoized per
-    * (dir, mtime); returns per subspace the (code, codeword, ‖codeword‖²)
-    * rows sorted by code 0..15 (positional lookup). */
-  private val pqTrainedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Seq[Seq[(Long, Seq[Double], Double)]]]()
+    * oracle as exact literals (the scaledCodebook contract). Memoized;
+    * returns per subspace the (code, codeword, ‖codeword‖²) rows sorted
+    * by code 0..15 (positional lookup). */
   private[graft] def trainedPqCodebook(s: SparkSession,
-                                       d: String): Seq[Seq[(Long, Seq[Double], Double)]] = {
-    val fp = new java.io.File(s"$d/embeddings.parquet").lastModified
-    pqTrainedCache.computeIfAbsent((d, fp), { _ =>
-      graft.Memo.timedBuild("pq_subcodebooks") {
-        val v = vecs(s, d)
-        // The PqM subspace trainings are INDEPENDENT deterministic jobs
-        // (each reads only its own slice; decimal means make each result
-        // merge-order-free), so they run from a small thread pool instead
-        // of sequentially — Lloyd's is driver-round-trip bound at this
-        // sample size (~8 tiny jobs per subspace), and overlapping the 8
-        // chains back-fills the cluster exactly as guide §2.6 prescribes
-        // (r13: build 5.1 s → measured below 2 s at sf0.1). Result order
-        // is pinned by Future.sequence, so the codebooks (and the oracle
-        // literals derived from them) are byte-identical to the
-        // sequential build's.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(PqM)
-        try {
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutor(pool)
-          val futs = (0 until PqM).map { m => Future {
-            val sliced = v.select(col("vec_id"),
-              slice(col("v"), m * PqSub + 1, PqSub).as("v"))
-            // l2 = true: PQ encodes by reconstruction error, so the
-            // training argmin must be the serving argmin
-            // (see KMeansCodebook.train)
-            val cents = KMeansCodebook.train(sliced, NCells, 3, l2 = true)
-            require(cents.map(_._1) == (0 until NCells),
-              s"PQ codes index positionally; expected ids 0..${NCells - 1}")
-            cents.map { case (id, cv) => (id.toLong, cv, cv.map(x => x * x).sum) }
-          } }
-          Await.result(Future.sequence(futs),
-            scala.concurrent.duration.Duration.Inf)
-        } finally pool.shutdown()
-      }
-    })
-  }
+                                       d: String): Seq[Seq[(Long, Seq[Double], Double)]] =
+    graft.Memo.value(s, d, "pq_subcodebooks", "embeddings.parquet") {
+      val v = vecs(s, d)
+      // The PqM subspace trainings are INDEPENDENT deterministic jobs
+      // (each reads only its own slice; decimal means make each result
+      // merge-order-free), so they run from a small thread pool instead
+      // of sequentially — Lloyd's is driver-round-trip bound at this
+      // sample size (~8 tiny jobs per subspace), and overlapping the 8
+      // chains back-fills the cluster exactly as guide §2.6 prescribes
+      // (r13: build 5.1 s → measured below 2 s at sf0.1). Result order
+      // is pinned by Future.sequence, so the codebooks (and the oracle
+      // literals derived from them) are byte-identical to the
+      // sequential build's.
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(PqM)
+      try {
+        implicit val ec: ExecutionContext =
+          ExecutionContext.fromExecutor(pool)
+        val futs = (0 until PqM).map { m => Future {
+          val sliced = v.select(col("vec_id"),
+            slice(col("v"), m * PqSub + 1, PqSub).as("v"))
+          // l2 = true: PQ encodes by reconstruction error, so the
+          // training argmin must be the serving argmin
+          // (see KMeansCodebook.train)
+          val cents = KMeansCodebook.train(sliced, NCells, 3, l2 = true)
+          require(cents.map(_._1) == (0 until NCells),
+            s"PQ codes index positionally; expected ids 0..${NCells - 1}")
+          cents.map { case (id, cv) => (id.toLong, cv, cv.map(x => x * x).sum) }
+        } }
+        Await.result(Future.sequence(futs),
+          scala.concurrent.duration.Duration.Inf)
+      } finally pool.shutdown()
+    }
 
   /** The PERSISTED PQ INDEX: every vector's trained cell + its PqM trained
     * codes + the reconstruction norm — ~34 bytes of index entry instead of

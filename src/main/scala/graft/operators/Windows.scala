@@ -168,54 +168,33 @@ object Windows {
     * 256 buckets/miner keeps the skew property (a hot key still spreads
     * over 256 partitions) while carry rows stay ≤ 256·miners. Every
     * oracle-gate scale has domain/256 < 2¹⁶, so gate plans are unchanged.
-    * Output is width-independent either way (exact integer split). */
-  private val heightDomainCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-
-  /** Max block height, memoized per (dir, mtime) — one parquet
-    * min/max-stats aggregation, the input to both the adaptive width and
-    * the carry-size bound. */
-  private[graft] def maxHeightOf(s: SparkSession, d: String): Long = {
-    val f = new java.io.File(s"$d/lineitem.parquet")
-    require(f.exists, s"lineitem.parquet missing under $d")
-    heightDomainCache.computeIfAbsent((d, f.lastModified),
-      _ => graft.Memo.timedBuild("a13_height_domain")(
-        Domain.commits(s, d).agg(max(col("stacks_block_height"))).head().getLong(0)))
-      .longValue
-  }
+    * Output is width-independent either way (exact integer split).
+    *
+    * Max block height, memoized — one parquet min/max-stats aggregation,
+    * the input to both the adaptive width and the carry-size bound. */
+  private[graft] def maxHeightOf(s: SparkSession, d: String): Long =
+    graft.Memo.value(s, d, "a13_height_domain", "lineitem.parquet")(
+      Domain.commits(s, d).agg(max(col("stacks_block_height"))).head().getLong(0))
 
   /** Supplier-dimension cardinality, memoized — the miner-key domain
     * bound (Domain.commits maps l_suppkey → leader_key_address, so
     * distinct miners can never exceed it). One metadata-grain count. */
-  private val supplierRowsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  private def supplierRowsOf(s: SparkSession, d: String): Long = {
-    val f = new java.io.File(s"$d/supplier.parquet")
-    require(f.exists, s"supplier.parquet missing under $d")
-    supplierRowsCache.computeIfAbsent((d, f.lastModified),
-      _ => graft.Memo.timedBuild("supplier_rowcount")(
-        Tables.supplier(s, d).count())).longValue
-  }
+  private def supplierRowsOf(s: SparkSession, d: String): Long =
+    graft.Memo.value(s, d, "supplier_rowcount", "supplier.parquet")(
+      Tables.supplier(s, d).count())
 
-  /** Tip height (max o_orderkey), memoized per (dir, mtime) like
+  /** Tip height (max o_orderkey), memoized like
     * [[maxHeightOf]] — ONE cheap scalar aggregation instead of re-scanning
     * orders inside every trailing-window query. As a LITERAL the trailing
     * range predicate pushes into the lineitem scan (PushedFilters), where
     * the broadcast-crossjoin form re-scanned orders per reference and kept
     * the filter above the scan (r14 — the w13/w5/a12 plans each held 2–3
     * full orders scans). A driver-side single scalar is not a driver-memory
-    * concern; the value is recomputed from parquet per (dir, mtime), never
-    * persisted across runs. */
-  private val ordersTipCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]()
-  private[graft] def ordersTipOf(s: SparkSession, d: String): Long = {
-    val f = new java.io.File(s"$d/orders.parquet")
-    require(f.exists, s"orders.parquet missing under $d")
-    ordersTipCache.computeIfAbsent((d, f.lastModified),
-      _ => graft.Memo.timedBuild("orders_tip")(
-        Tables.orders(s, d).agg(max(col("o_orderkey"))).head().getLong(0)))
-      .longValue
-  }
+    * concern; the value is recomputed from parquet whenever orders
+    * changes, never persisted across runs. */
+  private[graft] def ordersTipOf(s: SparkSession, d: String): Long =
+    graft.Memo.value(s, d, "orders_tip", "orders.parquet")(
+      Tables.orders(s, d).agg(max(col("o_orderkey"))).head().getLong(0))
 
   private[graft] def a13WidthBits(s: SparkSession, d: String): Int = {
     val dom = maxHeightOf(s, d)

@@ -1,9 +1,11 @@
 package graft
 
-/** Laws of the shared-core materialization cache (VERDICT r7 item 1): the
-  * memo is what keeps composed queries (px5/tx17/TrainingPipeline) from
-  * re-running the d2/d6/tx9 cores, so its caching contract needs gates of
-  * its own — build-once, mtime invalidation, and per-tag isolation. */
+/** Laws of the one cache layer (VERDICT r7 item 1): the memo is what keeps
+  * composed queries (px5/tx17/TrainingPipeline) from re-running the
+  * d2/d6/tx9 cores and plan construction from re-running driver-side
+  * counts and trainings, so its contract needs gates of its own —
+  * build-once, fingerprint invalidation with one entry per tag, per-tag
+  * isolation, loud failure on a missing source, and nested builds. */
 class MemoSpec extends SparkSpec {
   test("cached builds once per (dir, tag, mtime) and serves the same frame") {
     var builds = 0
@@ -70,35 +72,97 @@ class MemoSpec extends SparkSpec {
     assert(a.collect().map(_.getLong(0)).toSeq === Seq(1L))
   }
 
-  /** ADVICE r12 (low): concurrent first builds of one key both wrote the
-    * final path with mode=overwrite — the loser's overwrite raced the
-    * winner's readers. Now each build lands in a unique temp dir and an
-    * ATOMIC rename picks exactly one; the loser discards its files and
-    * adopts the winner's index. A sibling session (same appId → same
-    * scratch root, different cache key) exercises the loser branch
-    * deterministically. */
-  test("cachedParquet: the rename loser adopts the existing index and leaves no temp dirs") {
+  /** Builds that can overlap in time — two threads racing one key, or
+    * sibling sessions of one application, which share a scratch root —
+    * must never write the same path, or one clobbers the files backing
+    * the other's frame (ADVICE r12). */
+  test("cachedParquet: every build writes its own scratch directory") {
     val sp = spark
     import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("memopqrace").toFile
+    val dir = java.nio.file.Files.createTempDirectory("memopqown").toFile
     Seq(7L).toDF("v").write.parquet(new java.io.File(dir, "documents.parquet").getPath)
-    val winner = Memo.cachedParquet(spark, dir.getPath, "memospec_pq_race",
-      "documents.parquet")(
-      spark.read.parquet(new java.io.File(dir, "documents.parquet").getPath))
-    assert(winner.collect().map(_.getLong(0)).toSeq === Seq(7L))
-    val s2 = spark.newSession()
-    // the loser's build produces DIFFERENT rows; adopting the winner's
-    // index (same (tag, dir, mtime) key ⇒ same logical content) is the
-    // contract, so the result must be the winner's corpus
-    val loser = Memo.cachedParquet(s2, dir.getPath, "memospec_pq_race",
-      "documents.parquet")(Seq(99L).toDF("v"))
-    assert(loser.collect().map(_.getLong(0)).toSeq === Seq(7L),
-      "the loser must read the winner's landed index, not its own build")
     val scratch = new java.io.File(
       System.getProperty("java.io.tmpdir"),
       s"graft-memo-${spark.sparkContext.applicationId}")
-    val leftovers = Option(scratch.list()).getOrElse(Array.empty[String])
-      .filter(n => n.startsWith("memospec_pq_race") && n.contains("_tmp_"))
-    assert(leftovers.isEmpty, s"loser temp dirs must be cleaned: ${leftovers.toSeq}")
+    def ownDirs = Option(scratch.list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith("memospec_pq_own_")).toSet
+    val a = Memo.cachedParquet(spark, dir.getPath, "memospec_pq_own",
+      "documents.parquet")(Seq(7L).toDF("v"))
+    val b = Memo.cachedParquet(spark.newSession(), dir.getPath, "memospec_pq_own",
+      "documents.parquet")(Seq(99L).toDF("v"))
+    assert(a.collect().map(_.getLong(0)).toSeq === Seq(7L))
+    assert(b.collect().map(_.getLong(0)).toSeq === Seq(99L))
+    assert(ownDirs.size === 2, s"one directory per build: $ownDirs")
+  }
+
+  /** Perfbench `queries` restamps documents before every pass and each
+    * `serve` tick restamps lineitem: an entry per stamp would pin one more
+    * checkpointed frame per pass for the life of the session. */
+  test("a restamped source rebuilds and REPLACES its entry: one entry per tag") {
+    val dir = java.nio.file.Files.createTempDirectory("memospec_restamp").toFile
+    val src = new java.io.File(dir, "documents.parquet")
+    java.nio.file.Files.writeString(src.toPath, "v1")
+    var frames = 0
+    var values = 0
+    def touch(): Unit = {
+      Memo.cached(spark, dir.getPath, "memospec_restamp_core", "documents.parquet") {
+        frames += 1
+        spark.range(1).toDF()
+      }
+      Memo.value(spark, dir.getPath, "memospec_restamp_value", "documents.parquet") {
+        values += 1
+        values
+      }
+      ()
+    }
+    touch()
+    for (i <- 1 to 3) {
+      assert(src.setLastModified(src.lastModified + 60000L * i))
+      touch()
+      touch()
+    }
+    assert(frames === 4 && values === 4, "each restamp rebuilds exactly once")
+    assert(Memo.entries("memospec_restamp_core") === 1)
+    assert(Memo.entries("memospec_restamp_value") === 1)
+  }
+
+  test("a missing source fails loudly and leaves no entry") {
+    val dir = java.nio.file.Files.createTempDirectory("memospec_missing").toFile
+    var builds = 0
+    intercept[java.io.FileNotFoundException] {
+      Memo.value(spark, dir.getPath, "memospec_missing_value", "documents.parquet") {
+        builds += 1
+        1L
+      }
+    }
+    intercept[java.io.FileNotFoundException] {
+      Memo.cached(spark, dir.getPath, "memospec_missing_core", "documents.parquet") {
+        builds += 1
+        spark.range(1).toDF()
+      }
+    }
+    assert(builds === 0, "nothing is built against a missing source")
+    assert(Memo.entries("memospec_missing_value") === 0)
+    assert(Memo.entries("memospec_missing_core") === 0)
+  }
+
+  /** The cell_asg → k-means shape: a value build nested inside a core
+    * build, both on the one map. */
+  test("a value built inside a cached build nests; the parent logs exclusive time") {
+    Memo.drainBuilds()
+    val inner = Memo.cached(spark, sf, "memospec_nest_outer", "documents.parquet") {
+      val n = Memo.value(spark, sf, "memospec_nest_inner", "embeddings.parquet") {
+        Thread.sleep(1000)
+        1L
+      }
+      spark.range(n).toDF()
+    }
+    assert(inner.count() === 1L)
+    val logged = Memo.drainBuilds().toMap
+    assert(logged.contains("memospec_nest_outer") && logged.contains("memospec_nest_inner"),
+      s"both builds are logged: $logged")
+    assert(logged("memospec_nest_inner") >= 1.0)
+    assert(logged("memospec_nest_outer") < 1.0,
+      s"the parent must not include the child's second: $logged")
   }
 }
