@@ -31,6 +31,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - a call whose source fingerprint differs from the entry's rebuilds,
   *     and the new entry REPLACES the old one (a source restamped every
   *     refresh holds one entry, not one per stamp);
+  *   - that build also RETIRES the session's entries of the same source
+  *     at any other fingerprint, whatever their tag: they would miss on
+  *     their next read anyway. So between rewrites of a source, the
+  *     entries that read it are bounded by the tags actually asked for
+  *     since the last rewrite — for the serving edge's area pages (one tag
+  *     per cursor), by the pages clients ask for, which a walk along the
+  *     `next` cursors keeps to at most one rendered copy of the relation:
+  *     what the reference's Redis key holds;
   *   - a missing source throws before anything is built or stored;
   *   - entries of stopped sessions are purged on access — their checkpoint
   *     RDDs die with the session, and the map must not pin dead sessions
@@ -50,9 +58,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Memo {
 
-  /** What one (session, dir, tag) holds: the source fingerprint it was
-    * built at and the built value. */
-  private final class Entry(val fingerprint: Seq[(String, Long, Long)], val value: Any)
+  /** What one (session, dir, tag) holds: the source path, the fingerprint
+    * it was built at and the built value. */
+  private final class Entry(val source: String, val fingerprint: Seq[(String, Long, Long)],
+                            val value: Any)
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Entry]()
@@ -113,7 +122,8 @@ object Memo {
 
   /** A memoized driver-side value: `compute` runs once per (session, dir,
     * tag) and fingerprint of `srcFile` under `dir`. This is the one lookup
-    * [[cached]] and [[cachedParquet]] go through too.
+    * [[cached]] and [[cachedParquet]] go through too. A build retires the
+    * session's entries of the same source at another fingerprint.
     *
     * get + merge rather than computeIfAbsent: builds NEST (cell_asg runs
     * the k-means value build, pq_codes the PQ sub-codebook build), so
@@ -126,13 +136,19 @@ object Memo {
   def value[T](s: SparkSession, dir: String, tag: String, srcFile: String)(
       compute: => T): T = {
     cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val fp = Tables.fingerprint(s, s"$dir/$srcFile")
+    val source = s"$dir/$srcFile"
+    val fp = Tables.fingerprint(s, source)
     val key = (s, dir, tag)
     val hit = cache.get(key)
     val entry =
       if (hit != null && hit.fingerprint == fp) hit
-      else cache.merge(key, new Entry(fp, timedBuild(tag)(compute)),
-        (old: Entry, nu: Entry) => if (old.fingerprint == nu.fingerprint) old else nu)
+      else {
+        val built = new Entry(source, fp, timedBuild(tag)(compute))
+        cache.entrySet.removeIf(e => e.getKey._1 == s &&
+          e.getValue.source == source && e.getValue.fingerprint != fp)
+        cache.merge(key, built,
+          (old: Entry, nu: Entry) => if (old.fingerprint == nu.fingerprint) old else nu)
+      }
     entry.value.asInstanceOf[T]
   }
 

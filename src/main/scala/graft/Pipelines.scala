@@ -424,17 +424,27 @@ object Pipelines {
 
   /** One serving-edge JSON page of the full area series: the reference's
     * point shape plus a `next` cursor (the page's last key, or null when
-    * the walk is done). The only collect is the page itself. */
+    * the walk is done). The only collect is the page itself.
+    *
+    * Rendered once per version of the burn_fee_area relation, like the
+    * reference's Redis value that every REST read GETs (server.js:47-125):
+    * the page is a [[Memo.value]] on that relation, tagged by cursor and
+    * page size, so a read over unchanged bytes costs one listing of the
+    * relation and no Spark job. The rewrite of a refresh makes the next
+    * read render again, and retires the pages rendered from the old bytes. */
   def burnFeeAreaPageJson(s: SparkSession, cacheDir: String,
                           after: Option[(Long, Long)], pageSize: Int): String = {
-    val rows = burnFeeAreaPage(s, cacheDir, after, pageSize)
-      .collect()
-    val pts = rows.map(r =>
-      s"""{"height":${r.getLong(1)},"burn_fee":${r.getLong(2)},"address":${r.getLong(0)}}""")
-    val next =
-      if (rows.length < pageSize) "null"
-      else s"""{"address":${rows.last.getLong(0)},"height":${rows.last.getLong(1)}}"""
-    s"""{"data":[${pts.mkString(",")}],"next":$next}"""
+    val cursor = after.fold("start") { case (a, h) => s"$a:$h" }
+    Memo.value(s, cacheDir, s"area_page:$cursor:$pageSize", "burn_fee_area") {
+      val rows = burnFeeAreaPage(s, cacheDir, after, pageSize)
+        .collect()
+      val pts = rows.map(r =>
+        s"""{"height":${r.getLong(1)},"burn_fee":${r.getLong(2)},"address":${r.getLong(0)}}""")
+      val next =
+        if (rows.length < pageSize) "null"
+        else s"""{"address":${rows.last.getLong(0)},"height":${rows.last.getLong(1)}}"""
+      s"""{"data":[${pts.mkString(",")}],"next":$next}"""
+    }
   }
 
   /** S18/S19 — the mining_status flag file (rpc.js:583-590; broken as
@@ -465,111 +475,131 @@ object Pipelines {
     *   - winnerPie/rateOfReturn: all/r1000/r100 rr leaderboards, top-10 /
     *     top-50 slices
     *   - rateOfReturn carries real values (the reference's packRR ships
-    *     empty lists — superseded to intent, SURVEY §2.12 R4). */
+    *     empty lists — superseded to intent, SURVEY §2.12 R4).
+    *
+    * Each section reads exactly one cache relation and is rendered once
+    * per version of it: a [[Memo.value]] tagged `dashboard:<relation>`, so
+    * a read over unchanged bytes costs one listing per relation, and a
+    * refresh that rewrites a relation re-renders only its sections. The
+    * relations are opened inside the sections, so a hit resolves nothing.
+    * The price fields stay a live read on every call: the enrichment
+    * fetcher rewrites them on its own clock, outside the cache dir. */
   def dashboard(s: SparkSession, cacheDir: String): String = {
-    val blocks = Tables.parquet(s, s"$cacheDir/block_info")
-    val chain = Tables.parquet(s, s"$cacheDir/mining_info")
-    val area = Tables.parquet(s, s"$cacheDir/burn_fee_area")
-    def rr(name: String) = Tables.parquet(s, s"$cacheDir/$name")
+    def section[T](relation: String)(render: DataFrame => T): T =
+      Memo.value(s, cacheDir, s"dashboard:$relation", relation)(
+        render(Tables.parquet(s, s"$cacheDir/$relation")))
 
-    // currentStatus (mining_monitor_rpc.js:1-21): tail-20 series + averages
-    val b20 = blocks
-      .select(col("stacks_block_height"), col("sum_burn_fees"),
-        col("sum_miner_amount"), col("commit_value_list"))
-      .orderBy(col("stacks_block_height").desc).limit(20)
-      .collect().sortBy(_.getLong(0))
-    require(b20.nonEmpty,
-      "dashboard: block_info cache is empty — refreshCache must run against a non-empty source first")
-    val tipHeight = b20.last.getLong(0)
-    val burn20 = b20.map(_.getLong(1))
-    val miner20 = b20.map(_.getLong(2))
     // the burnchain tip timestamp comes from the chain_tip cache relation,
-    // not an inlined constant (ADVICE r3); fail descriptively on cache
-    // dirs written before this relation existed
-    require(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$cacheDir/chain_tip")),
+    // not an inlined constant (ADVICE r3). Fail descriptively on cache
+    // dirs written before this relation existed — checked before its
+    // section, whose listing would throw a bare FileNotFoundException, and
+    // through the Hadoop FileSystem so hdfs:// and s3a:// dirs pass
+    val tipPath = new org.apache.hadoop.fs.Path(s"$cacheDir/chain_tip")
+    require(tipPath.getFileSystem(s.sparkContext.hadoopConfiguration).exists(tipPath),
       s"dashboard: $cacheDir has no chain_tip relation — re-run refreshCache (cache layout predates the derived tip timestamp)")
-    val tipTs = Tables.parquet(s, s"$cacheDir/chain_tip")
-      .select(col("tip_ts")).head().getLong(0)
+
     // Locale.ROOT: the f-interpolator uses the default locale, which would
     // emit comma decimals (invalid JSON) on comma-decimal JVMs
     def avg3(xs: Array[Long]): String =
       String.format(java.util.Locale.ROOT, "%.3f", xs.sum.toDouble / xs.length)
-    val currentStatus =
-      s"""{"current_block":{"stacks_block_height":$tipHeight,""" +
-        s""""bitcoin_block":{"block_height":$tipHeight,"timestamp":$tipTs}},""" +
-        s""""current_burn_fee":{"data_20":[${burn20.mkString(",")}],"avg":${avg3(burn20)}},""" +
-        s""""current_miner":{"data_20":[${miner20.mkString(",")}],"avg":${avg3(miner20)}}}"""
 
-    // minerTable (mining_monitor_rpc.js:23-44): winner table + per-commit
-    // fees of the tail-20 heights (parsed back out of the nested rollup).
-    // Positional reads only ever follow an explicit select-by-name, so
-    // upstream column reorder cannot silently misreport a field.
-    val table = chain
-      .select(col("stacks_block_height"), col("leader_key_address"), col("burn_fee"))
-      .orderBy(col("stacks_block_height").desc).limit(50)
-      .collect().map(r =>
-        s"""{"stacks_block_height":${r.getLong(0)},"leader_key_address":${r.getLong(1)},"burn_fee":${r.getLong(2)}}""")
-    val minersBurnFee20 = b20.flatMap { r =>
-      r.getString(3).split(";").filter(_.nonEmpty).map { c =>
-        c.split(":") match {
-          case Array(_, fee, addr) =>
-            s"""{"height":${r.getLong(0)},"address":$addr,"fee":$fee}"""
-          case parts => sys.error(
-            s"dashboard: malformed commit_value_list cell '$c' " +
-              s"(${parts.length} fields, expected vtx:fee:miner) at height ${r.getLong(0)}")
+    // currentStatus (mining_monitor_rpc.js:1-21): tail-20 series + averages;
+    // minerTable's per-commit fees of the same heights are parsed back out
+    // of the nested rollup. Positional reads only ever follow an explicit
+    // select-by-name, so upstream column reorder cannot silently misreport
+    // a field.
+    val (tipHeight, series20, minersBurnFee20) = section("block_info") { blocks =>
+      val b20 = blocks
+        .select(col("stacks_block_height"), col("sum_burn_fees"),
+          col("sum_miner_amount"), col("commit_value_list"))
+        .orderBy(col("stacks_block_height").desc).limit(20)
+        .collect().sortBy(_.getLong(0))
+      require(b20.nonEmpty,
+        "dashboard: block_info cache is empty — refreshCache must run against a non-empty source first")
+      val burn20 = b20.map(_.getLong(1))
+      val miner20 = b20.map(_.getLong(2))
+      val series =
+        s""""current_burn_fee":{"data_20":[${burn20.mkString(",")}],"avg":${avg3(burn20)}},""" +
+          s""""current_miner":{"data_20":[${miner20.mkString(",")}],"avg":${avg3(miner20)}}"""
+      val fees = b20.flatMap { r =>
+        r.getString(3).split(";").filter(_.nonEmpty).map { c =>
+          c.split(":") match {
+            case Array(_, fee, addr) =>
+              s"""{"height":${r.getLong(0)},"address":$addr,"fee":$fee}"""
+            case parts => sys.error(
+              s"dashboard: malformed commit_value_list cell '$c' " +
+                s"(${parts.length} fields, expected vtx:fee:miner) at height ${r.getLong(0)}")
+          }
         }
       }
+      (b20.last.getLong(0), series, fees.mkString(","))
     }
-    val minerTable =
-      s"""{"table":[${table.mkString(",")}],"minersBurnFee20":[${minersBurnFee20.mkString(",")}]}"""
+    val tipTs = section("chain_tip")(_.select(col("tip_ts")).head().getLong(0))
+    val currentStatus =
+      s"""{"current_block":{"stacks_block_height":$tipHeight,""" +
+        s""""bitcoin_block":{"block_height":$tipHeight,"timestamp":$tipTs}},$series20}"""
+
+    // minerTable (mining_monitor_rpc.js:23-44): winner table + the tail-20
+    // per-commit fees above
+    val table = section("mining_info") { chain =>
+      chain
+        .select(col("stacks_block_height"), col("leader_key_address"), col("burn_fee"))
+        .orderBy(col("stacks_block_height").desc).limit(50)
+        .collect().map(r =>
+          s"""{"stacks_block_height":${r.getLong(0)},"leader_key_address":${r.getLong(1)},"burn_fee":${r.getLong(2)}}""")
+        .mkString(",")
+    }
+    val minerTable = s"""{"table":[$table],"minersBurnFee20":[$minersBurnFee20]}"""
 
     // burnFeeArea (mining_monitor_rpc.js:46-113): gap-filled cumulative
     // burn series, bounded to the top-10 miners of the window
-    val topAddrs = area.groupBy(col("address"))
-      .agg(max(col("cum_filled")).as("m"))
-      .orderBy(col("m").desc, col("address")).limit(10)
-      .select(col("address"))
-    val areaPts = area.join(broadcast(topAddrs), Seq("address"))
-      .select(col("address"), col("height"), col("cum_filled"))
-      .orderBy(col("address"), col("height"))
-      .collect().map(r =>
-        s"""{"height":${r.getLong(1)},"burn_fee":${r.getLong(2)},"address":${r.getLong(0)}}""")
-    val burnFeeArea = s"""{"data":[${areaPts.mkString(",")}]}"""
+    val burnFeeArea = section("burn_fee_area") { area =>
+      val topAddrs = area.groupBy(col("address"))
+        .agg(max(col("cum_filled")).as("m"))
+        .orderBy(col("m").desc, col("address")).limit(10)
+        .select(col("address"))
+      val areaPts = area.join(broadcast(topAddrs), Seq("address"))
+        .select(col("address"), col("height"), col("cum_filled"))
+        .orderBy(col("address"), col("height"))
+        .collect().map(r =>
+          s"""{"height":${r.getLong(1)},"burn_fee":${r.getLong(2)},"address":${r.getLong(0)}}""")
+      s"""{"data":[${areaPts.mkString(",")}]}"""
+    }
 
     // winnerPie + rateOfReturn (mining_monitor_rpc.js:115-148): the
-    // all/r1000/r100 triple from the rr leaderboards. select-by-name before
-    // every positional read (ADVICE r3: a column swap at same type in
+    // all/r1000/r100 triple from the rr leaderboards, one section per
+    // leaderboard holding its (pie, RR) lists. select-by-name before every
+    // positional read (ADVICE r3: a column swap at same type in
     // rrMinerInfo would have silently misreported RR at the serving edge)
-    def pieOf(name: String): String =
-      rr(name).filter(col("total_win") > 0)
-        .select(col("stx_address"), col("actual_win"), col("rr_milli"),
-          col("total_win"))
-        .orderBy(col("total_win").desc, col("stx_address")).limit(10)
-        .collect().map(r =>
-          s"""{"address":"${r.getString(0)}","number":${r.getLong(1)},"RR":${r.getLong(2)}}""")
-        .mkString("[", ",", "]")
-    def rrOf(name: String): String =
-      rr(name).select(col("stx_address"), col("rr_milli"))
-        .orderBy(col("rr_milli").desc, col("stx_address")).limit(50)
-        .collect().map(r =>
-          s"""{"address":"${r.getString(0)}","RR":${r.getLong(1)}}""")
-        .mkString("[", ",", "]")
-    val winnerPie =
-      s"""{"all":${pieOf("miner_info_rr")},"r1000":${pieOf("miner_info_rr_1000")},"r100":${pieOf("miner_info_rr_100")}}"""
-    val rateOfReturn =
-      s"""{"all":${rrOf("miner_info_rr")},"r1000":${rrOf("miner_info_rr_1000")},"r100":${rrOf("miner_info_rr_100")}}"""
+    val Seq(all, r1000, r100) =
+      Seq("miner_info_rr", "miner_info_rr_1000", "miner_info_rr_100").map(name =>
+        section(name) { rr =>
+          val pie = rr.filter(col("total_win") > 0)
+            .select(col("stx_address"), col("actual_win"), col("rr_milli"),
+              col("total_win"))
+            .orderBy(col("total_win").desc, col("stx_address")).limit(10)
+            .collect().map(r =>
+              s"""{"address":"${r.getString(0)}","number":${r.getLong(1)},"RR":${r.getLong(2)}}""")
+            .mkString("[", ",", "]")
+          val rrs = rr.select(col("stx_address"), col("rr_milli"))
+            .orderBy(col("rr_milli").desc, col("stx_address")).limit(50)
+            .collect().map(r =>
+              s"""{"address":"${r.getString(0)}","RR":${r.getLong(1)}}""")
+            .mkString("[", ",", "]")
+          (pie, rrs)
+        })
+    val winnerPie = s"""{"all":${all._1},"r1000":${r1000._1},"r100":${r100._1}}"""
+    val rateOfReturn = s"""{"all":${all._2},"r1000":${r1000._2},"r100":${r100._2}}"""
 
     // price / btc_total / btc_hash_power (server.js:268-275) via the
-    // S13–S15 enrichment seam + the cached a9 total
+    // S13–S15 enrichment seam (live) + the cached a9 total
     val pr = sources.Enrichment.prices(s)
       .select(col("stx_price_milli"), col("btc_sat_scale"), col("hash_power"))
       .head()
     val stx = pr.getLong(0).toDouble / 1000.0
     val btc = pr.getLong(1) * 10000L
     val hashPower = pr.getString(2)
-    val btcTotal = Tables.parquet(s, s"$cacheDir/btc_total")
-      .select(col("btc_total")).head().getDouble(0)
+    val btcTotal = section("btc_total")(_.select(col("btc_total")).head().getDouble(0))
 
     s"""{"currentStatus":$currentStatus,""" +
       s""""minerTable":$minerTable,""" +

@@ -9,11 +9,15 @@ import org.json4s.jackson.JsonMethods
   * with the reference's field names. */
 class DashboardSpec extends SparkSpec {
 
-  private lazy val doc: JValue = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dash").toString
+  /** A fresh cache dir, refreshed from the test tables. */
+  private def refreshed(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     Pipelines.refreshCache(spark, sf, dir)
-    JsonMethods.parse(Pipelines.dashboard(spark, dir))
+    dir
   }
+
+  private lazy val doc: JValue =
+    JsonMethods.parse(Pipelines.dashboard(spark, refreshed("graft_dash")))
 
   private def arr(v: JValue): List[JValue] =
     v match { case JArray(xs) => xs; case other => fail(s"not an array: $other") }
@@ -59,8 +63,7 @@ class DashboardSpec extends SparkSpec {
   }
 
   test("keyset pages walk the FULL area series; top-10 document is a strict subset") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_area").toString
-    Pipelines.refreshCache(spark, sf, dir)
+    val dir = refreshed("graft_area")
     // page-walk the complete series with a deliberately awkward page size
     val walked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var cursor: Option[(Long, Long)] = None
@@ -69,6 +72,13 @@ class DashboardSpec extends SparkSpec {
     while (!done) {
       val rows = Pipelines.burnFeeAreaPage(spark, dir, cursor, 997)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      // the memoized JSON page is exactly this page, rendered
+      val pts = rows.map { case (a, h, f) => s"""{"height":$h,"burn_fee":$f,"address":$a}""" }
+      val next =
+        if (rows.length < 997) "null"
+        else s"""{"address":${rows.last._1},"height":${rows.last._2}}"""
+      assert(Pipelines.burnFeeAreaPageJson(spark, dir, cursor, 997) ===
+        s"""{"data":[${pts.mkString(",")}],"next":$next}""", s"page after $cursor")
       walked ++= rows
       pages += 1
       assert(pages < 10000, "cursor did not advance")
@@ -92,6 +102,51 @@ class DashboardSpec extends SparkSpec {
     val lastPage = Pipelines.burnFeeAreaPageJson(spark, dir,
       Some((walked.last._1, walked.last._2)), 997)
     assert(JsonMethods.parse(lastPage) \ "next" === JNull)
+  }
+
+  test("reads over an unchanged cache launch no Spark job beyond the live prices read") {
+    import org.apache.spark.sql.functions.col
+    val dir = refreshed("graft_dash_memo")
+    val doc1 = Pipelines.dashboard(spark, dir)
+    val page1 = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
+    val pricesJobs = jobsOf(sources.Enrichment.prices(spark)
+      .select(col("stx_price_milli"), col("btc_sat_scale"), col("hash_power")).head())
+    var doc2, page2 = ""
+    assert(jobsOf { doc2 = Pipelines.dashboard(spark, dir) } === pricesJobs)
+    assert(jobsOf { page2 = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50) } === 0)
+    assert(doc2 === doc1 && page2 === page1)
+  }
+
+  test("a rewritten burn_fee_area serves a fresh render of its new bytes") {
+    val dir = refreshed("graft_dash_rewrite")
+    val before = Pipelines.dashboard(spark, dir)
+    val pageBefore = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
+    // half the rows: every second point of the (address, height) order
+    val path = s"$dir/burn_fee_area"
+    val area = spark.read.parquet(path)
+    val kept = area.orderBy("address", "height").collect()
+      .zipWithIndex.collect { case (r, i) if i % 2 == 1 => r }
+    spark.createDataFrame(java.util.Arrays.asList(kept: _*), area.schema)
+      .write.mode("overwrite").parquet(path)
+    val after = Pipelines.dashboard(spark, dir)
+    val pageAfter = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
+    // a session of its own holds no memo entries: it renders the bytes
+    val fresh = spark.newSession()
+    assert(after === Pipelines.dashboard(fresh, dir))
+    assert(pageAfter === Pipelines.burnFeeAreaPageJson(fresh, dir, None, 50))
+    assert(after != before && pageAfter != pageBefore, "the rewrite must change both reads")
+  }
+
+  test("the chain_tip check goes through the Hadoop FileSystem and fails descriptively") {
+    val dir = refreshed("graft_dash_tip")
+    // a file: URI cache dir is not a local java.nio path, but it serves
+    val uri = new java.io.File(dir).toURI.toString.stripSuffix("/")
+    assert(uri.startsWith("file:/"))
+    assert(Pipelines.dashboard(spark, uri) === Pipelines.dashboard(spark, dir))
+    val tip = new java.io.File(dir, "chain_tip")
+    org.apache.commons.io.FileUtils.deleteDirectory(tip)
+    val e = intercept[IllegalArgumentException](Pipelines.dashboard(spark, dir))
+    assert(e.getMessage.contains(s"$dir has no chain_tip relation"), e.getMessage)
   }
 
   test("winnerPie and rateOfReturn carry the all/r1000/r100 triple") {

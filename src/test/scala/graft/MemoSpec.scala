@@ -126,6 +126,25 @@ class MemoSpec extends SparkSpec {
     assert(Memo.entries("memospec_restamp_value") === 1)
   }
 
+  /** The serving edge keys one area page per cursor on one relation: a
+    * rewrite must not leave the pages of the old bytes behind until each
+    * cursor happens to be read again. */
+  test("a build at a new fingerprint retires the source's entries under other tags") {
+    val dir = java.nio.file.Files.createTempDirectory("memospec_retire").toFile
+    val src = new java.io.File(dir, "documents.parquet")
+    java.nio.file.Files.writeString(src.toPath, "v1")
+    java.nio.file.Files.writeString(new java.io.File(dir, "embeddings.parquet").toPath, "v1")
+    val tags = Seq("memospec_retire_a", "memospec_retire_b", "memospec_retire_c")
+    tags.foreach(t => Memo.value(spark, dir.getPath, t, "documents.parquet")(t))
+    Memo.value(spark, dir.getPath, "memospec_retire_other", "embeddings.parquet")(0)
+    assert(tags.map(Memo.entries) === Seq(1, 1, 1))
+    assert(src.setLastModified(src.lastModified + 60000L))
+    Memo.value(spark, dir.getPath, tags.head, "documents.parquet")(tags.head)
+    assert(tags.map(Memo.entries) === Seq(1, 0, 0),
+      "entries of the superseded source must go when it rebuilds")
+    assert(Memo.entries("memospec_retire_other") === 1, "another source keeps its entry")
+  }
+
   test("a missing source fails loudly and leaves no entry") {
     val dir = java.nio.file.Files.createTempDirectory("memospec_missing").toFile
     var builds = 0

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +14,26 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   def spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** Spark jobs `f` launches, counted under a job group of its own after
+    * draining the listener bus. */
+  def jobsOf(f: => Unit): Int = {
+    val group = s"spec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+            p.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, getClass.getSimpleName)
+      try f finally sc.clearJobGroup()
+      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(sc, 10000L)
+    } finally sc.removeSparkListener(l)
+    jobs.get()
+  }
 
   /** Run a registered query by name. */
   def q(name: String): org.apache.spark.sql.DataFrame =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{expr, xxhash64}
 
@@ -10,26 +9,6 @@ import org.apache.spark.sql.functions.{expr, xxhash64}
   * the session's generated-code cache holds a whole pass, so a warm pass
   * compiles nothing. */
 class TablesSpec extends SparkSpec {
-
-  /** Spark jobs `f` launches, counted under a job group of its own after
-    * draining the listener bus. */
-  private def jobsOf(f: => Unit): Int = {
-    val group = s"tablesspec-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p =>
-            p.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "TablesSpec")
-      try f finally sc.clearJobGroup()
-      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(sc, 10000L)
-    } finally sc.removeSparkListener(l)
-    jobs.get()
-  }
 
   private def hash(df: DataFrame): Long =
     df.select(xxhash64(df.columns.map(df.apply): _*).as("h"))
