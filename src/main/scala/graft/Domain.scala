@@ -71,9 +71,24 @@ object Domain {
     Memo.cachedParquet(s, d, "winners", "lineitem.parquet")(
       winnersOf(commits(s, d)))
 
-  /** Argmax over any commits-shaped frame (pre-filter the input for range
-    * variants — the winner choice is per-height-local, so a height filter
-    * commutes with the argmax). */
+  /** The trailing n-block window (the reference's `latest` route
+    * parameter, server.js:304-331): heights above the memoized tip
+    * ([[operators.Windows.ordersTipOf]]) minus n. The tip is a literal, so
+    * the predicate reaches PushedFilters of whichever scan it filters. */
+  def inTrailingWindow(s: SparkSession, d: String, n: Long): Column =
+    col("stacks_block_height") > lit(operators.Windows.ordersTipOf(s, d) - n)
+
+  /** The winners of the trailing n-block window: the memoized [[winners]]
+    * filtered to [[inTrailingWindow]]. The winner choice is
+    * per-height-local, so this equals the argmax of the window's commits
+    * without a second fact-table scan. */
+  def trailingWinners(s: SparkSession, d: String, n: Long): DataFrame =
+    winners(s, d).filter(inTrailingWindow(s, d, n))
+
+  /** Argmax over any commits-shaped frame. The winner choice is
+    * per-height-local, so a height filter commutes with the argmax: range
+    * variants filter the memoized [[winners]] ([[trailingWinners]]) rather
+    * than re-run this over a filtered scan. */
   def winnersOf(commitsDf: DataFrame): DataFrame =
     commitsDf
       .groupBy(col("stacks_block_height"))

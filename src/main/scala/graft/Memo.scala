@@ -171,13 +171,17 @@ object Memo {
     * no two builds — two data dirs sharing a tag, two threads racing one
     * key, a rebuild after a restamp — ever write the same path (ADVICE
     * r12). A superseded build's directory stays until the application
-    * ends: a frame handed out earlier may still read it. */
+    * ends: a frame handed out earlier may still read it.
+    *
+    * The build is read back with the schema it was just written with, so
+    * reopening it runs no schema-inference job. */
   def cachedParquet(s: SparkSession, dir: String, tag: String,
                     srcFile: String)(build: => DataFrame): DataFrame =
     value(s, dir, tag, srcFile) {
       val path = scratchRoot(s).resolve(s"${tag}_${java.util.UUID.randomUUID()}")
-      build.write.parquet(path.toString)
-      s.read.parquet(path.toString)
+      val df = build
+      df.write.parquet(path.toString)
+      s.read.schema(df.schema).parquet(path.toString)
     }
 
   /** `java.io.tmpdir/graft-memo-<appId>`. Whichever call creates it also

@@ -4,10 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** M6 — serving/cache parity (SURVEY.md §3.1, §7.2): the reference's
-  * update() cycle computes three relations and overwrites them in Redis
-  * wholesale (server.js:280-302); here the same three land as parquet
-  * directories, overwritten idempotently — re-runnable on a timer, readers
-  * never touch the source tables (the read path is O(cache)).
+  * update() cycle recomputes every dashboard key and overwrites it in
+  * Redis wholesale (server.js:280-331); here the same nine relations land
+  * as parquet directories, overwritten idempotently — re-runnable on a
+  * timer, readers never touch the source tables (the read path is
+  * O(cache)).
+  *
+  * Cache relations are written UNORDERED. Every serving read imposes its
+  * own total order, so a sort before the write would buy nothing; the
+  * presentation order lives in the query registry (a1, j8, a8, w5, f10)
+  * and in [[operators.Windows.gapfill]] / [[functions.ScalarQueries.rrMinerInfo]].
   *
   * At 100 TB: each cache write is `overwrite` of a small AGGREGATED result
   * (leaderboard ≈ #miners, chain ≈ #heights in range, rollup ≈ #heights) —
@@ -17,15 +23,15 @@ object Pipelines {
 
   /** miner_info (P9 projection of A1+A2+A4, rpc.js:430-445). */
   def minerInfo(s: SparkSession, d: String): DataFrame =
-    operators.Aggregations.queries("a1_leaderboard")(s, d)
+    operators.Aggregations.minerLeaderboard(s, d)
 
   /** mining_info (P10: canonical winner per height, rpc.js:447-457). */
   def miningInfo(s: SparkSession, d: String): DataFrame =
-    operators.RelationalCore.queries("j8_winner_commit")(s, d)
+    operators.RelationalCore.winnerCommits(s, d)
 
   /** block_info (A8 per-height rollup, rpc.js:463-487). */
   def blockInfo(s: SparkSession, d: String): DataFrame =
-    operators.Aggregations.queries("a8_block_rollup")(s, d)
+    operators.Aggregations.blockRollup(s, d)
 
   /** chain_tip — tip height plus its burnchain timestamp (epoch seconds),
     * derived from the snapshots table (ADVICE r3: the dashboard's
@@ -54,10 +60,10 @@ object Pipelines {
       .partitionBy("height_bucket")
       .parquet(s"$cacheDir/block_info")
     // dashboard composition relations (VERDICT r2 item 2)
-    put(operators.Windows.gapfill(1000L)(s, sfDir), "burn_fee_area")
-    put(functions.ScalarQueries.rrMinerInfo(None)(s, sfDir), "miner_info_rr")
-    put(functions.ScalarQueries.rrMinerInfo(Some(1000L))(s, sfDir), "miner_info_rr_1000")
-    put(functions.ScalarQueries.rrMinerInfo(Some(100L))(s, sfDir), "miner_info_rr_100")
+    put(operators.Windows.gapfillSeries(1000L)(s, sfDir), "burn_fee_area")
+    put(functions.ScalarQueries.rrLeaderboard(None)(s, sfDir), "miner_info_rr")
+    put(functions.ScalarQueries.rrLeaderboard(Some(1000L))(s, sfDir), "miner_info_rr_1000")
+    put(functions.ScalarQueries.rrLeaderboard(Some(100L))(s, sfDir), "miner_info_rr_100")
     put(operators.Aggregations.queries("a9_btc_total")(s, sfDir), "btc_total")
     put(chainTip(s, sfDir), "chain_tip")
   }

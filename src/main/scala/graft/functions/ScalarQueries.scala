@@ -37,32 +37,31 @@ object ScalarQueries {
     *
     * `latest` restricts the economics to the trailing-N window (the
     * server's miner_info100/1000 variants, server.js:304-331). */
-  def rrMinerInfo(latest: Option[Long]): Q = (s, d) => {
-    // hoisted: both rollups below share one hi subplan per query
-    lazy val hi = Tables.orders(s, d).agg(max(col("o_orderkey")).as("hi"))
-    def inWin(df: org.apache.spark.sql.DataFrame) = latest match {
+  def rrMinerInfo(latest: Option[Long]): Q = (s, d) =>
+    rrLeaderboard(latest)(s, d).orderBy(col("stx_address"))
+
+  /** [[rrMinerInfo]] without its presentation order: the `miner_info_rr*`
+    * cache relations. */
+  private[graft] def rrLeaderboard(latest: Option[Long]): Q = (s, d) =>
+    latest match {
+      // a trailing window filters the commit scan and the memoized winners
+      // at one tip literal (the same windowed winners as a12)
       case Some(n) =>
-        df.crossJoin(broadcast(hi))
-          .filter(col("stacks_block_height") > col("hi") - n)
-          .drop("hi")
-      case None => df
+        rrOf(s, d)(Domain.commits(s, d).filter(Domain.inTrailingWindow(s, d, n)),
+          Domain.trailingWinners(s, d, n))
+      case None => rrOf(s, d)(Domain.commits(s, d), Domain.winners(s, d))
     }
-    // two partial-aggregated per-miner rollups joined at miner cardinality
-    // (the winners relation replaces the old fact-table winner window)
-    val mined = inWin(Domain.commits(s, d))
+
+  /** The rr economics of a commits relation and its winners: two
+    * partial-aggregated per-miner rollups joined at miner cardinality. */
+  private[graft] def rrOf(s: SparkSession, d: String)(
+      commits: DataFrame, winners: DataFrame): DataFrame = {
+    val mined = commits
       .groupBy(col("leader_key_address"))
       .agg(
         count(lit(1)).as("total_mined"),
         sum(col("burn_fee")).as("miner_burned"))
-    // unfiltered variant reads the MEMOIZED winners core (r14 — a1/a2/j8
-    // share it); range variants filter commits first, so they keep the
-    // inline argmax (the winner choice is per-height-local, so the height
-    // filter commutes into it)
-    val winnersIn = latest match {
-      case Some(_) => Domain.winnersOf(inWin(Domain.commits(s, d)))
-      case None => Domain.winners(s, d)
-    }
-    val wins = winnersIn
+    val wins = winners
       .groupBy(col("leader_key_address"))
       .agg(
         count(lit(1)).as("total_win"),
@@ -88,7 +87,6 @@ object ScalarQueries {
         col("actual_win"), col("actual_win_bonus"), col("total_win"),
         col("total_mined"), col("miner_burned"),
         rrMilli.as("rr_milli"))
-      .orderBy(col("stx_address"))
   }
 
   private val f10: Q = rrMinerInfo(None)

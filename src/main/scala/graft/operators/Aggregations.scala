@@ -27,8 +27,10 @@ object Aggregations {
     * (rpc.js:433-434 — the reference's toFixed(3) presentation rounding,
     * re-expressed as exact scaled integers so both engines agree on every
     * input). Two partial-aggregated shuffles (commits → per-miner, winners
-    * → per-miner) joined at miner cardinality — no fact-table window. */
-  private val a1: Q = (s, d) => {
+    * → per-miner) joined at miner cardinality — no fact-table window.
+    * Unordered: the `miner_info` cache relation; the registered a1 adds
+    * the presentation order. */
+  private[graft] val minerLeaderboard: Q = (s, d) => {
     val base = Domain.commits(s, d)
       .groupBy(col("leader_key_address"))
       .agg(count(lit(1)).as("total_mined"), sum(col("burn_fee")).as("miner_burned"))
@@ -44,8 +46,9 @@ object Aggregations {
         rationalScaled(col("total_win") * 1000L, col("average_burn_milli"), 1000000L))
       .select(col("leader_key_address"), col("total_mined"), col("miner_burned"),
         col("total_win"), col("average_burn_milli"), col("normalized_wins_micro"))
-      .orderBy(col("leader_key_address"))
   }
+  private val a1: Q = (s, d) =>
+    minerLeaderboard(s, d).orderBy(col("leader_key_address"))
 
   /** A2 — canonical-fork wins with genesis-bonus split (rpc.js:301-305):
     * a per-miner rollup of the winners relation. */
@@ -76,8 +79,9 @@ object Aggregations {
     * scalar aggs + nested commit_value_list in one pass. The list is pinned
     * sorted by (vtxindex, fee, miner) and serialized "vtx:fee:miner;…" so the
     * driver's hash comparator can treat it as a plain string (ADVICE r1 —
-    * raw array columns crash its pandas sort). */
-  private val a8: Q = (s, d) =>
+    * raw array columns crash its pandas sort). Unordered: the `block_info`
+    * cache relation; the registered a8 adds the presentation order. */
+  private[graft] val blockRollup: Q = (s, d) =>
     Domain.commits(s, d)
       .withColumn("commit",
         struct(col("vtxindex"), col("burn_fee"), col("leader_key_address")))
@@ -88,7 +92,8 @@ object Aggregations {
         concat_ws(";", transform(sort_array(collect_list(col("commit"))),
           x => concat_ws(":", x.getField("vtxindex"), x.getField("burn_fee"),
             x.getField("leader_key_address")))).as("commit_value_list"))
-      .orderBy(col("stacks_block_height"))
+  private val a8: Q = (s, d) =>
+    blockRollup(s, d).orderBy(col("stacks_block_height"))
 
   /** A9 — global burned total, scaled sats→BTC and rounded (server.js:334-352). */
   private val a9: Q = (s, d) =>
@@ -147,23 +152,17 @@ object Aggregations {
   }
 
   /** A12 — trailing-N-block leaderboards (server.js:304-331, miner_info100 /
-    * miner_info1000): same pipeline as A1 with the range pushed into the
-    * scan. The tip height is the memoized driver scalar
-    * ([[Windows.ordersTipOf]], r14): as a literal the range predicate
-    * reaches PushedFilters on both commit scans, where the former
-    * broadcast-crossjoin form re-scanned orders once per reference and
-    * kept the filter above the scan. `n` is the reference's `latest`
+    * miner_info1000): same pipeline as A1 over the trailing window of
+    * [[Domain.inTrailingWindow]]. The commits side filters the scan at the
+    * memoized tip literal (PushedFilters); the wins come from
+    * [[Domain.trailingWinners]], the one windowed-winners definition the
+    * trailing rr leaderboards share. `n` is the reference's `latest`
     * route parameter. */
   def trailingLeaderboard(n: Long): Q = (s, d) => {
-    val hi = Windows.ordersTipOf(s, d)
-    def inWin(df: org.apache.spark.sql.DataFrame) =
-      df.filter(col("stacks_block_height") > lit(hi - n))
-    val base = inWin(Domain.commits(s, d))
+    val base = Domain.commits(s, d).filter(Domain.inTrailingWindow(s, d, n))
       .groupBy(col("leader_key_address"))
       .agg(count(lit(1)).as("total_mined"), sum(col("burn_fee")).as("miner_burned"))
-    // filter BEFORE the argmax (winner choice is per-height-local, so the
-    // range filter commutes into it — prunes the heavy side first)
-    val wins = Domain.winnersOf(inWin(Domain.commits(s, d)))
+    val wins = Domain.trailingWinners(s, d, n)
       .groupBy(col("leader_key_address"))
       .agg(count(lit(1)).as("total_win"))
     base.join(wins, Seq("leader_key_address"), "left")

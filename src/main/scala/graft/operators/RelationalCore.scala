@@ -118,11 +118,14 @@ object RelationalCore {
 
   /** J8/P5 — winner resolution: the commit matching winning_block_txid,
     * re-derived as per-height argmax (rpc.js:269; SURVEY §4 G1(b)) — a
-    * max_by hash aggregation, not a window (Domain.winners). */
-  private val j8: Q = (s, d) =>
+    * max_by hash aggregation, not a window (Domain.winners). Unordered:
+    * the `mining_info` cache relation; the registered j8 adds the
+    * presentation order. */
+  private[graft] val winnerCommits: Q = (s, d) =>
     Domain.winners(s, d)
       .select(col("stacks_block_height"), col("leader_key_address"), col("burn_fee"))
-      .orderBy(col("stacks_block_height"))
+  private val j8: Q = (s, d) =>
+    winnerCommits(s, d).orderBy(col("stacks_block_height"))
 
   /** J9 — join on a computed key (stacks_block_id digest, rpc.js:320-336).
     * Aggregate-before-join: the count is key-associative, so the fact side

@@ -223,7 +223,12 @@ object Windows {
     * sequence+explode, left join, forward-fill with last(ignoreNulls)
     * (mining_monitor_rpc.js:83-106). `latest` is the reference's route
     * parameter (rpc.js:13-21); grid size is miners × latest, bounded. */
-  def gapfill(latest: Long): Q = (s, d) => {
+  def gapfill(latest: Long): Q = (s, d) =>
+    gapfillSeries(latest)(s, d).orderBy(col("address"), col("height"))
+
+  /** [[gapfill]] without its presentation order: the `burn_fee_area`
+    * cache relation. */
+  private[graft] def gapfillSeries(latest: Long): Q = (s, d) => {
     val hi = ordersTipOf(s, d)
     // literal tip: the trailing range pushes into the lineitem scan, and
     // the grid sequence needs no second orders scan (r14). The cumulative
@@ -232,9 +237,7 @@ object Windows {
     // scan + agg + window subtree once per consumer. It is bounded by the
     // rows observed in the trailing window (miners-in-window × ≤latest),
     // metadata-grain at any corpus scale.
-    val inWin = Domain.commits(s, d)
-      .filter(col("stacks_block_height") > lit(hi - latest))
-    val perH = inWin
+    val perH = Domain.commits(s, d).filter(Domain.inTrailingWindow(s, d, latest))
       .groupBy(col("leader_key_address").as("address"),
         col("stacks_block_height").as("height"))
       .agg(sum(col("burn_fee")).as("fee_h"))
@@ -252,7 +255,6 @@ object Windows {
       .withColumn("cum_filled",
         coalesce(last(col("cum_burn"), ignoreNulls = true).over(ffW), lit(0L)))
       .select(col("address"), col("height"), col("cum_filled"))
-      .orderBy(col("address"), col("height"))
   }
 
   /** W6 — head-N: 50 newest canonical rows (mining_monitor_rpc.js:26).

@@ -1,7 +1,42 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+
+/** The nine cache relations `refreshCache` writes, each paired with the
+  * ORDERED query it holds the rows of: the registered query where there
+  * is one, else the public ordered definition. */
+object CacheQueries {
+  val Relations: Seq[String] = Seq("miner_info", "mining_info", "block_info",
+    "burn_fee_area", "miner_info_rr", "miner_info_rr_1000", "miner_info_rr_100",
+    "btc_total", "chain_tip")
+
+  def ordered(s: SparkSession, d: String): Seq[(String, DataFrame)] = {
+    def q(name: String) = SparkEntry.queries(name)(s, d)
+    Seq(
+      "miner_info" -> q("a1_leaderboard"),
+      "mining_info" -> q("j8_winner_commit"),
+      "block_info" -> q("a8_block_rollup"),
+      "burn_fee_area" -> q("w5_gapfill"),
+      "miner_info_rr" -> q("f10_rr_miner_info"),
+      "miner_info_rr_1000" -> functions.ScalarQueries.rrMinerInfo(Some(1000L))(s, d),
+      "miner_info_rr_100" -> functions.ScalarQueries.rrMinerInfo(Some(100L))(s, d),
+      "btc_total" -> q("a9_btc_total"),
+      "chain_tip" -> Pipelines.chainTip(s, d))
+  }
+
+  /** A cache dir holding every relation in its presentation order, laid
+    * out like `refreshCache`'s (block_info partitioned by height bucket). */
+  def writeOrdered(s: SparkSession, d: String, dir: String): Unit =
+    ordered(s, d).foreach {
+      case ("block_info", df) =>
+        df.withColumn("height_bucket", (col("stacks_block_height") / 1000L).cast("long"))
+          .write.partitionBy("height_bucket").parquet(s"$dir/block_info")
+      case (name, df) => df.write.parquet(s"$dir/$name")
+    }
+}
 
 /** The full dashboard document (VERDICT r2 item 2): every section of the
   * reference's packMiningMonitorData (mining_monitor_rpc.js:151-161) plus
@@ -104,8 +139,36 @@ class DashboardSpec extends SparkSpec {
     assert(JsonMethods.parse(lastPage) \ "next" === JNull)
   }
 
+  /** Every JSON page of the area walk, following the `next` cursors. */
+  private def pageWalk(dir: String): Seq[String] = {
+    val pages = scala.collection.mutable.ArrayBuffer.empty[String]
+    var cursor: Option[(Long, Long)] = None
+    var done = false
+    while (!done) {
+      val page = Pipelines.burnFeeAreaPageJson(spark, dir, cursor, 997)
+      pages += page
+      assert(pages.length < 10000, "cursor did not advance")
+      JsonMethods.parse(page) \ "next" match {
+        case JNull => done = true
+        case next => cursor = Some((
+          (next \ "address").asInstanceOf[JInt].num.toLong,
+          (next \ "height").asInstanceOf[JInt].num.toLong))
+      }
+    }
+    pages.toSeq
+  }
+
+  test("reads over the unordered cache equal their render over an ordered one") {
+    val unordered = refreshed("graft_dash_unordered")
+    val ordered = java.nio.file.Files.createTempDirectory("graft_dash_ordered").toString
+    CacheQueries.writeOrdered(spark, sf, ordered)
+    assert(Pipelines.dashboard(spark, unordered) === Pipelines.dashboard(spark, ordered))
+    val walk = pageWalk(unordered)
+    assert(walk.length > 1, "the walk must span several pages")
+    assert(walk === pageWalk(ordered))
+  }
+
   test("reads over an unchanged cache launch no Spark job beyond the live prices read") {
-    import org.apache.spark.sql.functions.col
     val dir = refreshed("graft_dash_memo")
     val doc1 = Pipelines.dashboard(spark, dir)
     val page1 = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
@@ -162,7 +225,6 @@ class DashboardSpec extends SparkSpec {
   }
 
   test("rateOfReturn values match the rr relation read by name (reorder-proof)") {
-    import org.apache.spark.sql.functions.col
     // recompute the top rr row independently, selecting columns BY NAME —
     // if dashboard() read a swapped same-type column (the r3 nit), the
     // emitted RR would differ from this value

@@ -95,6 +95,25 @@ class MemoSpec extends SparkSpec {
     assert(ownDirs.size === 2, s"one directory per build: $ownDirs")
   }
 
+  /** The build reads back with the schema it wrote: reopening it must not
+    * cost a schema-inference job on top of the write. */
+  test("cachedParquet: a build launches no more jobs than the plain write") {
+    val sp = spark
+    import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memopqjobs").toFile
+    Seq(1L).toDF("v").write.parquet(new java.io.File(dir, "documents.parquet").getPath)
+    def core = spark.range(100).select(($"id" % 7).as("k"), $"id".as("v"))
+    val plain = jobsOf(core.write.parquet(new java.io.File(dir, "plain").getPath))
+    var built: org.apache.spark.sql.DataFrame = null
+    val buildJobs = jobsOf {
+      built = Memo.cachedParquet(spark, dir.getPath, "memospec_pq_jobs",
+        "documents.parquet")(core)
+    }
+    assert(buildJobs <= plain, s"build $buildJobs jobs, plain write $plain")
+    assert(built.schema === spark.read.parquet(new java.io.File(dir, "plain").getPath).schema)
+    assert(built.collect().toSet === core.collect().toSet)
+  }
+
   /** Perfbench `queries` restamps documents before every pass and each
     * `serve` tick restamps lineitem: an entry per stamp would pin one more
     * checkpointed frame per pass for the life of the session. */

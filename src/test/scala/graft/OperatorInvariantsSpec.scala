@@ -279,6 +279,30 @@ class ScalarQueriesSpec extends SparkSpec {
     assert(df.filter(col("actual_win") =!= col("total_win")).count() === 0L)
   }
 
+  /** The reference for the trailing rr leaderboard: an inline argmax over
+    * the window's commits, with the tip from a broadcast orders max scan. */
+  private def rrInline(n: Long) = {
+    val hi = Tables.orders(spark, sf).agg(max(col("o_orderkey")).as("hi"))
+    def inWin(df: org.apache.spark.sql.DataFrame) =
+      df.crossJoin(broadcast(hi)).filter(col("stacks_block_height") > col("hi") - n)
+        .drop("hi")
+    functions.ScalarQueries.rrOf(spark, sf)(inWin(Domain.commits(spark, sf)),
+      Domain.winnersOf(inWin(Domain.commits(spark, sf))))
+      .orderBy(col("stx_address"))
+  }
+
+  test("trailing rr from the memoized winners equals the inline-argmax formulation") {
+    val tip = Tables.orders(spark, sf).agg(max("o_orderkey")).head().getLong(0)
+    Seq(1L, 100L, 1000L, tip + 1).foreach { n =>
+      val got = functions.ScalarQueries.rrMinerInfo(Some(n))(spark, sf).collect().toSeq
+      assert(got.nonEmpty, s"n = $n")
+      assert(got === rrInline(n).collect().toSeq, s"n = $n")
+    }
+    // a window past genesis is the whole chain
+    assert(functions.ScalarQueries.rrMinerInfo(Some(tip + 1))(spark, sf).collect().toSeq ===
+      q("f10_rr_miner_info").collect().toSeq)
+  }
+
   test("f12 CSV carries one 10-char txid prefix per line item") {
     val bad = q("f12_txid_csv")
       .withColumn("n", size(split(col("txids"), ",")))

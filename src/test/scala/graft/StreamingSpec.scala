@@ -120,12 +120,22 @@ class StreamingSpec extends SparkSpec {
 
 /** M6 cache parity: refresh is idempotent, dashboard serves from cache. */
 class PipelinesSpec extends SparkSpec {
-  test("refreshCache writes the three relations; dashboard assembles from them") {
+  test("refreshCache writes all nine relations as their queries' row sets") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cache").toString
     Pipelines.refreshCache(spark, sf, dir)
-    assert(spark.read.parquet(s"$dir/miner_info").count() > 0)
-    assert(spark.read.parquet(s"$dir/mining_info").count() > 0)
-    assert(spark.read.parquet(s"$dir/block_info").count() > 0)
+    // unordered relations: compared as multisets of rows, by column name
+    // (block_info also carries its height_bucket partition column)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    val queries = CacheQueries.ordered(spark, sf)
+    assert(queries.map(_._1) === CacheQueries.Relations)
+    queries.foreach { case (name, query) =>
+      val rel = spark.read.parquet(s"$dir/$name")
+        .select(query.columns.toSeq.map(col): _*)
+      val n = rel.count()
+      assert(n > 0, name)
+      assert(rows(rel) === rows(query), s"$name differs from its query")
+    }
     // idempotent overwrite: second run leaves identical row counts
     val n1 = spark.read.parquet(s"$dir/block_info").count()
     Pipelines.refreshCache(spark, sf, dir)
@@ -141,6 +151,47 @@ class PipelinesSpec extends SparkSpec {
     // well-formed JSON: parseable by the JVM's own nashorn-free check — a
     // cheap structural assertion (balanced braces, 50-row miner table)
     assert(doc.count(_ == '{') === doc.count(_ == '}'))
+  }
+
+  test("refreshCache plans no global sort and no range-partitioned exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    /** The executed plans of every query `f` runs in this session. */
+    def plansOf(f: => Unit): Seq[SparkPlan] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val l = new QueryExecutionListener {
+        override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        f
+        org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext, 10000L)
+      } finally spark.listenerManager.unregister(l)
+      plans.toArray(Array.empty[SparkPlan]).toSeq
+    }
+    // block_info's partitionBy needs a LOCAL sort (global = false): allowed
+    def ordering(p: SparkPlan): Seq[SparkPlan] = Plans.collect(p) {
+      case s: SortExec if s.global => s
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    }
+    def writes(ps: Seq[SparkPlan]) =
+      ps.filter(p => Plans.find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+    // control: a write of an ordered query is caught
+    val control = writes(plansOf(q("a1_leaderboard").write.parquet(
+      java.nio.file.Files.createTempDirectory("graft_sorted").toString + "/a1")))
+    assert(control.nonEmpty && control.forall(ordering(_).nonEmpty),
+      s"the listener must see the ordered write's sort:\n${control.mkString("\n")}")
+    val dir = java.nio.file.Files.createTempDirectory("graft_unsorted").toString
+    val plans = plansOf(Pipelines.refreshCache(spark, sf, dir))
+    assert(writes(plans).length === CacheQueries.Relations.length)
+    plans.foreach(p => assert(ordering(p).isEmpty, s"ordering operator in:\n$p"))
   }
 
   test("incremental refresh rewrites only the touched height buckets") {
