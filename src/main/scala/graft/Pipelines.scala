@@ -21,25 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipelines {
 
-  /** miner_info (P9 projection of A1+A2+A4, rpc.js:430-445). */
-  def minerInfo(s: SparkSession, d: String): DataFrame =
-    operators.Aggregations.minerLeaderboard(s, d)
-
-  /** mining_info (P10: canonical winner per height, rpc.js:447-457). */
-  def miningInfo(s: SparkSession, d: String): DataFrame =
-    operators.RelationalCore.winnerCommits(s, d)
-
-  /** block_info (A8 per-height rollup, rpc.js:463-487). */
-  def blockInfo(s: SparkSession, d: String): DataFrame =
-    operators.Aggregations.blockRollup(s, d)
-
-  /** chain_tip — tip height plus its burnchain timestamp (epoch seconds),
-    * derived from the snapshots table (ADVICE r3: the dashboard's
-    * bitcoin_block.timestamp was an inlined constant; the reference takes
-    * it from the burnchain tip block). One shared definition with the
-    * peer-probe's derived blockchaininfo document (Domain.chainTip). */
-  def chainTip(s: SparkSession, d: String): DataFrame = Domain.chainTip(s, d)
-
   /** The update() cycle: recompute every dashboard relation and overwrite
     * the cache dir (the reference recomputes all Redis keys per tick,
     * server.js:280-331). Idempotent — same contract as the whole-key Redis
@@ -52,9 +33,12 @@ object Pipelines {
   def refreshCache(s: SparkSession, sfDir: String, cacheDir: String): Unit = {
     def put(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$cacheDir/$name")
-    put(minerInfo(s, sfDir), "miner_info")
-    put(miningInfo(s, sfDir), "mining_info")
-    blockInfo(s, sfDir)
+    // miner_info: P9 projection of A1+A2+A4 (rpc.js:430-445)
+    put(operators.Aggregations.minerLeaderboard(s, sfDir), "miner_info")
+    // mining_info: P10, the canonical winner per height (rpc.js:447-457)
+    put(operators.RelationalCore.winnerCommits(s, sfDir), "mining_info")
+    // block_info: the A8 per-height rollup (rpc.js:463-487)
+    operators.Aggregations.blockRollup(s, sfDir)
       .withColumn("height_bucket", (col("stacks_block_height") / 1000L).cast("long"))
       .write.mode("overwrite")
       .partitionBy("height_bucket")
@@ -65,7 +49,7 @@ object Pipelines {
     put(functions.ScalarQueries.rrLeaderboard(Some(1000L))(s, sfDir), "miner_info_rr_1000")
     put(functions.ScalarQueries.rrLeaderboard(Some(100L))(s, sfDir), "miner_info_rr_100")
     put(operators.Aggregations.queries("a9_btc_total")(s, sfDir), "btc_total")
-    put(chainTip(s, sfDir), "chain_tip")
+    put(Domain.chainTip(s, sfDir), "chain_tip")
   }
 
   /** Incremental refresh of the block_info cache: recompute ONLY heights ≥
@@ -76,7 +60,7 @@ object Pipelines {
     * per-write here, not globally). */
   def refreshBlockInfoIncremental(s: SparkSession, sfDir: String,
                                   cacheDir: String, fromHeight: Long): Unit = {
-    blockInfo(s, sfDir)
+    operators.Aggregations.blockRollup(s, sfDir)
       // refresh from the START of fromHeight's bucket: dynamic overwrite
       // replaces whole partitions, so a mid-bucket threshold would rewrite
       // the straddled bucket with only its upper half and drop the rest
@@ -89,7 +73,7 @@ object Pipelines {
     // the tip moved, so its timestamp did too — an incremental cycle must
     // keep chain_tip current or the dashboard would pair a new
     // block_height with an older tip's timestamp (self-review r4)
-    chainTip(s, sfDir).write.mode("overwrite").parquet(s"$cacheDir/chain_tip")
+    Domain.chainTip(s, sfDir).write.mode("overwrite").parquet(s"$cacheDir/chain_tip")
   }
 
   /** INCREMENTAL AGGREGATE MAINTENANCE: fold a delta of new commits into

@@ -123,6 +123,9 @@ object Tables {
   private[graft] def resolvedEntries(path: String): Int =
     resolved.keySet.stream().filter(_._2 == path).count().toInt
 
+  /** The fewest rows a fanned-out scan task must receive ([[fanoutFor]]). */
+  private val FanoutRowsPerTask = 512L
+
   /** Parquet's minimum split is one ROW GROUP, and the driver testdata ships
     * each table as a single file with a single row group — so every scan
     * stage (decode + all pre-exchange work: tokenize, JSON parse, partial
@@ -144,27 +147,18 @@ object Tables {
     * measured the LIGHT consumers of those readers inverse-scaling at real
     * 32 cores (u3 4.9×, px4 6.8 s @32 vs 0.7 @8 — a user `repartition(n)`
     * also pins the count past AQE's coalescing). r14 fans to
-    * ⌈rows / fanoutRowsPerTask⌉ capped at the core count: tiny inputs stay
-    * at a few meaningful partitions, and any input past cores·rowsPerTask
-    * (every rehearsal scale) still spreads over the full session. Config:
-    * `spark.graft.scan.fanout` = auto (default) | off — any other value
-    * throws (ADVICE r13: a typo like 'false' silently ENABLED the
-    * fan-out); `spark.graft.scan.fanoutRowsPerTask` (default 512) sets the
-    * minimum rows a fanned task must receive. */
+    * ⌈rows / [[FanoutRowsPerTask]]⌉ capped at the core count: tiny inputs
+    * stay at a few meaningful partitions, and any input past
+    * cores·FanoutRowsPerTask (every rehearsal scale) still spreads over
+    * the full session. */
   private def fanoutFor(s: SparkSession, e: Resolved): Option[Int] = {
-    val mode = s.conf.get("spark.graft.scan.fanout", "auto")
-    if (mode == "off") return None
-    require(mode == "auto",
-      s"spark.graft.scan.fanout must be 'auto' or 'off', got '$mode'")
     val cores = s.sparkContext.defaultParallelism
-    val rowsPerTask = math.max(1L,
-      s.conf.get("spark.graft.scan.fanoutRowsPerTask", "512").toLong)
     // many files already split across cores — nothing to fix, and no
     // footer reads for wide production layouts
     if (e.leaves.size >= cores || e.leaves.isEmpty) None
     else {
       val (groups, rows) = e.footerStats
-      val parts = math.min(cores.toLong, rows / rowsPerTask).toInt
+      val parts = math.min(cores.toLong, rows / FanoutRowsPerTask).toInt
       // the scan already splits `groups` ways; only fan when the target
       // is a real improvement over the native row-group parallelism
       if (parts <= 1 || groups >= parts) None else Some(parts)

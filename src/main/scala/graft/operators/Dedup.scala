@@ -168,7 +168,7 @@ object Dedup {
     * d10's verify stages, d6's clustering input) — without the memo each
     * re-ran the signature pass and the band self-join (~1.2 s × 3
     * redundant runs at sf0.1; at 100 TB, 3 redundant corpus shuffles). */
-  private[graft] def lshPairsCached(s: SparkSession, d: String): DataFrame =
+  private def lshPairsCached(s: SparkSession, d: String): DataFrame =
     graft.Memo.cached(s, d, "lsh_pairs", "documents.parquet")(
       lshPairs(bandsFromHs(docHashedShingles(s, d))))
 
@@ -381,21 +381,12 @@ object Dedup {
     * joins 60 s at sf1; the allocation-free sorted merge stays ~2 s even
     * with the same inlining. */
   /** The pair frame with both hs payloads attached, pre-scoring — the
-    * shared first stage of d4/d4b's verify (split from the filter so Probe
-    * can time the joins separately from the jaccard scoring). */
+    * shared first stage of d4/d4b's verify (the two gates differ only in
+    * the candidate pairs they pass in). */
   private def d4JoinedOver(pairs: DataFrame, hs: DataFrame): DataFrame =
     pairs
       .join(hs.select(col("doc_id").as("d1"), col("hs").as("sh1")), "d1")
       .join(hs.select(col("doc_id").as("d2"), col("hs").as("sh2")), "d2")
-
-  /** d4's joined frame over the corpus candidates (Probe's entry point). */
-  private[graft] def d4Joined(s: SparkSession, d: String): DataFrame = {
-    // harness-owned sessions are built without .withExtensions; register
-    // graft_isect before any consumer (d4's filter, Probe's reuse) resolves
-    // it (ADVICE r8 — d5/CryptoQueries already follow this convention)
-    graft.GraftExtensions.ensure(s)
-    d4JoinedOver(lshPairsCached(s, d), docHashedShingles(s, d))
-  }
 
   /** The exact-Jaccard verify tail shared by d4 and d4b — one definition,
     * so the two gates can differ ONLY in candidate generation (the
@@ -428,7 +419,13 @@ object Dedup {
     d4Verify(d4JoinedOver(pairs, hashedShinglesOf(docs)))
   }
 
-  private val d4: Q = (s, d) => d4Verify(d4Joined(s, d))
+  private val d4: Q = (s, d) => {
+    // harness-owned sessions are built without .withExtensions; register
+    // graft_isect before d4's filter resolves it (ADVICE r8 —
+    // d5/CryptoQueries already follow this convention)
+    graft.GraftExtensions.ensure(s)
+    d4Verify(d4JoinedOver(lshPairsCached(s, d), docHashedShingles(s, d)))
+  }
 
   /** D4B — exact n-gram Jaccard over the BUCKET-CAPPED candidate set
     * ([[lshPairsCapped]], cap [[LshBucketCap]]): the production-scale twin
@@ -699,8 +696,8 @@ object Dedup {
       .select(col("doc_id"), simhash32.as("sh"))
   }
 
-  /** The banding projection of a (doc_id, sh) frame — exposed so dev
-    * probes time the SAME shape d8Pairs runs instead of a drifting copy. */
+  /** The banding projection of a (doc_id, sh) frame — exposed so specs
+    * drive the SAME shape d8Pairs runs instead of a drifting copy. */
   private[graft] def simBands(sh: DataFrame): DataFrame =
     sh.select(col("doc_id"), col("sh"),
       posexplode(array((0 until SimBands).map(b =>
@@ -708,7 +705,7 @@ object Dedup {
         .as(Seq("band_idx", "bv")))
 
   /** The band self-join + exact-Hamming verification tail over any banded
-    * frame — exposed so dev probes time THIS shape, not a copy. */
+    * frame — exposed so specs drive THIS shape, not a copy. */
   private[graft] def d8PairsFrom(bands: DataFrame): DataFrame = {
     val a = bands.as("a"); val b = bands.as("b")
     a.join(b, col("a.band_idx") === col("b.band_idx") &&
@@ -723,7 +720,7 @@ object Dedup {
     // the signature frame is 12 bytes/doc; materialize it once (eager —
     // so constructing this query runs the signature jobs, the d6/ForkWalk
     // precedent and the price of not re-deriving every signature per join
-    // side; Explain shows the checkpoint scan, Probe shows the stages)
+    // side; Explain shows the checkpoint scan)
     d8PairsFrom(simBands(simhashFrame(s, d).localCheckpoint(true)))
 
   /** D8 — SimHash near-dup clustering: the third candidate modality
@@ -892,7 +889,7 @@ object Dedup {
 
   /** px17b's promiscuity bound: shingles present in MORE than this many
     * train docs are excluded from candidate generation AND scoring. */
-  private[graft] val ContainDfCap = 50L
+  private val ContainDfCap = 50L
 
   /** px17b's EVIDENCE FLOOR: a test doc is flagged only when at least this
     * many rare shingles back the ratio. Without it the cap's shrunken
@@ -978,55 +975,6 @@ object Dedup {
         col("n_rare") >= ContainMinRare &&
           col("containment_bp") >= ContainMinBp)
       .orderBy(col("doc_id"))
-  }
-
-  /** Probe-only cardinalities for the containment family (Probe px17 —
-    * the evidence behind SCALE.md's candidate-bound claims): returns
-    * (shingle-grain join rows, distinct (test, train) pairs, flagged test
-    * docs) for the exact px17 plan (cap = None) or px17b's capped plan.
-    * Mirrors containmentFrom/containmentCappedFrom's candidate stages. */
-  private[graft] def containmentProbe(s: SparkSession, d: String,
-      cap: Option[Long] = None): (Long, Long) = {
-    val ds = docHashedShingles(s, d).withColumnRenamed("hs", "shingles")
-    val test = ds.filter(col("doc_id") % 10 === 7)
-    val trainShAll = ds.filter(col("doc_id") % 10 =!= 7)
-      .select(col("doc_id").as("train_id"), explode(col("shingles")).as("sh"))
-    val testShAll = test.select(col("doc_id"), explode(col("shingles")).as("sh"))
-    val (testSh, trainSh) = cap match {
-      case Some(c) =>
-        val hot = trainShAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > c).select(col("sh"))
-        (testShAll.join(hot, Seq("sh"), "left_anti"),
-          trainShAll.join(hot, Seq("sh"), "left_anti"))
-      case None => (testShAll, trainShAll)
-    }
-    // occ = the join's output cardinality, computed ANALYTICALLY as
-    // Σ_sh df_test(sh)·df_train(sh) (identical value, two df aggregates
-    // and a shingle-grain join of the df tables — never the quadratic
-    // row set itself); the (test, train) pair count is an HLL
-    // approx_count_distinct, whose partials are map-side-combined — the
-    // exact distinct's full shuffle of the pair set ENOSPC'd the sf100
-    // probe (22 B rows), which is the very pathology being measured
-    val occRow = testSh.groupBy(col("sh")).agg(count(lit(1)).as("dft"))
-      .join(trainSh.groupBy(col("sh")).agg(count(lit(1)).as("dfr")),
-        Seq("sh"))
-      .agg(sum(col("dft") * col("dfr"))).head()
-    val occ = if (occRow.isNullAt(0)) 0L else occRow.getLong(0)
-    val pairs = testSh.join(trainSh, Seq("sh"))
-      .agg(approx_count_distinct(
-        struct(col("doc_id"), col("train_id")), 0.02)).head().getLong(0)
-    (occ, pairs)
-  }
-
-  /** The flagged-count half of the containment probe, SEPARATE from the
-    * volumes: the exact query's per-pair count shuffle is the quadratic
-    * set itself (~220 GB at sf100 — cannot finish on one box), and a
-    * caller must be able to report the volumes even where the exact
-    * query is infeasible. */
-  private[graft] def containmentFlagged(s: SparkSession, d: String,
-      cap: Option[Long] = None): Long = {
-    val q = if (cap.isDefined) px17b else px17
-    q(s, d).filter(col("contaminated")).count()
   }
 
   /** PX22 — EVAL-SCRUB, the REMOVAL px17's detection implies, in the
@@ -1344,7 +1292,7 @@ object Dedup {
   /** px14 span grain: stride-1 windows of this many tokens. */
   private[graft] val SpanTokens = 4
   /** A window repeated this many times corpus-wide is a duplicated span. */
-  private[graft] val SpanDupMin = 2
+  private val SpanDupMin = 2
 
   /** Exact duplicated-SPAN scrubbing (the fixed-grain form of
     * suffix-array substring dedup — Lee et al.'s "Deduplicating Training
@@ -1393,7 +1341,7 @@ object Dedup {
     graft.Memo.cached(s, d, "doc_toks", "documents.parquet")(
       Tables.documents(s, d).select(col("doc_id"), toks(col("text")).as("tk")))
 
-  private[graft] def spanScrubToked(k: Int)(toked: DataFrame): DataFrame = {
+  private def spanScrubToked(k: Int)(toked: DataFrame): DataFrame = {
     // the window expr is TOTAL (short docs yield an empty array INSIDE the
     // expression, not via a preceding filter): filter inference from the
     // Generate inlines this chain into a combined predicate whose conjunct

@@ -191,7 +191,7 @@ object RelationalCore {
     * relations crossed, equality on height → canMine flag. The remote side
     * comes through the S16–S17 probe seam (sources.PeerProbe) — unset, it
     * resolves to the same derived table this oracle checks, so the gate
-    * covers the default path and ProbeSpec covers the injected one. */
+    * covers the default path and EnrichmentSpec covers the injected one. */
   private val j11: Q = (s, d) => {
     val local = Tables.lineitem(s, d)
       .agg(max(col("l_orderkey")).as("local_height"))
@@ -261,14 +261,14 @@ object RelationalCore {
       .agg(count(lit(1)).as("n_at_us"),
         sum(round(col("l_quantity") * 100).cast("long")).as("qty_at_us"))
 
-  /** j13's bucket-equi-join candidate stage over the rolled-up probe side,
-    * split out so the scale probe can count candidate rows vs true matches
-    * without copying the plan (Probe j13). 4-day buckets against the
-    * 14-day window: candidate slack (B+W)/W ≈ 1.29× at ≤ ⌈W/B⌉+1 = 5
-    * bucket replicas per interval — both sides of this join are small
-    * (windows, and the ~2.5 k distinct timestamps), so the replicas and
-    * slack multiply near-nothing. */
-  private[graft] def j13Candidates(s: SparkSession, d: String): DataFrame = {
+  /** j13's bucket-equi-join over the rolled-up probe side, then the
+    * exact-range recheck — the true match set (at rolled-up grain: each row
+    * carries its timestamp's partials). 4-day buckets against the 14-day
+    * window: candidate slack (B+W)/W ≈ 1.29× at ≤ ⌈W/B⌉+1 = 5 bucket
+    * replicas per interval — both sides of this join are small (windows,
+    * and the ~2.5 k distinct timestamps), so the replicas and slack
+    * multiply near-nothing. */
+  private val j13: Q = (s, d) => {
     val bucketUs = 4L * dayUs
     val iv = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT" && col("o_orderkey") % 20 === 0)
@@ -281,16 +281,7 @@ object RelationalCore {
     val probes = j13ProbeAgg(s, d)
       .withColumn("bkt", floor(col("ship_us") / bucketUs).cast("long"))
     iv.join(probes, Seq("bkt"))
-  }
-
-  /** j13's exact-range recheck over the candidates — the true match set
-    * (at rolled-up grain: each row carries its timestamp's partials). */
-  private[graft] def j13Matches(s: SparkSession, d: String): DataFrame =
-    j13Candidates(s, d)
       .filter(col("ship_us") >= col("win_start_us") && col("ship_us") < col("win_end_us"))
-
-  private val j13: Q = (s, d) => {
-    j13Matches(s, d)
       .groupBy(col("win_id"))
       .agg(sum(col("n_at_us")).as("n_ship"),
         sum(col("qty_at_us")).as("qty_cents"))

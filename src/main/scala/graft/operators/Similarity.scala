@@ -681,18 +681,15 @@ object Similarity {
 
   /** The x5b ADC probe against an EXPLICIT index frame — factored so the
     * incremental-admit law can drive the real read path over an
-    * incrementally-built index (the d9/tx16c probe-path convention), and
-    * so the nprobe sweep (Probe `nprobe` mode) can vary the probe count
-    * without touching the registered constant. */
+    * incrementally-built index (the d9/tx16c probe-path convention). */
   private[graft] def pqApproxTrainedOn(index: DataFrame, s: SparkSession,
-                                       d: String,
-                                       nprobe: Int = PqTrainedNprobe): DataFrame = {
+                                       d: String): DataFrame = {
     val v = vecs(s, d)
     val cells = scaledCodebook(s, d)
     val sub = trainedPqCodebook(s, d)
     // clamp: tiny corpora can have k < the constant probe count (sf0.001's
     // k = 8), and slice's negative-start tail must not exceed the array
-    val q = queryProbes(v, cells, math.min(nprobe, cells.size))
+    val q = queryProbes(v, cells, math.min(PqTrainedNprobe, cells.size))
       .select(Seq(col("q_id"), col("qv"), col("qnorm"), col("cell_id")) ++
         (0 until PqM).map(m => array(sub(m).map(c =>
           dot(slice(col("qv"), m * PqSub + 1, PqSub), typedlit(c._2))): _*)

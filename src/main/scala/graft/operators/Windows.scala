@@ -114,9 +114,8 @@ object Windows {
 
   /** a13's core at an explicit bucket width (2^widthBits) — the registered
     * query uses the ADAPTIVE width ([[a13WidthBits]]: ~256 buckets/miner,
-    * floor 2¹⁶); Probe's sf100 breakdown compares widths to separate
-    * algorithmic growth from single-box cache locality (VERDICT r10 item
-    * 6). Output is width-independent (the two-pass split is exact). */
+    * floor 2¹⁶). Unmemoized, so a spec can assert the plan that BUILDS
+    * the core. Output is width-independent (the two-pass split is exact). */
   private[graft] def a13At(widthBits: Int): Q = (s, d) =>
     a13CoreAt(widthBits)(s, d)
       .orderBy(col("address"), col("height"), col("vtxindex"))

@@ -46,7 +46,7 @@ object PageRank {
 
   /** Ordered (a < b) path-with-chords edges over customer keys:
     * k→k+1 and k→k+2 for every key with the neighbor in range. */
-  private[graft] def chordEdges(s: SparkSession, d: String): DataFrame = {
+  private def chordEdges(s: SparkSession, d: String): DataFrame = {
     val n = Tables.customer(s, d).agg(max(col("c_custkey")).cast("long").as("n"))
     val c = Tables.customer(s, d)
       .select(col("c_custkey").cast("long").as("a"))

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** S13–S15 — the reference's live enrichment layer (server.js:355-435:
   * coingecko stx/btc prices + blockchain.info hash power), re-expressed as
@@ -47,6 +48,11 @@ object Enrichment {
   private val schemaDdl =
     "stx_price_milli LONG, btc_sat_scale LONG, gas_sats LONG, hash_power STRING, fetched_at LONG"
 
+  /** The conf/default row's schema: every value is set, fetched_at is null. */
+  private val fallbackSchema = StructType.fromDDL(
+    "stx_price_milli LONG NOT NULL, btc_sat_scale LONG NOT NULL, gas_sats LONG NOT NULL, " +
+      "hash_power STRING NOT NULL, fetched_at LONG")
+
   /** The 1-row enrichment relation. Missing file FIELDS fall back per
     * column, and a missing file ROW (fetcher crashed mid-write, empty
     * file) falls back to the conf/default row — the relation is one row by
@@ -65,12 +71,10 @@ object Enrichment {
     val gas = confOr(s, GasSatsKey, DefaultGasSats)
     val hp = s.conf.getOption(HashPowerKey).getOrElse(DefaultHashPower)
     val ttl = confOr(s, TtlKey, DefaultTtlSec)
-    val fallback = s.range(1).select(
-      lit(stx).as("stx_price_milli"),
-      lit(btc).as("btc_sat_scale"),
-      lit(gas).as("gas_sats"),
-      lit(hp).as("hash_power"),
-      lit(null).cast("long").as("fetched_at"))
+    // a local relation: a collect of it is answered on the driver, so a
+    // dashboard read without a price file launches no Spark job
+    val fallback = s.createDataFrame(
+      java.util.List.of(Row(stx, btc, gas, hp, null)), fallbackSchema)
     val one = s.conf.getOption(PathKey) match {
       case Some(path) =>
         val mtimeSec = new java.io.File(path).lastModified / 1000L

@@ -551,17 +551,4 @@ object EventStream {
       finally out.close()
     }
   }
-
-  /** T1-equivalent continuous refresh: re-materialize the hourly rollup into
-    * a sink directory on a processing-time trigger (the reference's 120 s
-    * setInterval, as a streaming job with checkpointed exactly-once state). */
-  def refreshLoop(spark: SparkSession, eventsDir: String, sinkDir: String,
-                  trigger: Trigger = Trigger.ProcessingTime("120 seconds")): StreamingQuery =
-    hourlyAgg(fromFiles(spark, eventsDir)).writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", s"$sinkDir/_checkpoint")
-      .format("parquet")
-      .option("path", s"$sinkDir/hourly")
-      .start()
 }

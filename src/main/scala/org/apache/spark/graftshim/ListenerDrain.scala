@@ -2,14 +2,14 @@ package org.apache.spark.graftshim
 
 import org.apache.spark.SparkContext
 
-/** Bridge to the `private[spark]` listener-bus drain: metrics probes
-  * (graft.Probe) read counters accumulated by SparkListeners, and the bus
-  * is asynchronous — a fixed sleep can under-wait under load and silently
-  * under-report stage metrics (ADVICE r10). `waitUntilEmpty` is the
-  * purpose-built primitive (Spark's own test utilities use it); it is
-  * Scala-`private[spark]`, so this one-method object lives in an
-  * `org.apache.spark` subpackage to reach it. Nothing else may be added
-  * here — probes only, never query code. */
+/** Bridge to the `private[spark]` listener-bus drain: specs that count
+  * jobs or stages (SparkSpec, StreamingSpec) read counters accumulated by
+  * SparkListeners, and the bus is asynchronous — a fixed sleep can
+  * under-wait under load and silently under-report stage metrics (ADVICE
+  * r10). `waitUntilEmpty` is the purpose-built primitive (Spark's own test
+  * utilities use it); it is Scala-`private[spark]`, so this one-method
+  * object lives in an `org.apache.spark` subpackage to reach it. Nothing
+  * else may be added here — listener readers only, never query code. */
 object ListenerDrain {
   /** Block until every queued listener event is delivered, or `timeoutMs`
     * elapses (a timeout degrades to the old fixed-sleep behavior: counters

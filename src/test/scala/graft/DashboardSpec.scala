@@ -24,7 +24,7 @@ object CacheQueries {
       "miner_info_rr_1000" -> functions.ScalarQueries.rrMinerInfo(Some(1000L))(s, d),
       "miner_info_rr_100" -> functions.ScalarQueries.rrMinerInfo(Some(100L))(s, d),
       "btc_total" -> q("a9_btc_total"),
-      "chain_tip" -> Pipelines.chainTip(s, d))
+      "chain_tip" -> Domain.chainTip(s, d))
   }
 
   /** A cache dir holding every relation in its presentation order, laid
@@ -172,12 +172,23 @@ class DashboardSpec extends SparkSpec {
     val dir = refreshed("graft_dash_memo")
     val doc1 = Pipelines.dashboard(spark, dir)
     val page1 = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
-    val pricesJobs = jobsOf(sources.Enrichment.prices(spark)
-      .select(col("stx_price_milli"), col("btc_sat_scale"), col("hash_power")).head())
     var doc2, page2 = ""
-    assert(jobsOf { doc2 = Pipelines.dashboard(spark, dir) } === pricesJobs)
+    // no price file: the conf/default prices row is a local relation
+    assert(jobsOf { doc2 = Pipelines.dashboard(spark, dir) } === 0)
     assert(jobsOf { page2 = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50) } === 0)
     assert(doc2 === doc1 && page2 === page1)
+    // a price file: the read keeps exactly the live JSON read's jobs
+    val prices = java.nio.file.Files.createTempFile("graft_dash_prices", ".json")
+    java.nio.file.Files.writeString(prices, """{"stx_price_milli": 2500}""")
+    try {
+      spark.conf.set(sources.Enrichment.PathKey, prices.toString)
+      val withFile = Pipelines.dashboard(spark, dir)
+      val pricesJobs = jobsOf(sources.Enrichment.prices(spark)
+        .select(col("stx_price_milli"), col("btc_sat_scale"), col("hash_power")).head())
+      assert(pricesJobs > 0)
+      assert(jobsOf { doc2 = Pipelines.dashboard(spark, dir) } === pricesJobs)
+      assert(doc2 === withFile && doc2 != doc1)
+    } finally spark.conf.unset(sources.Enrichment.PathKey)
   }
 
   test("a rewritten burn_fee_area serves a fresh render of its new bytes") {
@@ -238,7 +249,7 @@ class DashboardSpec extends SparkSpec {
 
   test("bitcoin_block timestamp derives from the burnchain tip, not a constant") {
     val ts = doc \ "currentStatus" \ "current_block" \ "bitcoin_block" \ "timestamp"
-    val expect = Pipelines.chainTip(spark, sf)
+    val expect = Domain.chainTip(spark, sf)
       .select("tip_ts").head().getLong(0)
     assert(ts === JInt(BigInt(expect)))
   }

@@ -118,7 +118,7 @@ class EnrichmentSpec extends SparkSpec {
       val hi = graft.sources.PeerProbe.remoteHeight(spark, sf).head().getLong(0)
       assert(d.getString(0) === "main")
       assert(d.getLong(1) === hi && d.getLong(2) === hi)
-      val tipTs = Pipelines.chainTip(spark, sf).select("tip_ts").head().getLong(0)
+      val tipTs = Domain.chainTip(spark, sf).select("tip_ts").head().getLong(0)
       assert(d.getLong(3) === tipTs)
       // injected: the poller's document is relayed verbatim
       val dir = java.nio.file.Files.createTempDirectory("probe_info").toString
