@@ -111,11 +111,6 @@ object Domain {
   /** Bonus-era boundary (rpc.js:303 — stacks height < 8387). */
   val BonusBoundary: Long = 8387L
 
-  /** RR economics constants (utils.js:3-4, server.js:164). */
-  val BonusReward = 2466.0
-  val BaseReward = 1000.0
-  val GasSats = 35000.0
-
   /** Tip height + its burnchain timestamp (epoch seconds) from the
     * snapshots table — the ONE definition of "the chain tip" shared by the
     * dashboard's chain_tip cache relation and the peer-probe's derived

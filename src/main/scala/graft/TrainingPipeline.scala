@@ -57,8 +57,8 @@ object TrainingPipeline {
     Seq("train", "val", "test").foreach { sp =>
       val part = bySplit.filter(col("split") === sp).drop("split")
       if (!part.isEmpty) {
-        val n = Pipelines.writeClustered(part, "doc_id", 4, s"$outDir/$sp")
-        Pipelines.buildZoneMap(s, s"$outDir/$sp", "doc_id")
+        val n = writeClustered(part, "doc_id", 4, s"$outDir/$sp")
+        buildZoneMap(s, s"$outDir/$sp", "doc_id")
         if (sp == "train") trainFiles = n
       }
     }
@@ -74,6 +74,78 @@ object TrainingPipeline {
       nTest = cnt(col("split") === "test"),
       nTrainBins = packedTrain.select(col("source"), col("bin_idx")).distinct().count(),
       trainShardFiles = trainFiles)
+  }
+
+  /** CLUSTERED WRITE: range-partition on the key and sort within
+    * partitions before writing, so each output file covers a DISJOINT key
+    * range and rows inside a file are ordered. That is what makes parquet
+    * min/max statistics effective: a point or range predicate on the key
+    * prunes whole files/row-groups instead of scanning the corpus — the
+    * 100 TB layout discipline of matching data placement to the dominant
+    * predicate (the write-side counterpart of p1/p3's PushedFilters).
+    * repartitionByRange samples the key to build balanced range bounds, so
+    * skewed keys still give even file sizes. Returns the number of data
+    * files actually written — fewer than `nFiles` when the key has too
+    * few distinct values to fill every range (a caller sizing downstream
+    * work must not trust the request over the outcome). */
+  def writeClustered(df: DataFrame, key: String, nFiles: Int,
+                     outDir: String): Int = {
+    require(nFiles > 0, "nFiles must be positive")
+    df.repartitionByRange(nFiles, col(key))
+      .sortWithinPartitions(key)
+      .write.mode("overwrite").parquet(outDir)
+    dataFileCount(df.sparkSession, outDir)
+  }
+
+  /** Data-file count via the Hadoop FileSystem API, so the returned count
+    * (which the docstrings tell callers to trust over the requested
+    * nFiles) is right for ANY scheme — a java.io.File listing silently
+    * returns 0 for hdfs:// or s3a:// outDirs (ADVICE r5). */
+  private def dataFileCount(s: SparkSession, outDir: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(outDir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) 0
+    else fs.listStatus(p).count(st => st.isFile &&
+      st.getPath.getName.startsWith("part-") &&
+      st.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** ZONE MAP: one row per data file with the min/max of `key` — the
+    * manifest a scan planner consults to open only files intersecting a
+    * predicate range. Parquet footers already carry these stats, but at
+    * 100 TB with millions of files the planner-side cost is LISTING and
+    * opening every footer; a zone-map relation makes file pruning one
+    * metadata-sized read (what table formats call manifest pruning).
+    * Built in one scan, written under `_zonemap` (underscore-prefixed —
+    * invisible to normal parquet discovery of the same dir). Most useful
+    * over [[writeClustered]] output, where per-file ranges are disjoint
+    * and a range predicate touches few files. */
+  def buildZoneMap(s: SparkSession, dir: String, key: String): Unit =
+    s.read.parquet(dir)
+      .groupBy(input_file_name().as("file"))
+      .agg(min(col(key)).as("min_key"), max(col(key)).as("max_key"))
+      .write.mode("overwrite").parquet(s"$dir/_zonemap")
+
+  /** Range read through the zone map: read exactly the files whose
+    * [min, max] intersects [lo, hi], then apply the residual predicate.
+    * The only driver-side materialization is the matching FILE LIST
+    * (metadata-sized); non-matching files are never listed to the reader,
+    * never opened. Result rows are identical to a full-scan filter —
+    * IngestSpec proves equality and counts the files actually touched.
+    * This is the read contract of the `_zonemap` the shards of [[run]]
+    * ship with. FLAT layouts only: reading a hive-partitioned dir by file
+    * list would drop the partition columns — partitioned relations
+    * already have PartitionFilters pruning and don't need this path. */
+  def zoneMapRead(s: SparkSession, dir: String, key: String,
+                  lo: Long, hi: Long): DataFrame = {
+    val files = s.read.parquet(s"$dir/_zonemap")
+      .filter(col("max_key") >= lo && col("min_key") <= hi)
+      .select(col("file")).collect().map(_.getString(0))
+    if (files.isEmpty)
+      s.read.parquet(dir).filter(lit(false))
+    else
+      s.read.parquet(files.toIndexedSeq: _*)
+        .filter(col(key).between(lo, hi))
   }
 
   /** DATASET CARD — the datasheet a curated corpus ships with, assembled

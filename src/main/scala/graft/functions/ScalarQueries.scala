@@ -24,9 +24,9 @@ object ScalarQueries {
   /** F10/P9 — miner_info projection with rate-of-return economics
     * (utils.js:1-11, server.js:286-294): pure arithmetic on the leaderboard,
     * dimension join broadcast. The price/gas inputs come from the
-    * [[graft.sources.Enrichment]] one-row seam (S13–S15), joined broadcast —
-    * no literals in the expression; the zero-egress defaults reproduce the
-    * reference constants (BASELINE.md).
+    * [[graft.sources.Enrichment]] seam (S13–S15) — no constants in the
+    * expression; the zero-egress defaults reproduce the reference
+    * constants (BASELINE.md).
     *
     * RR reduces to an EXACT integer rational: earn·1000 = bonus·2466·stxM +
     * (win−bonus)·1000·stxM whole milli-units, cost numerator C·scale where
@@ -53,7 +53,11 @@ object ScalarQueries {
     }
 
   /** The rr economics of a commits relation and its winners: two
-    * partial-aggregated per-miner rollups joined at miner cardinality. */
+    * partial-aggregated per-miner rollups joined at miner cardinality.
+    * The seam's price values are read once, when the relation is built,
+    * and enter the plan as typed long literals: a relation built before a
+    * price change keeps the old values, and the plan holds no join to the
+    * prices row. */
   private[graft] def rrOf(s: SparkSession, d: String)(
       commits: DataFrame, winners: DataFrame): DataFrame = {
     val mined = commits
@@ -72,15 +76,16 @@ object ScalarQueries {
       .withColumn("actual_win_bonus", coalesce(col("actual_win_bonus"), lit(0L)))
       .withColumn("actual_win", col("total_win"))
     val sup = Tables.supplier(s, d).select(col("s_suppkey"), col("s_name"))
-    val earnMilli = col("actual_win_bonus") * 2466L * col("stx_price_milli") +
-      (col("actual_win") - col("actual_win_bonus")) * 1000L * col("stx_price_milli")
-    val costNum = (col("total_mined") * col("gas_sats") + col("miner_burned")) *
-      col("btc_sat_scale")
+    val p = graft.sources.Enrichment.current(s)
+    val stxMilli = lit(p.stxPriceMilli)
+    val earnMilli = col("actual_win_bonus") * 2466L * stxMilli +
+      (col("actual_win") - col("actual_win_bonus")) * 1000L * stxMilli
+    val costNum = (col("total_mined") * lit(p.gasSats) + col("miner_burned")) *
+      lit(p.btcSatScale)
     // shared exact half-up (negative rr floors toward -inf on both engines)
     val rrMilli = graft.functions.ExactRatio.scaled(
       earnMilli * 10L - costNum, costNum, 1000L)
     lb.join(broadcast(sup), lb("leader_key_address") === sup("s_suppkey"))
-      .crossJoin(broadcast(graft.sources.Enrichment.prices(s)))
       .select(
         col("s_name").as("stx_address"),
         concat(lit("btc:"), col("s_name")).as("btc_address"),

@@ -363,8 +363,8 @@ object Aggregations {
     * spec pins the histogram estimate within one bin width of the exact
     * quantile. */
   /** The a22 histogram STATE of an events slice: (day, bin, n) rows.
-    * Exposed as the unit Pipelines.mergeQuantileHist maintains
-    * incrementally (histogram states merge by keyed sum — commutative,
+    * Exposed as the unit [[graft.streaming.EventStream.mergeQuantileHist]]
+    * maintains incrementally (histogram states merge by keyed sum — commutative,
     * so stored + Δ == recompute exactly). The bin is clamped on BOTH
     * ends into [0, QMaxBin]: the lower clamp makes negative values —
     * where Spark's `div` (truncate toward zero) and DuckDB's `//`
@@ -453,7 +453,8 @@ object Aggregations {
   }
 
   /** A25 — SLIDING DISTINCT USERS OFF SKETCH STATE: a24's question
-    * answered from the mergeUserSketches store instead of the facts.
+    * answered from the [[graft.streaming.EventStream.mergeUserSketches]]
+    * store instead of the facts.
     * The per-day HLL sketches (the maintained state, ~kB/day) explode to
     * the ≤7 report days they feed (a23's trick at sketch grain) and a
     * register-max union per report day gives the trailing estimate — the

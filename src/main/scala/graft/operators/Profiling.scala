@@ -177,12 +177,13 @@ object Profiling {
     * per document. Every second-moment statistic — covariance, variance,
     * correlation, least-squares slope — is a pure function of this state,
     * and the state merges by KEYED ADDITION (the same commutative-merge
-    * family as mergeLeaderboard / mergeDebuts / mergeQuantileHist), so a
+    * family as [[graft.streaming.EventStream.mergeLeaderboard]] /
+    * [[graft.streaming.EventStream.mergeQuantileHist]]), so a
     * 100 TB corpus maintains regression-grade statistics incrementally:
     * each ingest batch contributes its local sums and history is never
     * rescanned. Sums ride DECIMAL(38,0), so per-row products up to ~10¹⁸
-    * and corpus sums up to 10³⁸ cannot overflow. Exposed for the
-    * merge-law spec and [[graft.Pipelines.mergeSuffStats]]. */
+    * and corpus sums up to 10³⁸ cannot overflow. Exposed for pr6's
+    * hand-computed fixture spec. */
   private[graft] def suffStatsState(docs: DataFrame): DataFrame = {
     import graft.functions.TextOps.toks
     val dec = "decimal(38,0)"

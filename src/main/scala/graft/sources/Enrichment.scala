@@ -9,9 +9,8 @@ import org.apache.spark.sql.types.StructType
   * a CONFIG-DRIVEN SEAM instead of baked-in literals (VERDICT r2 item 5).
   *
   * A deployment fetches whatever it fetches and drops the result where the
-  * seam reads it; every consumer joins the resulting ONE-ROW DataFrame
-  * (broadcast — never a shuffle) instead of embedding constants in its
-  * expressions. Resolution order:
+  * seam reads it; every consumer reads the values through [[current]]
+  * instead of embedding constants in its expressions. Resolution order:
   *
   *   1. `spark.graft.enrich.path` — a JSON file with the three fields
   *      (what a fetcher cron would write; the reference polls every 25 s,
@@ -66,13 +65,8 @@ object Enrichment {
     * has no equivalent of a stuck value, server.js:438-440). Conf/default
     * rows are configuration, not fetches: fetched_at is null, stale false. */
   def prices(s: SparkSession): DataFrame = {
-    val stx = confOr(s, StxMilliKey, DefaultStxMilli)
-    val btc = confOr(s, BtcScaleKey, DefaultBtcScale)
-    val gas = confOr(s, GasSatsKey, DefaultGasSats)
-    val hp = s.conf.getOption(HashPowerKey).getOrElse(DefaultHashPower)
+    val Prices(stx, btc, gas, hp) = configured(s)
     val ttl = confOr(s, TtlKey, DefaultTtlSec)
-    // a local relation: a collect of it is answered on the driver, so a
-    // dashboard read without a price file launches no Spark job
     val fallback = s.createDataFrame(
       java.util.List.of(Row(stx, btc, gas, hp, null)), fallbackSchema)
     val one = s.conf.getOption(PathKey) match {
@@ -96,6 +90,31 @@ object Enrichment {
         col("fetched_at") < unix_timestamp(current_timestamp()) - ttl,
         lit(false)))
   }
+
+  /** The four values a consumer applies: stx price (milli), the sats→usd
+    * cost scale, gas (sats) and the relayed hash power. */
+  final case class Prices(stxPriceMilli: Long, btcSatScale: Long,
+                          gasSats: Long, hashPower: String)
+
+  /** The seam's values, read on the driver. Without a price file they come
+    * from confs and defaults and no Dataset is built, so a reader pays no
+    * Catalyst query; with one, this is the live one-row [[prices]] read.
+    * Never memoize it: the fetcher rewrites the file on its own clock. */
+  def current(s: SparkSession): Prices = s.conf.getOption(PathKey) match {
+    case None => configured(s)
+    case Some(_) =>
+      val r = prices(s).select(col("stx_price_milli"), col("btc_sat_scale"),
+        col("gas_sats"), col("hash_power")).head()
+      Prices(r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))
+  }
+
+  /** The conf/default values: the fallback row of [[prices]] and the
+    * whole of [[current]] when no price file is set. */
+  private def configured(s: SparkSession): Prices = Prices(
+    confOr(s, StxMilliKey, DefaultStxMilli),
+    confOr(s, BtcScaleKey, DefaultBtcScale),
+    confOr(s, GasSatsKey, DefaultGasSats),
+    s.conf.getOption(HashPowerKey).getOrElse(DefaultHashPower))
 
   private def confOr(s: SparkSession, key: String, default: Long): Long =
     s.conf.getOption(key).map(_.toLong).getOrElse(default)

@@ -30,18 +30,6 @@ object EventStream {
       .select(col("window.start").as("hour_start"), col("event_type"),
         col("n_events"), col("value_cents"))
 
-  /** File-source stream over a DIRECTORY of events parquet files (the
-    * streaming source lists the directory for new files — a single-file
-    * path fails with "basePath must be a directory"). Schema must be
-    * declared for streaming sources; nanos surface as long per the session
-    * conf and convert to a timestamp here. */
-  def fromFiles(spark: SparkSession, eventsDir: String): DataFrame = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val raw = spark.readStream.schema(schema).parquet(eventsDir)
-    raw.withColumn("ts",
-      expr("cast(timestamp_micros(ts div 1000) as timestamp)"))
-  }
-
   /** Per-type incremental state carried across micro-batches. */
   case class TypeAgg(event_type: String, max_value: Double, n_events: Long)
 
@@ -371,7 +359,7 @@ object EventStream {
   }
 
   /** CONTINUOUS INCREMENTAL LEADERBOARD — the serving composition of
-    * Pipelines.mergeLeaderboard: each micro-batch of commits folds into
+    * [[mergeLeaderboard]]: each micro-batch of commits folds into
     * the stored leaderboard via the partial-agg merge, so the store is
     * always queryable and history is never rescanned (T1's cadence
     * without T1's full recompute). foreachBatch is AT-LEAST-once, so the
@@ -384,18 +372,19 @@ object EventStream {
     * commit. The store is key-cardinality rows — metadata-sized next to
     * the facts; for key spaces too large for a single rewrite, shard
     * each version with the bucketed dynamic-partition-overwrite pattern
-    * of refreshBlockInfoIncremental. */
+    * of [[graft.Pipelines.refreshBlockInfoIncremental]]. */
   def leaderboardRefresh(commits: DataFrame, storeDir: String,
                          checkpointDir: String,
                          trigger: Trigger = Trigger.ProcessingTime("120 seconds")): StreamingQuery =
     mergeRefresh(commits, storeDir, checkpointDir, LeaderboardSchema,
-      graft.Pipelines.mergeLeaderboard, trigger)
+      mergeLeaderboard, trigger)
 
   /** GENERIC versioned merge refresh — the leaderboard loop's contract
     * for ANY self-mergeable store: `merge(stored, delta)` must equal the
     * recompute over stored's inputs ∪ delta (the law every member of the
-    * merge family satisfies: mergeLeaderboard's count/sum,
-    * mergeDebuts' min, mergeQuantileHist's histogram addition). Each
+    * merge family satisfies: [[mergeLeaderboard]]'s count/sum,
+    * [[mergeQuantileHist]]'s histogram addition, [[mergeUserSketches]]'
+    * register-max union). Each
     * micro-batch folds into a NEW `v=<batchId>` directory; replayed
     * batch ids are skipped, the previous version survives until the new
     * one's `_SUCCESS`, older versions are pruned — so the store is
@@ -412,6 +401,61 @@ object EventStream {
         applyMergeBatch(batch, storeDir, batchId, schema, merge)
       }
       .start()
+
+  /** INCREMENTAL AGGREGATE MAINTENANCE: fold a delta of new commits into
+    * a stored (miner → total_mined, miner_burned) leaderboard without
+    * rescanning history — count and sum are self-mergeable partial
+    * aggregates, so the stored table IS the aggregation state and a
+    * refresh costs one small-side aggregation plus a keyed merge. This is
+    * the aggregate-level counterpart of
+    * [[graft.Pipelines.refreshBlockInfoIncremental]] (which maintains
+    * row-grain buckets): at 100 TB the full a1 recompute scans the corpus,
+    * while this scans only the delta. Works for any algebraic aggregate;
+    * avg/stddev would carry (sum, count) / (sum, sum², count) state the
+    * same way — max/min merge too, but support deletion only by
+    * recompute. PipelinesSpec proves merge(agg(old), delta) ==
+    * agg(old ∪ delta) exactly. */
+  def mergeLeaderboard(stored: DataFrame, delta: DataFrame): DataFrame = {
+    val dAgg = delta.groupBy(col("leader_key_address"))
+      .agg(count(lit(1)).as("d_mined"), sum(col("burn_fee")).as("d_burned"))
+    stored.join(dAgg, Seq("leader_key_address"), "full_outer")
+      .select(col("leader_key_address"),
+        (coalesce(col("total_mined"), lit(0L)) +
+          coalesce(col("d_mined"), lit(0L))).as("total_mined"),
+        (coalesce(col("miner_burned"), lit(0L)) +
+          coalesce(col("d_burned"), lit(0L))).as("miner_burned"))
+  }
+
+  /** INCREMENTAL QUANTILE-STATE MAINTENANCE — the histogram member of the
+    * merge family (counts/sums: [[mergeLeaderboard]]): fold a raw events
+    * delta into a stored (day, bin, n) histogram by keyed addition.
+    * Histogram states are COMMUTATIVE-mergeable, so stored + Δ equals the
+    * full recompute EXACTLY (spec-proven), and a22's per-day/global
+    * quantiles are read off the maintained state without ever rescanning
+    * history. State size: ≤ 201 rows per day regardless of volume or
+    * skew. */
+  def mergeQuantileHist(stored: DataFrame, delta: DataFrame): DataFrame =
+    stored.unionByName(graft.operators.Aggregations.histState(delta))
+      .groupBy(col("day"), col("bin"))
+      .agg(sum(col("n")).as("n"))
+
+  /** INCREMENTAL DISTINCT-USER SKETCH MAINTENANCE — the sketch member of
+    * the merge family, and the one that makes a19's "reaggregation
+    * without rescan" INCREMENTAL too: fold a raw events delta into a
+    * stored (day → HLL sketch binary) table. HLL register-max union is
+    * commutative, associative, and idempotent-per-observation, so
+    * stored ⊔ Δ equals the one-pass sketch REGISTER FOR REGISTER (same
+    * estimate, exactly — spec-proven incl. a parquet round-trip of the
+    * binary state). It never stores per-user rows: state is one ~kB
+    * sketch per day regardless of user cardinality, which is the 100 TB
+    * shape for "distinct users per day/week/all-time" — any coarser
+    * rollup is an hll_union_agg over the maintained rows. A day arriving
+    * in many batches folds correctly: same-day sketches union. */
+  def mergeUserSketches(stored: DataFrame, delta: DataFrame): DataFrame =
+    stored.unionByName(
+        delta.groupBy(col("ts").cast("date").as("day"))
+          .agg(hll_sketch_agg(col("user_id")).as("sk")))
+      .groupBy(col("day")).agg(hll_union_agg(col("sk")).as("sk"))
 
   /** One idempotent store update — exposed so the replay guarantee is
     * directly testable (applying the same batchId twice is a no-op). */
@@ -433,11 +477,11 @@ object EventStream {
   private[graft] def applyLeaderboardBatch(batch: DataFrame, storeDir: String,
                                            batchId: Long): Unit =
     applyMergeBatch(batch, storeDir, batchId, LeaderboardSchema,
-      graft.Pipelines.mergeLeaderboard)
+      mergeLeaderboard)
 
   private[graft] val SketchSchema = "day DATE, sk BINARY"
 
-  /** CONTINUOUS DISTINCT-USER SKETCH STORE — Pipelines.mergeUserSketches
+  /** CONTINUOUS DISTINCT-USER SKETCH STORE — [[mergeUserSketches]]
     * as a foreachBatch sink (the sketch member of the mergeRefresh
     * family): each micro-batch of events folds into the per-day HLL
     * store by register-max union, so "distinct users per day / week /
@@ -449,7 +493,7 @@ object EventStream {
   def sketchRefresh(events: DataFrame, storeDir: String, checkpointDir: String,
                     trigger: Trigger = Trigger.ProcessingTime("120 seconds")): StreamingQuery =
     mergeRefresh(events, storeDir, checkpointDir, SketchSchema,
-      graft.Pipelines.mergeUserSketches, trigger)
+      mergeUserSketches, trigger)
 
   /** Current per-day sketch store (estimate via hll_sketch_estimate). */
   def currentSketches(s: SparkSession, storeDir: String): DataFrame =
@@ -457,7 +501,7 @@ object EventStream {
 
   private[graft] val HistSchema = "day STRING, bin BIGINT, n BIGINT"
 
-  /** CONTINUOUS QUANTILE-HISTOGRAM STORE — Pipelines.mergeQuantileHist as
+  /** CONTINUOUS QUANTILE-HISTOGRAM STORE — [[mergeQuantileHist]] as
     * a foreachBatch sink (the histogram member of the mergeRefresh
     * family, completing the serving trio: counts → leaderboardRefresh,
     * distincts → sketchRefresh, quantiles → here): each micro-batch of
@@ -469,7 +513,7 @@ object EventStream {
   def histRefresh(events: DataFrame, storeDir: String, checkpointDir: String,
                   trigger: Trigger = Trigger.ProcessingTime("120 seconds")): StreamingQuery =
     mergeRefresh(events, storeDir, checkpointDir, HistSchema,
-      graft.Pipelines.mergeQuantileHist, trigger)
+      mergeQuantileHist, trigger)
 
   /** Current per-(day, bin) histogram store (quantile read: a22's rule). */
   def currentHist(s: SparkSession, storeDir: String): DataFrame =

@@ -94,8 +94,8 @@ class CoverageSpec extends SparkSpec {
     val empty = spark.emptyDataFrame.select(
       lit(null).cast("date").as("day"), lit(null).cast("binary").as("sk"))
       .filter(lit(false))
-    val state = Pipelines.mergeUserSketches(
-      Pipelines.mergeUserSketches(empty, ev.filter(split)), ev.filter(!split))
+    val state = streaming.EventStream.mergeUserSketches(
+      streaming.EventStream.mergeUserSketches(empty, ev.filter(split)), ev.filter(!split))
     val days = state.select(col("day")).distinct()
     val est = state
       .select(explode(sequence(lit(0), lit(6))).as("k"), col("day"), col("sk"))

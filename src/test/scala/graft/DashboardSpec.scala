@@ -191,6 +191,28 @@ class DashboardSpec extends SparkSpec {
     } finally spark.conf.unset(sources.Enrichment.PathKey)
   }
 
+  test("a read over an unchanged cache with no price file runs no Catalyst query") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = refreshed("graft_dash_queries")
+    val doc1 = Pipelines.dashboard(spark, dir)
+    val sc = spark.sparkContext
+    org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(sc, 10000L)
+    val queries = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        queries.incrementAndGet()
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        queries.incrementAndGet()
+    }
+    spark.listenerManager.register(l)
+    try {
+      assert(Pipelines.dashboard(spark, dir) === doc1)
+      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(sc, 10000L)
+    } finally spark.listenerManager.unregister(l)
+    assert(queries.get() === 0)
+  }
+
   test("a rewritten burn_fee_area serves a fresh render of its new bytes") {
     val dir = refreshed("graft_dash_rewrite")
     val before = Pipelines.dashboard(spark, dir)

@@ -44,6 +44,18 @@ class EnrichmentSpec extends SparkSpec {
     } finally clearConfs()
   }
 
+  test("rr economics apply the seam as literals: no nested-loop join in the plan") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    clearConfs()
+    val rr = functions.ScalarQueries.rrLeaderboard(None)(spark, sf)
+    assert(rr.collect().nonEmpty)
+    val plan = rr.queryExecution.executedPlan
+    assert(Plans.find(plan)(_.isInstanceOf[BroadcastNestedLoopJoinExec]).isEmpty,
+      s"nested-loop join in:\n$plan")
+  }
+
   test("an empty enrichment file falls back to the default ROW, never empty") {
     clearConfs()
     val dir = java.nio.file.Files.createTempDirectory("enrich_empty").toString

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** JSONL landing edge + parquet compaction — the ingest/maintenance
-  * infrastructure around the query layers. */
+/** JSONL landing edge, schema evolution and the doc_id-clustered,
+  * zone-mapped shard layout of [[TrainingPipeline]] — the ingest and
+  * layout infrastructure around the query layers. */
 class IngestSpec extends SparkSpec {
 
   private def tmpDir(tag: String): java.nio.file.Path = {
@@ -59,33 +60,10 @@ class IngestSpec extends SparkSpec {
     assert(groups.count() === 1 && groups.head().getLong(1) === 2L)
   }
 
-  test("compact merges a many-small-file layout to the byte-derived count") {
-    val in = tmpDir("cin").resolve("t").toString
-    val out = tmpDir("cout").resolve("t").toString
-    Tables.documents(spark, sf).repartition(16)
-      .write.mode("overwrite").parquet(in)
-    def dataFiles(p: String) =
-      new java.io.File(p).listFiles.filter(f =>
-        f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-    assert(dataFiles(in).length === 16, "fixture should start fragmented")
-    val totalBytes = dataFiles(in).map(_.length).sum
-    // target = everything in one file
-    val n1 = Pipelines.compact(spark, in, out, totalBytes * 2)
-    assert(n1 === 1 && dataFiles(out).length === 1)
-    // content survives byte-identically (row multiset)
-    val a = spark.read.parquet(in); val b = spark.read.parquet(out)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    // a finer target yields proportionally more files
-    val out2 = tmpDir("cout2").resolve("t").toString
-    val n2 = Pipelines.compact(spark, in, out2, math.max(1L, totalBytes / 4))
-    assert(n2 >= 4 && n2 <= 6, s"expected ~5 target files, got $n2")
-    assert(dataFiles(out2).length === math.min(n2, 16))
-  }
-
   test("writeClustered lays out disjoint, internally sorted key ranges") {
     val out = tmpDir("clus").resolve("t").toString
     val docs = Tables.documents(spark, sf)
-    Pipelines.writeClustered(docs, "doc_id", 4, out)
+    TrainingPipeline.writeClustered(docs, "doc_id", 4, out)
     val files = new java.io.File(out).listFiles
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
     assert(files.length >= 2, "range partitioning should emit multiple files")
@@ -105,77 +83,16 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === docs.count())
   }
 
-  test("writeZClustered bounds BOTH key dimensions per file; single-key clustering does not") {
-    val rows = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_suppkey", "l_quantity")
-    def fileRanges(dir: String): Array[(Long, Long, Long, Long)] =
-      new java.io.File(dir).listFiles
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-        .map { f =>
-          val r = spark.read.parquet(f.toString)
-            .agg(min("l_orderkey"), max("l_orderkey"),
-              min("l_suppkey"), max("l_suppkey")).head()
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-        }
-    val glob = rows.agg(min("l_orderkey"), max("l_orderkey"),
-      min("l_suppkey"), max("l_suppkey")).head()
-    val (gAspan, gBspan) =
-      (glob.getLong(1) - glob.getLong(0), glob.getLong(3) - glob.getLong(2))
-    val zOut = tmpDir("zclus").resolve("t").toString
-    val n = Pipelines.writeZClustered(rows, "l_orderkey", "l_suppkey", 16, zOut)
-    assert(n >= 8, s"expected a multi-file layout, got $n")
-    val zr = fileRanges(zOut)
-    def avgSpan(spans: Array[Long]) = spans.sum.toDouble / spans.length
-    val (zA, zB) = (avgSpan(zr.map(r => r._2 - r._1)),
-      avgSpan(zr.map(r => r._4 - r._3)))
-    // every file is a bounded rectangle: both dims well under the corpus span
-    assert(zA < 0.75 * gAspan, s"orderkey span $zA vs $gAspan")
-    assert(zB < 0.75 * gBspan, s"suppkey span $zB vs $gBspan")
-    // the single-key layout leaves the second dimension unbounded per file
-    val cOut = tmpDir("zclusc").resolve("t").toString
-    Pipelines.writeClustered(rows, "l_orderkey", 16, cOut)
-    val cB = avgSpan(fileRanges(cOut).map(r => r._4 - r._3))
-    assert(zB < cB, s"z-order suppkey span $zB not tighter than clustered $cB")
-    // content survives
-    assert(spark.read.parquet(zOut).count() === rows.count())
-  }
-
-  test("writeZClusteredN over 3 keys bounds all three dimensions per file") {
-    val rows = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_suppkey", "l_partkey")
-    val ks = Seq("l_orderkey", "l_suppkey", "l_partkey")
-    val out = tmpDir("z3").resolve("t").toString
-    val n = Pipelines.writeZClusteredN(rows, ks, 27, out)
-    assert(n >= 8, s"expected a multi-file layout, got $n")
-    val glob = rows.agg(max(ks(0)), max(ks(1)), max(ks(2)),
-      min(ks(0)), min(ks(1)), min(ks(2))).head()
-    val files = new java.io.File(out).listFiles
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-    val spans = files.map { f =>
-      val r = spark.read.parquet(f.toString)
-        .agg(max(ks(0)) - min(ks(0)), max(ks(1)) - min(ks(1)),
-          max(ks(2)) - min(ks(2))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    def avg(xs: Array[Long]) = xs.sum.toDouble / xs.length
-    for (i <- 0 until 3) {
-      val gSpan = glob.getLong(i) - glob.getLong(i + 3)
-      val fSpan = avg(spans.map(s => Seq(s._1, s._2, s._3)(i)))
-      assert(fSpan < 0.8 * gSpan, s"${ks(i)}: per-file span $fSpan vs corpus $gSpan")
-    }
-    assert(spark.read.parquet(out).count() === rows.count())
-  }
-
   test("zone-map read equals the full-scan filter while touching fewer files") {
     val out = tmpDir("zonemap").resolve("t").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    val nFiles = Pipelines.writeClustered(docs, "doc_id", 8, out)
+    val nFiles = TrainingPipeline.writeClustered(docs, "doc_id", 8, out)
     assert(nFiles >= 4)
-    Pipelines.buildZoneMap(spark, out, "doc_id")
+    TrainingPipeline.buildZoneMap(spark, out, "doc_id")
     // zone map is invisible to a normal read of the same dir
     assert(spark.read.parquet(out).count() === docs.count())
     val (lo, hi) = (10L, 40L)
-    val pruned = Pipelines.zoneMapRead(spark, out, "doc_id", lo, hi)
+    val pruned = TrainingPipeline.zoneMapRead(spark, out, "doc_id", lo, hi)
     val full = spark.read.parquet(out).filter(col("doc_id").between(lo, hi))
     assert(pruned.exceptAll(full).count() === 0L)
     assert(full.exceptAll(pruned).count() === 0L)
@@ -184,42 +101,9 @@ class IngestSpec extends SparkSpec {
       .filter(col("max_key") >= lo && col("min_key") <= hi).count()
     assert(touched < nFiles, s"expected pruning, touched $touched of $nFiles")
     // an empty range reads zero files and zero rows, schema intact
-    val none = Pipelines.zoneMapRead(spark, out, "doc_id", -100L, -50L)
+    val none = TrainingPipeline.zoneMapRead(spark, out, "doc_id", -100L, -50L)
     assert(none.count() === 0L)
     assert(none.columns.toSet === Set("doc_id", "text"))
-  }
-
-  test("zone-map join equals the plain join; empty and duplicate dims behave") {
-    val sp = spark; import sp.implicits._
-    val out = tmpDir("zmjoin").resolve("t").toString
-    val docs = Tables.documents(spark, sf).select("doc_id", "text")
-    Pipelines.writeClustered(docs, "doc_id", 8, out)
-    Pipelines.buildZoneMap(spark, out, "doc_id")
-    // dim with duplicate keys, keys missing from the fact, and a narrow range
-    val dim = Seq(12L -> "a", 12L -> "b", 30L -> "c", -5L -> "ghost")
-      .toDF("k", "tag")
-    val got = Pipelines.zoneMapJoin(spark, out, "doc_id", dim, "k")
-    val want = spark.read.parquet(out).join(dim, col("doc_id") === col("k"))
-    assert(got.exceptAll(want).count() === 0L)
-    assert(want.exceptAll(got).count() === 0L)
-    // duplicates fan out like any join: 12 matched twice
-    assert(got.filter(col("doc_id") === 12L).count() === 2L)
-    // an empty dim yields an empty result with the joined schema, no error
-    val empty = Pipelines.zoneMapJoin(
-      spark, out, "doc_id", dim.filter(lit(false)), "k")
-    assert(empty.count() === 0L)
-    assert(empty.columns.toSet === Set("doc_id", "text", "k", "tag"))
-  }
-
-  test("writeZClusteredN rejects null keys loudly") {
-    val withNulls = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"),
-        when(col("l_linenumber") === 1, null).otherwise(col("l_suppkey"))
-          .as("l_suppkey"))
-    intercept[IllegalArgumentException] {
-      Pipelines.writeZClustered(withNulls, "l_orderkey", "l_suppkey", 8,
-        tmpDir("znull").resolve("t").toString)
-    }
   }
 
   test("readEvolved surfaces columns added by later schema versions, nulls backfilled") {
@@ -262,17 +146,5 @@ class IngestSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(diff === Set(("lang", "added"), ("text", "removed"), ("score", "retyped")))
     assert(sources.JsonlIngest.schemaDiff(spark, v1, v1).count() === 0L)
-  }
-
-  test("compact refuses overlapping input/output paths") {
-    val in = tmpDir("cguard").resolve("t").toString
-    Tables.documents(spark, sf).limit(10)
-      .write.mode("overwrite").parquet(in)
-    // in-place overwrite would delete the input mid-scan; nested output
-    // would double-count bytes on the next run (recursive content summary)
-    for (out <- Seq(in, s"$in/nested", new java.io.File(in).getParent))
-      intercept[IllegalArgumentException] {
-        Pipelines.compact(spark, in, out, 1L << 20)
-      }
   }
 }

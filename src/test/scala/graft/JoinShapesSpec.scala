@@ -283,6 +283,12 @@ class JoinShapesSpec extends SparkSpec {
       reg.head.getDate(0).toLocalDate, reg.last.getDate(0).toLocalDate)
     assert(reg.length === span + 1)
     assert(reg.take(operators.Profiling.EwmaHorizon).forall(!_.getBoolean(3)))
+    // the monitor reads the (day, n_events) counts alone: fed the daily
+    // counts computed directly from the events, it equals registered pr8
+    val daily0 = Tables.events(spark, sf)
+      .groupBy(col("ts").cast("date").as("day")).agg(count(lit(1)).as("n_events"))
+    assert(operators.Profiling.ewmaSpikes(daily0).collect().map(_.toString).toSeq ===
+      reg.map(_.toString).toSeq)
   }
 
   test("pr9 mad: planted fixtures pin type-1 medians, zero-MAD, outliers; brute-force agrees") {
@@ -343,25 +349,6 @@ class JoinShapesSpec extends SparkSpec {
       n - byMod.getOrElse(3L, 0L) - byMod.getOrElse(7L, 0L))
   }
 
-  test("mergeDailyCounts: stored + delta equals the full recompute; pr8 reads off state") {
-    val ev = Tables.events(spark, sf)
-    val split = col("event_id") % 3 === 0
-    val merged = Pipelines.mergeDailyCounts(
-      Pipelines.mergeDailyCounts(
-        spark.emptyDataFrame.select(lit(null).cast("date").as("day"),
-          lit(null).cast("long").as("n_events")).filter(lit(false)),
-        ev.filter(split)),
-      ev.filter(!split))
-    val full = ev.groupBy(col("ts").cast("date").as("day"))
-      .agg(count(lit(1)).as("n_events"))
-    assert(merged.exceptAll(full).count() === 0L)
-    assert(full.exceptAll(merged).count() === 0L)
-    // the monitoring battery reads the state, not history
-    val viaState = operators.Profiling.ewmaSpikes(merged).collect()
-    val direct = q("pr8_ewma_spike").collect()
-    assert(viaState.map(_.toString).toSeq === direct.map(_.toString).toSeq)
-  }
-
   test("mergeUserSketches: stored + delta == one-pass sketch exactly, through parquet") {
     val ev = Tables.events(spark, sf)
     val split = col("event_id") % 3 === 0
@@ -371,9 +358,9 @@ class JoinShapesSpec extends SparkSpec {
     // two-batch fold, with the intermediate state persisted to parquet —
     // the store must survive its own serialization, not just a lineage
     val dir = java.nio.file.Files.createTempDirectory("sketchstate").toString
-    Pipelines.mergeUserSketches(empty, ev.filter(split))
+    streaming.EventStream.mergeUserSketches(empty, ev.filter(split))
       .write.mode("overwrite").parquet(dir)
-    val merged = Pipelines.mergeUserSketches(
+    val merged = streaming.EventStream.mergeUserSketches(
       spark.read.parquet(dir), ev.filter(!split))
     // register-for-register: per-day estimates equal the one-pass sketch
     val viaState = merged.select(col("day"),
@@ -384,7 +371,7 @@ class JoinShapesSpec extends SparkSpec {
     assert(onePass.exceptAll(viaState).count() === 0L)
     // same-day re-fold is a union, not a double count: folding batch A
     // twice changes nothing (HLL observation idempotence)
-    val refold = Pipelines.mergeUserSketches(merged, ev.filter(split))
+    val refold = streaming.EventStream.mergeUserSketches(merged, ev.filter(split))
       .select(col("day"), hll_sketch_estimate(col("sk")).as("est"))
     assert(refold.exceptAll(viaState).count() === 0L)
     // any coarser rollup reads off the maintained state: the all-time

@@ -140,46 +140,10 @@ class PropertiesSpec extends AnyFunSuite {
   }
 }
 
-/** Property suites for the round-5 layout and join-strategy primitives,
-  * each checked against an independent pure-Scala reference model. */
+/** Property suite for the round-5 bloom-filter join primitive, checked
+  * against random member and non-member keysets. */
 class LayoutAndBloomPropsSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
-
-  /** Reference Morton spread: bit k of x moves to bit stride·k. */
-  private def spreadRef(x: Long, stride: Int): Long =
-    (0 until 16).map(k => ((x >> k) & 1L) << (stride * k)).sum
-
-  test("spread16 matches the bit-by-bit reference model and interleaves injectively") {
-    val ss = spark
-    import ss.implicits._
-    val rnd = new scala.util.Random(47)
-    val xs = (0L until 256L) ++ Seq(65535L, 32768L, 0xAAAAL, 0x5555L) ++
-      Seq.fill(200)(math.abs(rnd.nextLong()) % 65536L)
-    val got = xs.toDF("x")
-      .select(col("x"), Pipelines.spread16(col("x")).as("z2"),
-        Pipelines.spread16x3(col("x")).as("z3"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    got.foreach { case (x, z2, z3) =>
-      assert(z2 === spreadRef(x, 2), s"stride2 x=$x")
-      assert(z3 === spreadRef(x, 3), s"stride3 x=$x")
-    }
-    // full 2-D injectivity: interleave of (a, b) collides only on equal pairs
-    val pairs = for (a <- 0L until 64L; b <- 0L until 64L) yield (a, b)
-    val zs = pairs.toDF("a", "b")
-      .select(Pipelines.spread16(col("a"))
-        .bitwiseOR(shiftleft(Pipelines.spread16(col("b")), 1)).as("z"))
-      .collect().map(_.getLong(0))
-    assert(zs.distinct.length === pairs.length)
-    // 3-D injectivity over a smaller cube
-    val triples = for (a <- 0L until 16L; b <- 0L until 16L; c <- 0L until 16L)
-      yield (a, b, c)
-    val z3s = triples.toDF("a", "b", "c")
-      .select(Pipelines.spread16x3(col("a"))
-        .bitwiseOR(shiftleft(Pipelines.spread16x3(col("b")), 1))
-        .bitwiseOR(shiftleft(Pipelines.spread16x3(col("c")), 2)).as("z"))
-      .collect().map(_.getLong(0))
-    assert(z3s.distinct.length === triples.length)
-  }
 
   test("bloom filter: zero false negatives on random keysets, bounded false positives") {
     val ss = spark

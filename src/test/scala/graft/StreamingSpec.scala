@@ -350,7 +350,7 @@ class PipelinesSpec extends SparkSpec {
     val ev = Tables.events(spark, sf)
     val old = ev.filter(col("event_id") % 3 =!= 0)
     val delta = ev.filter(col("event_id") % 3 === 0)
-    val merged = Pipelines.mergeQuantileHist(
+    val merged = EventStream.mergeQuantileHist(
       operators.Aggregations.histState(old), delta)
     val full = operators.Aggregations.histState(ev)
     assert(merged.orderBy("day", "bin").collect().toSeq ===
@@ -373,7 +373,7 @@ class PipelinesSpec extends SparkSpec {
     def run(): Unit = {
       val q = EventStream.mergeRefresh(ms.toDF.toDF("ts", "value"),
         s"$root/store", s"$root/ckpt", histSchema,
-        Pipelines.mergeQuantileHist,
+        EventStream.mergeQuantileHist,
         org.apache.spark.sql.streaming.Trigger.AvailableNow())
       q.awaitTermination(); ()
     }
@@ -389,35 +389,6 @@ class PipelinesSpec extends SparkSpec {
         sp.createDataFrame(c1.toIndexedSeq).toDF("ts", "value"))))
   }
 
-  test("mergeSuffStats: stored + delta == full recompute, pr6 reads off the state") {
-    val docs = Tables.documents(spark, sf)
-    val old = docs.filter(col("doc_id") % 3 =!= 0)
-    val delta = docs.filter(col("doc_id") % 3 === 0)
-    val merged = Pipelines.mergeSuffStats(
-      operators.Profiling.suffStatsState(old), delta)
-    val full = operators.Profiling.suffStatsState(docs)
-    assert(merged.orderBy("lang").collect().toSeq ===
-      full.orderBy("lang").collect().toSeq)
-  }
-
-  test("mergeDebuts: stored first-seen + delta equals the full recompute") {
-    val secs = Tables.events(spark, sf)
-      .select(col("user_id"),
-        expr("unix_micros(cast(ts as timestamp)) div 1000000").as("ts_sec"))
-    val cutoff = secs.agg(expr("percentile_approx(ts_sec, 0.5)")).head().getLong(0)
-    def debuts(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy(col("user_id")).agg(min(col("ts_sec")).as("first_seen"))
-    val stored = debuts(secs.filter(col("ts_sec") <= cutoff))
-    val delta = secs.filter(col("ts_sec") > cutoff)
-    val merged = Pipelines.mergeDebuts(stored, delta)
-    val full = debuts(secs)
-    assert(merged.exceptAll(full).isEmpty && full.exceptAll(merged).isEmpty)
-    // delta-only users appear; both-sides users keep the older debut;
-    // an empty delta is a no-op
-    val noop = Pipelines.mergeDebuts(full, delta.filter(lit(false)))
-    assert(noop.exceptAll(full).isEmpty && full.exceptAll(noop).isEmpty)
-  }
-
   test("mergeLeaderboard: stored state + delta equals the full recompute") {
     val commits = Domain.commits(spark, sf)
     val cut = 500L
@@ -427,11 +398,11 @@ class PipelinesSpec extends SparkSpec {
           sum(col("burn_fee")).as("miner_burned"))
     val stored = aggOf(commits.filter(col("stacks_block_height") <= cut))
     val delta = commits.filter(col("stacks_block_height") > cut)
-    val merged = Pipelines.mergeLeaderboard(stored, delta)
+    val merged = EventStream.mergeLeaderboard(stored, delta)
     val full = aggOf(commits)
     assert(merged.exceptAll(full).isEmpty && full.exceptAll(merged).isEmpty)
     // an empty delta is a no-op
-    val noop = Pipelines.mergeLeaderboard(full, delta.filter(lit(false)))
+    val noop = EventStream.mergeLeaderboard(full, delta.filter(lit(false)))
     assert(noop.exceptAll(full).isEmpty && full.exceptAll(noop).isEmpty)
   }
 
