@@ -27,7 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * under `dir` at build time — [[Tables.fingerprint]], the same
   * (path, length, mtime) listing the relation resolver keys on — so the
   * rule for when cached state goes stale lives in `Tables`, and the
-  * mechanism lives here:
+  * mechanism lives here ([[valueAt]] takes a store version instead):
   *   - a call whose source fingerprint differs from the entry's rebuilds,
   *     and the new entry REPLACES the old one (a source restamped every
   *     refresh holds one entry, not one per stamp);
@@ -60,8 +60,7 @@ object Memo {
 
   /** What one (session, dir, tag) holds: the source path, the fingerprint
     * it was built at and the built value. */
-  private final class Entry(val source: String, val fingerprint: Seq[(String, Long, Long)],
-                            val value: Any)
+  private final class Entry(val source: String, val fingerprint: Any, val value: Any)
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Entry]()
@@ -134,10 +133,16 @@ object Memo {
     * to land wins unless the second saw a newer source. Bench/Verify run
     * queries sequentially, and correctness is unaffected either way. */
   def value[T](s: SparkSession, dir: String, tag: String, srcFile: String)(
-      compute: => T): T = {
+      compute: => T): T =
+    valueAt(s, dir, tag, srcFile, Tables.fingerprint(s, s"$dir/$srcFile"))(compute)
+
+  /** [[value]] with the fingerprint `fp` of `srcFile` given by the caller
+    * instead of listed: a committed [[Versions]] version never changes, so
+    * its number is the fingerprint, and a hit lists nothing. */
+  def valueAt[T](s: SparkSession, dir: String, tag: String, srcFile: String,
+                 fp: Any)(compute: => T): T = {
     cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val source = s"$dir/$srcFile"
-    val fp = Tables.fingerprint(s, source)
     val key = (s, dir, tag)
     val hit = cache.get(key)
     val entry =

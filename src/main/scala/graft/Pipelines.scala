@@ -4,77 +4,67 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** M6 — serving/cache parity (SURVEY.md §3.1, §7.2): the reference's
-  * update() cycle recomputes every dashboard key and overwrites it in
-  * Redis wholesale (server.js:280-331); here the same nine relations land
-  * as parquet directories, overwritten idempotently — re-runnable on a
-  * timer, readers never touch the source tables (the read path is
+  * update() cycle recomputes every dashboard key and publishes each with
+  * one Redis SET (server.js:280-331); here the same nine relations land
+  * as one committed [[Versions]] version of the cache dir, re-runnable on
+  * a timer, and readers never touch the source tables (the read path is
   * O(cache)).
+  *
+  * Relation `r` of version `n` lives at `<cacheDir>/r/v=<n>`. A read
+  * looks the version up once and renders every relation at it, opening
+  * its path directly: a committed version never changes and is opened
+  * once, inside a memoized render, so a [[Tables]] resolver entry per
+  * version would buy nothing and grow without bound.
   *
   * Cache relations are written UNORDERED. Every serving read imposes its
   * own total order, so a sort before the write would buy nothing; the
   * presentation order lives in the query registry (a1, j8, a8, w5, f10)
   * and in [[operators.Windows.gapfill]] / [[functions.ScalarQueries.rrMinerInfo]].
   *
-  * At 100 TB: each cache write is `overwrite` of a small AGGREGATED result
+  * At 100 TB: each cache write is a small AGGREGATED result
   * (leaderboard ≈ #miners, chain ≈ #heights in range, rollup ≈ #heights) —
   * the big fact table never gets copied, only scanned.
   */
 object Pipelines {
 
-  /** The update() cycle: recompute every dashboard relation and overwrite
-    * the cache dir (the reference recomputes all Redis keys per tick,
-    * server.js:280-331). Idempotent — same contract as the whole-key Redis
-    * SET. block_info (the only per-height relation) is partitioned by
-    * height bucket (SURVEY §7.6): readers with a height range prune
-    * partitions, and dynamic partition overwrite lets an incremental
-    * refresh rewrite only the buckets that changed instead of the whole
-    * relation. Every relation here is aggregate-sized (≈ #miners or
-    * #heights-in-window rows), never a copy of the fact table. */
-  def refreshCache(s: SparkSession, sfDir: String, cacheDir: String): Unit = {
-    def put(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").parquet(s"$cacheDir/$name")
-    // miner_info: P9 projection of A1+A2+A4 (rpc.js:430-445)
-    put(operators.Aggregations.minerLeaderboard(s, sfDir), "miner_info")
-    // mining_info: P10, the canonical winner per height (rpc.js:447-457)
-    put(operators.RelationalCore.winnerCommits(s, sfDir), "mining_info")
-    // block_info: the A8 per-height rollup (rpc.js:463-487)
-    operators.Aggregations.blockRollup(s, sfDir)
-      .withColumn("height_bucket", (col("stacks_block_height") / 1000L).cast("long"))
-      .write.mode("overwrite")
-      .partitionBy("height_bucket")
-      .parquet(s"$cacheDir/block_info")
-    // dashboard composition relations (VERDICT r2 item 2)
-    put(operators.Windows.gapfillSeries(1000L)(s, sfDir), "burn_fee_area")
-    put(functions.ScalarQueries.rrLeaderboard(None)(s, sfDir), "miner_info_rr")
-    put(functions.ScalarQueries.rrLeaderboard(Some(1000L))(s, sfDir), "miner_info_rr_1000")
-    put(functions.ScalarQueries.rrLeaderboard(Some(100L))(s, sfDir), "miner_info_rr_100")
-    put(operators.Aggregations.queries("a9_btc_total")(s, sfDir), "btc_total")
-    put(Domain.chainTip(s, sfDir), "chain_tip")
+  /** The update() cycle: recompute every dashboard relation and publish
+    * them as the cache's next version (the reference recomputes all Redis
+    * keys per tick, server.js:280-331). Idempotent — same contract as the
+    * whole-key Redis SET. Every relation here is aggregate-sized (≈ #miners
+    * or #heights-in-window rows), never a copy of the fact table. */
+  def refreshCache(s: SparkSession, sfDir: String, cacheDir: String): Unit =
+    publish(s, cacheDir, Seq(
+      // miner_info: P9 projection of A1+A2+A4 (rpc.js:430-445)
+      "miner_info" -> operators.Aggregations.minerLeaderboard(s, sfDir),
+      // mining_info: P10, the canonical winner per height (rpc.js:447-457)
+      "mining_info" -> operators.RelationalCore.winnerCommits(s, sfDir),
+      // block_info: the A8 per-height rollup (rpc.js:463-487)
+      "block_info" -> operators.Aggregations.blockRollup(s, sfDir),
+      // dashboard composition relations (VERDICT r2 item 2)
+      "burn_fee_area" -> operators.Windows.gapfillSeries(1000L)(s, sfDir),
+      "miner_info_rr" -> functions.ScalarQueries.rrLeaderboard(None)(s, sfDir),
+      "miner_info_rr_1000" -> functions.ScalarQueries.rrLeaderboard(Some(1000L))(s, sfDir),
+      "miner_info_rr_100" -> functions.ScalarQueries.rrLeaderboard(Some(100L))(s, sfDir),
+      "btc_total" -> operators.Aggregations.queries("a9_btc_total")(s, sfDir),
+      "chain_tip" -> Domain.chainTip(s, sfDir)))
+
+  /** Write `relations` as version `n` = the newest committed chain_tip
+    * version + 1 (1 in an empty dir), chain_tip last so that its commit
+    * commits `n`, then prune each below `n - 1` ([[Versions]]). A crashed
+    * tick's uncommitted `v=<n>` was never read, and is overwritten. */
+  private[graft] def publish(s: SparkSession, cacheDir: String,
+                             relations: Seq[(String, DataFrame)]): Unit = {
+    val prev = Versions.latest(s, s"$cacheDir/chain_tip")
+    val n = prev.fold(1L)(_ + 1)
+    relations.sortBy(_._1 == "chain_tip").foreach { case (name, df) =>
+      df.write.mode("overwrite").parquet(Versions.path(s"$cacheDir/$name", n)) }
+    prev.foreach(p => relations.foreach(r => Versions.prune(s, s"$cacheDir/${r._1}", p)))
   }
 
-  /** Incremental refresh of the block_info cache: recompute ONLY heights ≥
-    * fromHeight and dynamically overwrite just the height buckets they land
-    * in — untouched buckets' files are left as-is. This is the T2-style
-    * trailing refresh at scale: the 120 s cycle rewrites the tip bucket,
-    * not the whole history. Requires partitionOverwriteMode=dynamic (set
-    * per-write here, not globally). */
-  def refreshBlockInfoIncremental(s: SparkSession, sfDir: String,
-                                  cacheDir: String, fromHeight: Long): Unit = {
-    operators.Aggregations.blockRollup(s, sfDir)
-      // refresh from the START of fromHeight's bucket: dynamic overwrite
-      // replaces whole partitions, so a mid-bucket threshold would rewrite
-      // the straddled bucket with only its upper half and drop the rest
-      .filter(col("stacks_block_height") >= (fromHeight / 1000L) * 1000L)
-      .withColumn("height_bucket", (col("stacks_block_height") / 1000L).cast("long"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("height_bucket")
-      .parquet(s"$cacheDir/block_info")
-    // the tip moved, so its timestamp did too — an incremental cycle must
-    // keep chain_tip current or the dashboard would pair a new
-    // block_height with an older tip's timestamp (self-review r4)
-    Domain.chainTip(s, sfDir).write.mode("overwrite").parquet(s"$cacheDir/chain_tip")
-  }
+  /** The newest committed cache version; fails descriptively without one. */
+  private def version(s: SparkSession, cacheDir: String): Long =
+    Versions.latest(s, s"$cacheDir/chain_tip").getOrElse(throw new IllegalArgumentException(
+      s"dashboard: $cacheDir has no chain_tip relation — re-run refreshCache (cache layout predates the derived tip timestamp)"))
 
   /** Full-series burnFeeArea page (VERDICT r5 item 5): the reference's
     * burnFeeArea emits EVERY miner's series (mining_monitor_rpc.js:46-113);
@@ -87,9 +77,13 @@ object Pipelines {
     * exist or how deep the cursor sits. A page shorter than `pageSize`
     * means the walk is complete. */
   def burnFeeAreaPage(s: SparkSession, cacheDir: String,
-                      after: Option[(Long, Long)], pageSize: Int): DataFrame = {
+                      after: Option[(Long, Long)], pageSize: Int): DataFrame =
+    areaPage(s, cacheDir, version(s, cacheDir), after, pageSize)
+
+  private def areaPage(s: SparkSession, cacheDir: String, n: Long,
+                       after: Option[(Long, Long)], pageSize: Int): DataFrame = {
     require(pageSize > 0, "pageSize must be positive")
-    val area = Tables.parquet(s, s"$cacheDir/burn_fee_area")
+    val area = s.read.parquet(Versions.path(s"$cacheDir/burn_fee_area", n))
       .select(col("address"), col("height"), col("cum_filled"))
     val page = after match {
       case Some((a, h)) => area.filter(col("address") > a ||
@@ -103,17 +97,18 @@ object Pipelines {
     * point shape plus a `next` cursor (the page's last key, or null when
     * the walk is done). The only collect is the page itself.
     *
-    * Rendered once per version of the burn_fee_area relation, like the
-    * reference's Redis value that every REST read GETs (server.js:47-125):
-    * the page is a [[Memo.value]] on that relation, tagged by cursor and
-    * page size, so a read over unchanged bytes costs one listing of the
-    * relation and no Spark job. The rewrite of a refresh makes the next
-    * read render again, and retires the pages rendered from the old bytes. */
+    * Rendered once per cache version, like the reference's Redis value
+    * that every REST read GETs (server.js:47-125): the page is a
+    * [[Memo.valueAt]] on the burn_fee_area relation at the version, tagged
+    * by cursor and page size, so a read over an unchanged cache costs one
+    * version lookup and no Spark job. A refresh's new version makes the
+    * next read render again, and retires the pages of the old one. */
   def burnFeeAreaPageJson(s: SparkSession, cacheDir: String,
                           after: Option[(Long, Long)], pageSize: Int): String = {
     val cursor = after.fold("start") { case (a, h) => s"$a:$h" }
-    Memo.value(s, cacheDir, s"area_page:$cursor:$pageSize", "burn_fee_area") {
-      val rows = burnFeeAreaPage(s, cacheDir, after, pageSize)
+    val n = version(s, cacheDir)
+    Memo.valueAt(s, cacheDir, s"area_page:$cursor:$pageSize", "burn_fee_area", n) {
+      val rows = areaPage(s, cacheDir, n, after, pageSize)
         .collect()
       val pts = rows.map(r =>
         s"""{"height":${r.getLong(1)},"burn_fee":${r.getLong(2)},"address":${r.getLong(0)}}""")
@@ -154,26 +149,19 @@ object Pipelines {
     *   - rateOfReturn carries real values (the reference's packRR ships
     *     empty lists — superseded to intent, SURVEY §2.12 R4).
     *
-    * Each section reads exactly one cache relation and is rendered once
-    * per version of it: a [[Memo.value]] tagged `dashboard:<relation>`, so
-    * a read over unchanged bytes costs one listing per relation, and a
-    * refresh that rewrites a relation re-renders only its sections. The
-    * relations are opened inside the sections, so a hit resolves nothing.
-    * The price fields stay a live read on every call: the enrichment
-    * fetcher rewrites them on its own clock, outside the cache dir. */
+    * The cache version is looked up once per call. Each section reads one
+    * relation at that version and is rendered once per version: a
+    * [[Memo.valueAt]] tagged `dashboard:<relation>`, so a read over an
+    * unchanged cache costs one version lookup and opens nothing. The price
+    * fields stay a live read on every call: the enrichment fetcher
+    * rewrites them on its own clock, outside the cache dir. */
   def dashboard(s: SparkSession, cacheDir: String): String = {
-    def section[T](relation: String)(render: DataFrame => T): T =
-      Memo.value(s, cacheDir, s"dashboard:$relation", relation)(
-        render(Tables.parquet(s, s"$cacheDir/$relation")))
-
     // the burnchain tip timestamp comes from the chain_tip cache relation,
-    // not an inlined constant (ADVICE r3). Fail descriptively on cache
-    // dirs written before this relation existed — checked before its
-    // section, whose listing would throw a bare FileNotFoundException, and
-    // through the Hadoop FileSystem so hdfs:// and s3a:// dirs pass
-    val tipPath = new org.apache.hadoop.fs.Path(s"$cacheDir/chain_tip")
-    require(tipPath.getFileSystem(s.sparkContext.hadoopConfiguration).exists(tipPath),
-      s"dashboard: $cacheDir has no chain_tip relation — re-run refreshCache (cache layout predates the derived tip timestamp)")
+    // not an inlined constant (ADVICE r3); its versions are the cache's
+    val n = version(s, cacheDir)
+    def section[T](name: String)(render: DataFrame => T): T =
+      Memo.valueAt(s, cacheDir, s"dashboard:$name", name, n)(
+        render(s.read.parquet(Versions.path(s"$cacheDir/$name", n))))
 
     // Locale.ROOT: the f-interpolator uses the default locale, which would
     // emit comma decimals (invalid JSON) on comma-decimal JVMs

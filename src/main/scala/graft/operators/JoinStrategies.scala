@@ -156,10 +156,9 @@ object JoinStrategies {
     * without a transactional table format. Both sides co-partition on the
     * key; at scale the cost is one shuffle of base + feed, independent of
     * how small the feed is (the price of full-outer; an incremental table
-    * format turns this into touched-partition overwrites, cf.
-    * Pipelines.refreshBlockInfoIncremental). Applying the same feed twice
-    * is idempotent — JoinShapesSpec drives the merged output through the
-    * merge again and asserts a fixed point. */
+    * format turns this into touched-partition overwrites). Applying the
+    * same feed twice is idempotent — JoinShapesSpec drives the merged
+    * output through the merge again and asserts a fixed point. */
   def mergeUpsert(base: DataFrame, feed: DataFrame): DataFrame = {
     val b = base.select(col("c_custkey").as("bk"),
       round(col("c_acctbal") * 100).cast("long").as("bal"),

@@ -307,32 +307,15 @@ object EventStream {
       }
   }
 
-  /** Committed store versions under `storeDir`, newest first. A version
-    * counts only once its `_SUCCESS` marker exists — a crash mid-write
-    * leaves a partial directory that is never read and is overwritten on
-    * replay. */
-  private def leaderboardVersions(fs: org.apache.hadoop.fs.FileSystem,
-                                  storeDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .filter(st => fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(2).toLong).sorted.reverse
-  }
-
   /** The current (latest committed) state of ANY versioned merge store —
     * an empty frame with `schema` (DDL string) before the first commit. */
-  def currentStore(s: SparkSession, storeDir: String, schema: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    leaderboardVersions(fs, storeDir).headOption match {
-      case Some(v) => s.read.parquet(s"$storeDir/v=$v")
+  def currentStore(s: SparkSession, storeDir: String, schema: String): DataFrame =
+    graft.Versions.latest(s, storeDir) match {
+      case Some(v) => s.read.parquet(graft.Versions.path(storeDir, v))
       case None => s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType.fromDDL(schema))
     }
-  }
 
   /** The leaderboard instantiation of [[currentStore]] — the read side of
     * [[leaderboardRefresh]]. */
@@ -345,17 +328,14 @@ object EventStream {
   /** TIME-TRAVEL read: the leaderboard as of a specific committed version
     * (its foreachBatch batchId) — the reproducibility contract for a
     * consumer that pins a data version (a training run that must see the
-    * exact store it saw yesterday). Only RETAINED versions are readable:
-    * the refresh keeps the current and previous version (older ones are
-    * pruned after commit), so an unpinned version fails loudly with the
-    * retained set instead of silently reading a reused directory. */
+    * exact store it saw yesterday). Only the two RETAINED versions
+    * ([[graft.Versions]]) are readable: an unpinned version fails loudly
+    * with the retained set instead of silently reading a reused directory. */
   def leaderboardAt(s: SparkSession, storeDir: String, version: Long): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val retained = leaderboardVersions(fs, storeDir)
+    val retained = graft.Versions.committed(s, storeDir)
     require(retained.contains(version),
       s"version $version not retained (have: ${retained.mkString(", ")})")
-    s.read.parquet(s"$storeDir/v=$version")
+    s.read.parquet(graft.Versions.path(storeDir, version))
   }
 
   /** CONTINUOUS INCREMENTAL LEADERBOARD — the serving composition of
@@ -363,16 +343,11 @@ object EventStream {
     * the stored leaderboard via the partial-agg merge, so the store is
     * always queryable and history is never rescanned (T1's cadence
     * without T1's full recompute). foreachBatch is AT-LEAST-once, so the
-    * store is BATCH-ID-VERSIONED to make the merge idempotent and
+    * store is BATCH-ID-VERSIONED ([[graft.Versions]], the protocol the
+    * serving cache publishes through too) to make the merge idempotent and
     * crash-safe: a replayed batch whose version already committed is
-    * skipped (an overwrite of the live store would double-count it), a
-    * new version writes to its own `v=<batchId>` directory so the
-    * previous version stays intact until the new one's `_SUCCESS`
-    * commits, and versions older than the previous one are pruned after
-    * commit. The store is key-cardinality rows — metadata-sized next to
-    * the facts; for key spaces too large for a single rewrite, shard
-    * each version with the bucketed dynamic-partition-overwrite pattern
-    * of [[graft.Pipelines.refreshBlockInfoIncremental]]. */
+    * skipped (an overwrite of the live store would double-count it). The
+    * store is key-cardinality rows — metadata-sized next to the facts. */
   def leaderboardRefresh(commits: DataFrame, storeDir: String,
                          checkpointDir: String,
                          trigger: Trigger = Trigger.ProcessingTime("120 seconds")): StreamingQuery =
@@ -384,12 +359,10 @@ object EventStream {
     * recompute over stored's inputs ∪ delta (the law every member of the
     * merge family satisfies: [[mergeLeaderboard]]'s count/sum,
     * [[mergeQuantileHist]]'s histogram addition, [[mergeUserSketches]]'
-    * register-max union). Each
-    * micro-batch folds into a NEW `v=<batchId>` directory; replayed
-    * batch ids are skipped, the previous version survives until the new
-    * one's `_SUCCESS`, older versions are pruned — so the store is
-    * always queryable, crash-safe, and time-travelable one version back,
-    * and history is never rescanned. */
+    * register-max union). Each micro-batch folds into version `batchId`
+    * of the [[graft.Versions]] store, and replayed batch ids are skipped —
+    * so the store is always queryable, crash-safe, and time-travelable
+    * one version back, and history is never rescanned. */
   def mergeRefresh(delta: DataFrame, storeDir: String, checkpointDir: String,
                    schema: String,
                    merge: (DataFrame, DataFrame) => DataFrame,
@@ -406,15 +379,13 @@ object EventStream {
     * a stored (miner → total_mined, miner_burned) leaderboard without
     * rescanning history — count and sum are self-mergeable partial
     * aggregates, so the stored table IS the aggregation state and a
-    * refresh costs one small-side aggregation plus a keyed merge. This is
-    * the aggregate-level counterpart of
-    * [[graft.Pipelines.refreshBlockInfoIncremental]] (which maintains
-    * row-grain buckets): at 100 TB the full a1 recompute scans the corpus,
-    * while this scans only the delta. Works for any algebraic aggregate;
-    * avg/stddev would carry (sum, count) / (sum, sum², count) state the
-    * same way — max/min merge too, but support deletion only by
-    * recompute. PipelinesSpec proves merge(agg(old), delta) ==
-    * agg(old ∪ delta) exactly. */
+    * refresh costs one small-side aggregation plus a keyed merge: at
+    * 100 TB the full a1 recompute ([[graft.Pipelines.refreshCache]]'s
+    * miner_info) scans the corpus, while this scans only the delta. Works
+    * for any algebraic aggregate; avg/stddev would carry (sum, count) /
+    * (sum, sum², count) state the same way — max/min merge too, but
+    * support deletion only by recompute. PipelinesSpec proves
+    * merge(agg(old), delta) == agg(old ∪ delta) exactly. */
   def mergeLeaderboard(stored: DataFrame, delta: DataFrame): DataFrame = {
     val dAgg = delta.groupBy(col("leader_key_address"))
       .agg(count(lit(1)).as("d_mined"), sum(col("burn_fee")).as("d_burned"))
@@ -463,21 +434,13 @@ object EventStream {
                                      batchId: Long, schema: String,
                                      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val s = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val versions = leaderboardVersions(fs, storeDir)
-    if (!versions.exists(_ >= batchId)) {
+    val prev = graft.Versions.latest(s, storeDir)
+    if (!prev.exists(_ >= batchId)) {
       merge(currentStore(s, storeDir, schema), batch)
-        .write.mode("overwrite").parquet(s"$storeDir/v=$batchId")
-      versions.drop(1).foreach(v => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$storeDir/v=$v"), true))
+        .write.mode("overwrite").parquet(graft.Versions.path(storeDir, batchId))
+      prev.foreach(graft.Versions.prune(s, storeDir, _))
     }
   }
-
-  private[graft] def applyLeaderboardBatch(batch: DataFrame, storeDir: String,
-                                           batchId: Long): Unit =
-    applyMergeBatch(batch, storeDir, batchId, LeaderboardSchema,
-      mergeLeaderboard)
 
   private[graft] val SketchSchema = "day DATE, sk BINARY"
 

@@ -27,15 +27,10 @@ object CacheQueries {
       "chain_tip" -> Domain.chainTip(s, d))
   }
 
-  /** A cache dir holding every relation in its presentation order, laid
-    * out like `refreshCache`'s (block_info partitioned by height bucket). */
+  /** A cache dir holding every relation in its presentation order,
+    * published like `refreshCache`'s. */
   def writeOrdered(s: SparkSession, d: String, dir: String): Unit =
-    ordered(s, d).foreach {
-      case ("block_info", df) =>
-        df.withColumn("height_bucket", (col("stacks_block_height") / 1000L).cast("long"))
-          .write.partitionBy("height_bucket").parquet(s"$dir/block_info")
-      case (name, df) => df.write.parquet(s"$dir/$name")
-    }
+    Pipelines.publish(s, dir, ordered(s, d))
 }
 
 /** The full dashboard document (VERDICT r2 item 2): every section of the
@@ -217,13 +212,17 @@ class DashboardSpec extends SparkSpec {
     val dir = refreshed("graft_dash_rewrite")
     val before = Pipelines.dashboard(spark, dir)
     val pageBefore = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
-    // half the rows: every second point of the (address, height) order
-    val path = s"$dir/burn_fee_area"
-    val area = spark.read.parquet(path)
+    // a new version: half the area rows (every second point of the
+    // (address, height) order), every other relation as it was
+    val v = Versions.latest(spark, s"$dir/chain_tip").get
+    def current(name: String) = spark.read.parquet(Versions.path(s"$dir/$name", v))
+    val area = current("burn_fee_area")
     val kept = area.orderBy("address", "height").collect()
       .zipWithIndex.collect { case (r, i) if i % 2 == 1 => r }
-    spark.createDataFrame(java.util.Arrays.asList(kept: _*), area.schema)
-      .write.mode("overwrite").parquet(path)
+    Pipelines.publish(spark, dir, CacheQueries.Relations.map(name => name ->
+      (if (name == "burn_fee_area")
+        spark.createDataFrame(java.util.Arrays.asList(kept: _*), area.schema)
+      else current(name))))
     val after = Pipelines.dashboard(spark, dir)
     val pageAfter = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
     // a session of its own holds no memo entries: it renders the bytes
@@ -239,10 +238,94 @@ class DashboardSpec extends SparkSpec {
     val uri = new java.io.File(dir).toURI.toString.stripSuffix("/")
     assert(uri.startsWith("file:/"))
     assert(Pipelines.dashboard(spark, uri) === Pipelines.dashboard(spark, dir))
+    // a chain_tip with no committed version is no chain_tip
     val tip = new java.io.File(dir, "chain_tip")
-    org.apache.commons.io.FileUtils.deleteDirectory(tip)
+    assert(new java.io.File(tip, "v=1/_SUCCESS").delete())
     val e = intercept[IllegalArgumentException](Pipelines.dashboard(spark, dir))
     assert(e.getMessage.contains(s"$dir has no chain_tip relation"), e.getMessage)
+    org.apache.commons.io.FileUtils.deleteDirectory(tip)
+    val e2 = intercept[IllegalArgumentException](Pipelines.burnFeeAreaPageJson(spark, dir, None, 50))
+    assert(e2.getMessage.contains(s"$dir has no chain_tip relation"), e2.getMessage)
+  }
+
+  /** The area page cursors the concurrency specs read at: the start, and
+    * the `next` of the first two pages. */
+  private def cursors(dir: String): Seq[Option[(Long, Long)]] =
+    Iterator.iterate(Option.empty[(Long, Long)]) { c =>
+      val next = JsonMethods.parse(Pipelines.burnFeeAreaPageJson(spark, dir, c, 50)) \ "next"
+      Some(((next \ "address").asInstanceOf[JInt].num.toLong,
+        (next \ "height").asInstanceOf[JInt].num.toLong))
+    }.take(3).toSeq
+
+  /** The dashboard document, then the page at every cursor. */
+  private def reads(s: SparkSession, dir: String, at: Seq[Option[(Long, Long)]]): Seq[String] =
+    Pipelines.dashboard(s, dir) +: at.map(c => Pipelines.burnFeeAreaPageJson(s, dir, c, 50))
+
+  test("reads beside refreshes never fail and always return one whole version") {
+    val dir = refreshed("graft_dash_concurrent")
+    val at = cursors(dir)
+    val expected = reads(spark, dir, at)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val attempts = new java.util.concurrent.atomic.AtomicInteger()
+    val reader = new Thread(() =>
+      while (!done.get) {
+        attempts.incrementAndGet()
+        try {
+          val got = reads(spark, dir, at)
+          if (got != expected) failures.add(s"read ${attempts.get} returned other bytes")
+        } catch { case e: Throwable => failures.add(s"read ${attempts.get} threw $e") }
+      })
+    reader.start()
+    try (1 to 5).foreach(_ => Pipelines.refreshCache(spark, sf, dir))
+    finally { done.set(true); reader.join() }
+    assert(attempts.get > 5)
+    assert(failures.size === 0, s"of ${attempts.get} reads: " +
+      failures.toArray.take(5).mkString("; "))
+  }
+
+  test("an uncommitted version is never read, and the next refresh replaces it") {
+    val dir = refreshed("graft_dash_crash")
+    val at = cursors(dir)
+    val expected = reads(spark, dir, at)
+    val n = Versions.latest(spark, s"$dir/chain_tip").get
+    // a crashed tick's leftovers: a part file under v=n+1, no _SUCCESS
+    CacheQueries.Relations.foreach { r =>
+      val v = java.nio.file.Paths.get(dir, r, s"v=${n + 1}")
+      java.nio.file.Files.createDirectories(v)
+      java.nio.file.Files.writeString(v.resolve("part-00000-crashed.snappy.parquet"), "torn")
+    }
+    assert(reads(spark, dir, at) === expected)
+    // a session of its own holds no memo entries: it opens the version
+    assert(reads(spark.newSession(), dir, at) === expected)
+    Pipelines.refreshCache(spark, sf, dir)
+    CacheQueries.Relations.foreach { r =>
+      assert(Versions.latest(spark, s"$dir/$r") === Some(n + 1), r)
+      assert(!new java.io.File(dir, s"$r/v=${n + 1}/part-00000-crashed.snappy.parquet").exists, r)
+    }
+    assert(reads(spark.newSession(), dir, at) === expected)
+  }
+
+  test("refreshes keep two committed versions, one memo entry and no resolver entries") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dash_bounded").toString
+    def resolverEntries = CacheQueries.Relations.map(r =>
+      Tables.resolvedEntries(s"$dir/$r") +
+        (1L to 10L).map(v => Tables.resolvedEntries(Versions.path(s"$dir/$r", v))).sum).sum
+    val memoBefore = Memo.entries("dashboard:block_info")
+    Pipelines.refreshCache(spark, sf, dir)
+    val expected = Pipelines.dashboard(spark, dir)
+    val resolverAfterOne = resolverEntries
+    (1 to 5).foreach { _ =>
+      Pipelines.refreshCache(spark, sf, dir)
+      assert(Pipelines.dashboard(spark, dir) === expected)
+      Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
+    }
+    CacheQueries.Relations.foreach { r =>
+      assert(Versions.committed(spark, s"$dir/$r") === Seq(6L, 5L), r)
+      assert(new java.io.File(dir, r).list().toSeq.sorted === Seq("v=5", "v=6"), r)
+    }
+    assert(Memo.entries("dashboard:block_info") === memoBefore + 1)
+    assert(resolverEntries === resolverAfterOne)
   }
 
   test("winnerPie and rateOfReturn carry the all/r1000/r100 triple") {

@@ -124,28 +124,23 @@ class PipelinesSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_cache").toString
     Pipelines.refreshCache(spark, sf, dir)
     // unordered relations: compared as multisets of rows, by column name
-    // (block_info also carries its height_bucket partition column)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    // the committed version: the root holds two versions after a refresh
+    def committed(name: String) = spark.read.parquet(Versions.path(s"$dir/$name",
+      Versions.latest(spark, s"$dir/chain_tip").get))
     val queries = CacheQueries.ordered(spark, sf)
     assert(queries.map(_._1) === CacheQueries.Relations)
     queries.foreach { case (name, query) =>
-      val rel = spark.read.parquet(s"$dir/$name")
-        .select(query.columns.toSeq.map(col): _*)
+      val rel = committed(name).select(query.columns.toSeq.map(col): _*)
       val n = rel.count()
       assert(n > 0, name)
       assert(rows(rel) === rows(query), s"$name differs from its query")
     }
     // idempotent overwrite: second run leaves identical row counts
-    val n1 = spark.read.parquet(s"$dir/block_info").count()
+    val n1 = committed("block_info").count()
     Pipelines.refreshCache(spark, sf, dir)
-    assert(spark.read.parquet(s"$dir/block_info").count() === n1)
-    // height-bucket partitioning: a range predicate prunes partitions
-    val pruned = spark.read.parquet(s"$dir/block_info")
-      .filter(col("height_bucket") === 0L)
-    val planStr = pruned.queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters: [isnotnull(height_bucket"),
-      s"expected partition pruning, got:\n$planStr")
+    assert(committed("block_info").count() === n1)
     val doc = Pipelines.dashboard(spark, dir)
     assert(doc.contains("\"currentStatus\"") && doc.contains("\"minerTable\""))
     // well-formed JSON: parseable by the JVM's own nashorn-free check — a
@@ -176,7 +171,6 @@ class PipelinesSpec extends SparkSpec {
       } finally spark.listenerManager.unregister(l)
       plans.toArray(Array.empty[SparkPlan]).toSeq
     }
-    // block_info's partitionBy needs a LOCAL sort (global = false): allowed
     def ordering(p: SparkPlan): Seq[SparkPlan] = Plans.collect(p) {
       case s: SortExec if s.global => s
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
@@ -192,26 +186,6 @@ class PipelinesSpec extends SparkSpec {
     val plans = plansOf(Pipelines.refreshCache(spark, sf, dir))
     assert(writes(plans).length === CacheQueries.Relations.length)
     plans.foreach(p => assert(ordering(p).isEmpty, s"ordering operator in:\n$p"))
-  }
-
-  test("incremental refresh rewrites only the touched height buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc").toString
-    Pipelines.refreshCache(spark, sf, dir)
-    val before = spark.read.parquet(s"$dir/block_info").count()
-    def bucketFiles(b: Long) = {
-      val d = new java.io.File(s"$dir/block_info/height_bucket=$b")
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toMap
-    }
-    val b0Before = bucketFiles(0L)
-    Thread.sleep(1100) // mtime resolution
-    // refresh only heights >= 1000 (bucket 1 upward)
-    Pipelines.refreshBlockInfoIncremental(spark, sf, dir, 1000L)
-    val b0After = bucketFiles(0L)
-    assert(b0After === b0Before, "bucket 0 must be untouched by an incremental refresh from height 1000")
-    // the relation is still complete and identical in content
-    val after = spark.read.parquet(s"$dir/block_info").count()
-    assert(after === before)
   }
 
   test("stateful running max accumulates across micro-batches") {
@@ -431,8 +405,10 @@ class PipelinesSpec extends SparkSpec {
       // (foreachBatch is at-least-once; a naive merge would double-count)
       val replay = Seq((2L, 10L), (3L, 7L))
         .toDF("leader_key_address", "burn_fee")
-      EventStream.applyLeaderboardBatch(replay, s"$dir/store", 1L)
-      EventStream.applyLeaderboardBatch(replay, s"$dir/store", 0L)
+      EventStream.applyMergeBatch(replay, s"$dir/store", 1L,
+        EventStream.LeaderboardSchema, EventStream.mergeLeaderboard)
+      EventStream.applyMergeBatch(replay, s"$dir/store", 0L,
+        EventStream.LeaderboardSchema, EventStream.mergeLeaderboard)
       assert(store() === expected)
       // TIME TRAVEL: the previous retained version is readable and equals
       // the store as of batch 0; unpinned versions fail loudly
