@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
   * O(cache)).
   *
   * Relation `r` of version `n` lives at `<cacheDir>/r/v=<n>`. A read
-  * looks the version up once and renders every relation at it, opening
-  * its path directly: a committed version never changes and is opened
-  * once, inside a memoized render, so a [[Tables]] resolver entry per
-  * version would buy nothing and grow without bound.
+  * looks the version up once and renders every relation at it. A
+  * committed version never changes, so its `BaseRelation` is opened once
+  * per (relation, version) — a [[Memo.valueAt]] tagged `relation:<r>`,
+  * which a newer version replaces — and every render reads it with
+  * `baseRelationToDataFrame`: no listing and no schema inference.
   *
   * Cache relations are written UNORDERED. Every serving read imposes its
   * own total order, so a sort before the write would buy nothing; the
@@ -61,6 +62,11 @@ object Pipelines {
     prev.foreach(p => relations.foreach(r => Versions.prune(s, s"$cacheDir/${r._1}", p)))
   }
 
+  /** Relation `name` of cache version `n`, opened once per version. */
+  private def open(s: SparkSession, cacheDir: String, name: String, n: Long): DataFrame =
+    s.baseRelationToDataFrame(Memo.valueAt(s, cacheDir, s"relation:$name", name, n)(
+      Tables.relationOf(s, Versions.path(s"$cacheDir/$name", n))))
+
   /** The newest committed cache version; fails descriptively without one. */
   private def version(s: SparkSession, cacheDir: String): Long =
     Versions.latest(s, s"$cacheDir/chain_tip").getOrElse(throw new IllegalArgumentException(
@@ -83,7 +89,7 @@ object Pipelines {
   private def areaPage(s: SparkSession, cacheDir: String, n: Long,
                        after: Option[(Long, Long)], pageSize: Int): DataFrame = {
     require(pageSize > 0, "pageSize must be positive")
-    val area = s.read.parquet(Versions.path(s"$cacheDir/burn_fee_area", n))
+    val area = open(s, cacheDir, "burn_fee_area", n)
       .select(col("address"), col("height"), col("cum_filled"))
     val page = after match {
       case Some((a, h)) => area.filter(col("address") > a ||
@@ -161,7 +167,7 @@ object Pipelines {
     val n = version(s, cacheDir)
     def section[T](name: String)(render: DataFrame => T): T =
       Memo.valueAt(s, cacheDir, s"dashboard:$name", name, n)(
-        render(s.read.parquet(Versions.path(s"$cacheDir/$name", n))))
+        render(open(s, cacheDir, name, n)))
 
     // Locale.ROOT: the f-interpolator uses the default locale, which would
     // emit comma decimals (invalid JSON) on comma-decimal JVMs

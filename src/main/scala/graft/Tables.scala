@@ -2,25 +2,30 @@ package graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Parquet table readers for the benchmark tables (TESTDATA.md), and the
-  * session-scoped relation resolver that every read of a table or a cache
-  * relation goes through.
+  * session-scoped relation resolver that every read of a table goes
+  * through.
   *
   * Schema is carried by Parquet itself (self-describing); Catalyst prunes
   * columns and pushes predicates into these scans, so every query should
   * start from one of these and stay declarative. At 100 TB the same readers
   * work unchanged — the scans split by file.
   *
-  * RELATION RESOLVER ([[parquet]]). A bare `spark.read.parquet` re-lists the
+  * RELATION RESOLVER ([[t]]). A bare `spark.read.parquet` re-lists the
   * path AND runs a one-task Spark job to infer the schema from the footers —
   * about 80 ms of fixed cost per call, paid by every reader call site on
-  * every query and every dashboard read, against a median query of well
-  * under a second. The resolver infers a path's schema once per (session,
-  * path, file fingerprint) and hands every call a FRESH
-  * `spark.read.schema(resolved).parquet(path)`: no inference job, and new
-  * attribute ids per call, so two reads of one table still self-join.
+  * every query, against a median query of well under a second. Even with
+  * the schema given, `spark.read.schema(...).parquet` lists the path a
+  * second time, builds a Hadoop `JobConf` and resolves the data source on
+  * every call. The resolver builds a path's `BaseRelation` (its
+  * `HadoopFsRelation`: schema plus file index) once per (session, path,
+  * file fingerprint) and hands every call a FRESH
+  * `baseRelationToDataFrame(relation)`: a new `LogicalRelation` with new
+  * attribute ids, so two reads of one table still self-join, and a read
+  * over an unchanged listing runs no job and re-lists nothing.
   *   - Fingerprint ([[fingerprint]], which [[Memo]] keys on too): one
   *     recursive listing of the path per call —
   *     (path, length, mtime) of every visible entry, partition
@@ -32,20 +37,23 @@ import org.apache.spark.sql.types.StructType
   *     entry, and entries of stopped sessions are purged on access (the
   *     [[Memo]] contract), so a long-lived server refreshing every tick
   *     holds a bounded map.
-  *   - Only the resolved `StructType` (plus the lazily read footer stats
-  *     of the scan fan-out below) is cached — never a `DataFrame`.
-  * The schema depends on session confs fixed at build time
+  *   - Only the resolved relation (plus the lazily read footer stats of
+  *     the scan fan-out below) is cached — never a `DataFrame`. Its file
+  *     index is the listing taken right after the entry's fingerprint, so a
+  *     file that changes between the two only makes the next read resolve
+  *     again.
+  * The relation depends on session confs fixed at build time
   * (`Sessions.engineConfs`); no reader mutates session state.
   */
 object Tables {
 
   /** One resolved (session, path): the listing it was resolved at, the
-    * schema, and — read only for fanned readers — the parquet footer
+    * relation, and — read only for fanned readers — the parquet footer
     * stats behind the scan fan-out decision. Keyed by the same fingerprint
-    * as the schema, so a rewritten file gets a fresh partition count on
+    * as the relation, so a rewritten file gets a fresh partition count on
     * its next read. */
   private final class Resolved(val fingerprint: Seq[(String, Long, Long)],
-                               val schema: StructType,
+                               val relation: BaseRelation,
                                files: Seq[FileStatus],
                                hadoopConf: org.apache.hadoop.conf.Configuration) {
     /** Parquet data files of the relation. */
@@ -107,17 +115,20 @@ object Tables {
     val hit = resolved.get(key)
     if (hit != null && hit.fingerprint == fp) hit
     else {
-      val e = new Resolved(fp, s.read.parquet(path).schema, files,
+      val e = new Resolved(fp, relationOf(s, path), files,
         s.sparkContext.hadoopConfiguration)
       resolved.put(key, e)
       e
     }
   }
 
-  /** A fresh read of the parquet relation at `path`, with its schema
-    * resolved once per (session, path, fingerprint) — see the object doc. */
-  def parquet(s: SparkSession, path: String): DataFrame =
-    s.read.schema(resolve(s, path).schema).parquet(path)
+  /** The parquet relation at `path` as `spark.read.parquet` resolves it:
+    * one listing and one schema-inference job. Callers hold on to it and
+    * read it with `baseRelationToDataFrame`, which neither lists nor infers. */
+  private[graft] def relationOf(s: SparkSession, path: String): BaseRelation =
+    s.read.parquet(path).queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.getOrElse(throw new IllegalStateException(s"$path did not resolve to a file relation"))
 
   /** Resolver entries held for `path` across live sessions (specs). */
   private[graft] def resolvedEntries(path: String): Int =
@@ -180,7 +191,7 @@ object Tables {
                 fan: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"
     val e = resolve(s, path)
-    val df = s.read.schema(e.schema).parquet(path)
+    val df = s.baseRelationToDataFrame(e.relation)
     if (!fan) df
     else fanoutFor(s, e) match {
       case Some(n) => df.repartition(n)

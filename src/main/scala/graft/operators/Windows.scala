@@ -416,19 +416,21 @@ object Windows {
     * shuffle; the only change is the tie-break direction — purchases
     * sort before same-ts views (kind 0) so a view at the exact purchase
     * timestamp counts as "at-or-after", mirroring the backward form's
-    * inclusive tie — and the carry runs over the FOLLOWING frame with
-    * first(ignoreNulls). */
+    * inclusive tie — and the carry takes the FOLLOWING rows' first view,
+    * as last(ignoreNulls) over a running frame in the reversed order. */
   def asofForward(toleranceUs: Option[Long]): Q = (s, d) => {
     val ev = Tables.events(s, d)
       .filter(col("event_type").isin("view", "purchase"))
       .select(col("event_id"), col("user_id"), col("ts"),
         when(col("event_type") === "view", 1).otherwise(0).as("kindf"))
+    // the FOLLOWING carry as a running frame over the reversed total order:
+    // the nearest view at-or-after a row is the last one seen walking back
     val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("kindf"), col("event_id"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      .orderBy(col("ts").desc, col("kindf").desc, col("event_id").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val inTol = toleranceUs.map(t => col("gap_us") <= t).getOrElse(col("gap_us").isNotNull)
     ev
-      .withColumn("q", first(
+      .withColumn("q", last(
         when(col("kindf") === 1, struct(col("event_id").as("vid"), col("ts").as("vts"))),
         ignoreNulls = true).over(w))
       .filter(col("kindf") === 0)
@@ -539,8 +541,9 @@ object Windows {
     * forward-fill answers "what was the last known value", this answers
     * "what was the value probably doing", the standard time-series
     * resample-and-interpolate step). Anchors come from two per-miner
-    * window passes (last/first ignoreNulls — partitions stay
-    * miner×`latest`-bounded); the interpolated value is the exact rational
+    * running-frame passes (last ignoreNulls, height ascending then
+    * descending — partitions stay miner×`latest`-bounded); the
+    * interpolated value is the exact rational
     * prev + (next−prev)·(h−hp)/(hn−hp), emitted milli-scaled through
     * ExactRatio so both engines round identically (a double division here
     * would flip half-boundaries between engines). Observed rows bypass
@@ -566,15 +569,18 @@ object Windows {
         explode(sequence(lit(hi - (latest - 1L)), lit(hi))).as("height"))
     val back = Window.partitionBy(col("address")).orderBy(col("height"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val fwd = Window.partitionBy(col("address")).orderBy(col("height"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    // the next anchor is the last one seen walking DOWN the heights: a
+    // running frame costs O(1) per row, where a shrinking (CURRENT ROW,
+    // UNBOUNDED FOLLOWING) frame re-scans the rest of the partition
+    val fwd = Window.partitionBy(col("address")).orderBy(col("height").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // both anchor fields ride ONE struct per direction: two Window passes
-    // over the shared (address, height) sort instead of four
+    // over the one address exchange instead of four
     val obs = when(col("fee_h").isNotNull,
       struct(col("height").as("h"), col("fee_h").as("v")))
     grid.join(perH, Seq("address", "height"), "left")
       .withColumn("pa", last(obs, ignoreNulls = true).over(back))
-      .withColumn("na", first(obs, ignoreNulls = true).over(fwd))
+      .withColumn("na", last(obs, ignoreNulls = true).over(fwd))
       .withColumn("pah", col("pa.h")).withColumn("pav", col("pa.v"))
       .withColumn("nah", col("na.h")).withColumn("nav", col("na.v"))
       .select(col("address"), col("height"),

@@ -259,9 +259,12 @@ object ForkWalk {
     val t = linkTable(s, d)
       .withColumn("bkt", floor(col("height") / bw).cast("long"))
     val byH = Window.partitionBy(col("bkt")).orderBy(col("height"))
-    // ONE fact-table window stage: both the lag and the strictly-above
-    // suffix max share the same (bkt, height ASC) partitioning+sort — the
-    // suffix frame is (1 FOLLOWING, UNBOUNDED), not a second DESC sort.
+    // ONE fact-table window stage: the lag and the bucket's newest broken
+    // height share the same (bkt, height ASC) partitioning+sort. "A break
+    // strictly above me" is "the newest break is above me" (heights are
+    // unique), so a whole-bucket max, evaluated once per bucket, answers
+    // it; a shrinking (1 FOLLOWING, UNBOUNDED) frame would re-aggregate the
+    // rest of the bucket at every row.
     // internal_broken only sees WITHIN-bucket links; boundary links are
     // settled at the bucket level below.
     val w = t
@@ -269,8 +272,10 @@ object ForkWalk {
       .withColumn("internal_broken",
         when(col("local_prev").isNotNull &&
           col("parent_hash") =!= col("local_prev"), 1).otherwise(0))
-      .withColumn("local_above", coalesce(max(col("internal_broken")).over(
-        byH.rowsBetween(1, Window.unboundedFollowing)), lit(0)))
+      .withColumn("local_above", coalesce(
+        (max(when(col("internal_broken") === 1, col("height"))).over(
+          byH.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)) >
+          col("height")).cast("int"), lit(0)))
     // (w is consumed twice — bucket agg + final join. Measured: recomputing
     // the scan+window beats caching it; the bucket agg's shuffle is one row
     // per bucket either way.)

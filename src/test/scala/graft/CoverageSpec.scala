@@ -322,6 +322,27 @@ class CoverageSpec extends SparkSpec {
       s"partition-less window over unbounded input in: ${offenders.mkString(", ")}")
   }
 
+  /** Linear-time windows: Spark evaluates a frame that starts below the
+    * partition's first row and runs to its end — (CURRENT ROW, UNBOUNDED
+    * FOLLOWING), (1 FOLLOWING, UNBOUNDED FOLLOWING) — by re-aggregating the
+    * rest of the partition at every row, O(n²) per partition. Reverse the
+    * order into a running frame, or aggregate the whole partition. */
+  test("no registered query plans a shrinking (k, UNBOUNDED FOLLOWING) window frame") {
+    import org.apache.spark.sql.catalyst.expressions.{SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding, WindowExpression}
+    val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
+      q(name).queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists {
+        case w: WindowExpression => w.windowSpec.frameSpecification match {
+          case f: SpecifiedWindowFrame =>
+            f.upper == UnboundedFollowing && f.lower != UnboundedPreceding
+          case _ => false
+        }
+        case _ => false
+      }))
+    }
+    assert(offenders.isEmpty,
+      s"shrinking window frame in: ${offenders.mkString(", ")}")
+  }
+
   /** Scale invariant (VERDICT r3 item 1): IVF cell assignment must be
     * row-local (a fold over the broadcast codebook array), never a Window
     * keyed by vec_id — that form shuffles and sorts k× the vector set to

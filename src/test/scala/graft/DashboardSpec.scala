@@ -163,6 +163,19 @@ class DashboardSpec extends SparkSpec {
     assert(walk === pageWalk(ordered))
   }
 
+  test("the area pages of one version open burn_fee_area once") {
+    val dir = refreshed("graft_dash_open")
+    var first, second: DataFrame = null
+    assert(jobsOf { first = Pipelines.burnFeeAreaPage(spark, dir, None, 50) } >= 1,
+      "the version's first read infers its schema")
+    assert(jobsOf { second = Pipelines.burnFeeAreaPage(spark, dir, Some((0L, 0L)), 50) } === 0,
+      "a second cursor of the same version must not open the relation again")
+    assert(relation(first) eq relation(second))
+    Pipelines.refreshCache(spark, sf, dir)
+    assert(relation(Pipelines.burnFeeAreaPage(spark, dir, None, 50)) ne relation(first),
+      "a new version opens its own relation")
+  }
+
   test("reads over an unchanged cache launch no Spark job beyond the live prices read") {
     val dir = refreshed("graft_dash_memo")
     val doc1 = Pipelines.dashboard(spark, dir)

@@ -35,6 +35,12 @@ abstract class SparkSpec extends AnyFunSuite {
     jobs.get()
   }
 
+  /** The relation a single-table read scans. */
+  def relation(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.sources.BaseRelation =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.get
+
   /** Run a registered query by name. */
   def q(name: String): org.apache.spark.sql.DataFrame =
     SparkEntry.queries(name)(spark, sf)

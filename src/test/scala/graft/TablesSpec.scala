@@ -1,22 +1,27 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{expr, xxhash64}
+import org.apache.spark.sql.sources.BaseRelation
 
-/** Laws of the session-scoped relation resolver (`Tables.parquet`): a
-  * resolved path launches no schema-inference job, every call is a fresh
-  * relation, a rewritten or restamped source re-resolves in place — and
-  * the session's generated-code cache holds a whole pass, so a warm pass
-  * compiles nothing. */
+/** Laws of the session-scoped relation resolver behind the table readers:
+  * a resolved table launches no schema-inference job, every call is a
+  * fresh `LogicalRelation` over one shared relation, a rewritten or
+  * restamped source re-resolves in place — and the session's
+  * generated-code cache holds a whole pass, so a warm pass compiles
+  * nothing. */
 class TablesSpec extends SparkSpec {
 
   private def hash(df: DataFrame): Long =
     df.select(xxhash64(df.columns.map(df.apply): _*).as("h"))
       .agg(expr("bit_xor(h)")).head().getLong(0)
 
-  private def tempPath(prefix: String): String =
-    new java.io.File(java.nio.file.Files.createTempDirectory(prefix).toFile,
-      "t.parquet").getPath
+  /** A fresh data dir; its orders table lives at the returned path. */
+  private def tempTable(prefix: String): (String, String) = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    (dir, s"$dir/orders.parquet")
+  }
 
   test("a second Tables.orders launches no Spark job") {
     Tables.orders(spark, sf)
@@ -25,15 +30,20 @@ class TablesSpec extends SparkSpec {
     // control: the listener does see the inference job of an unresolved path
     val sp = spark
     import sp.implicits._
-    val path = tempPath("tablesspec_jobs")
+    val (dir, path) = tempTable("tablesspec_jobs")
     Seq(1L, 2L).toDF("v").write.parquet(path)
-    assert(jobsOf(Tables.parquet(spark, path)) >= 1)
-    assert(jobsOf(Tables.parquet(spark, path)) === 0)
+    assert(jobsOf(Tables.orders(spark, dir)) >= 1)
+    assert(jobsOf(Tables.orders(spark, dir)) === 0)
   }
 
   test("two reads of one table self-join: attribute ids are fresh per call") {
-    val a = Tables.orders(spark, sf)
-    val b = Tables.orders(spark, sf)
+    Tables.orders(spark, sf)
+    var a: DataFrame = null
+    var b: DataFrame = null
+    assert(jobsOf { a = Tables.orders(spark, sf); b = Tables.orders(spark, sf) } === 0)
+    assert(relation(a) eq relation(b), "one fingerprint must share one relation")
+    val ids = (df: DataFrame) => df.queryExecution.analyzed.output.map(_.exprId).toSet
+    assert(ids(a).nonEmpty && (ids(a) intersect ids(b)).isEmpty)
     val n = a.count()
     assert(n > 0)
     assert(a.join(b, a("o_orderkey") === b("o_orderkey")).count() === n)
@@ -42,11 +52,11 @@ class TablesSpec extends SparkSpec {
   test("a rewritten path with an extra column re-resolves into one entry") {
     val sp = spark
     import sp.implicits._
-    val path = tempPath("tablesspec_rewrite")
+    val (dir, path) = tempTable("tablesspec_rewrite")
     Seq(1L, 2L).toDF("a").write.parquet(path)
-    assert(Tables.parquet(spark, path).columns.toSeq === Seq("a"))
+    assert(Tables.orders(spark, dir).columns.toSeq === Seq("a"))
     Seq((3L, "x")).toDF("a", "b").write.mode("overwrite").parquet(path)
-    val df = Tables.parquet(spark, path)
+    val df = Tables.orders(spark, dir)
     assert(df.columns.toSeq === Seq("a", "b"))
     assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((3L, "x")))
@@ -55,17 +65,25 @@ class TablesSpec extends SparkSpec {
   }
 
   test("restamping the same bytes re-resolves and keeps the hash") {
-    val path = tempPath("tablesspec_restamp")
+    val (dir, path) = tempTable("tablesspec_restamp")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/orders.parquet"),
       java.nio.file.Paths.get(path))
-    val before = hash(Tables.parquet(spark, path))
+    val first = Tables.orders(spark, dir)
+    val before = hash(first)
     val f = new java.io.File(path)
     assert(f.setLastModified(f.lastModified + 60000L))
     var df: DataFrame = null
-    assert(jobsOf { df = Tables.parquet(spark, path) } >= 1,
+    assert(jobsOf { df = Tables.orders(spark, dir) } >= 1,
       "the restamped path must re-run schema inference")
     assert(hash(df) === before)
     assert(Tables.resolvedEntries(path) === 1)
+    // the new relation is a new listing: it carries the new stamp
+    assert(relation(df) ne relation(first))
+    val stamps = (r: BaseRelation) =>
+      r.asInstanceOf[HadoopFsRelation].location
+        .asInstanceOf[PartitioningAwareFileIndex].allFiles().map(_.getModificationTime)
+    assert(stamps(relation(df)) === Seq(f.lastModified))
+    assert(stamps(relation(first)) === Seq(f.lastModified - 60000L))
   }
 
   test("a second sweep of the benchmark's 14 queries compiles no generated code") {
