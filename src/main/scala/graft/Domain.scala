@@ -59,9 +59,10 @@ object Domain {
     * WindowExec. Win counters derive from this relation (≈ #heights rows),
     * never from a row-level is_winner flag over the fact table.
     *
-    * MEMOIZED as a shared core (r14 — guide §2.4): FOUR registered queries
-    * (a1, a2, j8, f10) each re-ran the full scan + map-side-sorted
-    * partial max_by of the fact table to derive this exact relation.
+    * MEMOIZED as a shared core (r14 — guide §2.4): the per-miner rollup
+    * ([[minerTotals]]) and j8 read this exact relation instead of each
+    * re-running the full scan + map-side-sorted partial max_by of the fact
+    * table.
     * Parquet-backed ([[Memo.cachedParquet]]), not a checkpoint: the
     * relation is HEIGHT-grain — it grows linearly with chain length
     * (~150 M rows at sf100), which is parquet-index-sized, not
@@ -78,16 +79,9 @@ object Domain {
   def inTrailingWindow(s: SparkSession, d: String, n: Long): Column =
     col("stacks_block_height") > lit(operators.Windows.ordersTipOf(s, d) - n)
 
-  /** The winners of the trailing n-block window: the memoized [[winners]]
-    * filtered to [[inTrailingWindow]]. The winner choice is
-    * per-height-local, so this equals the argmax of the window's commits
-    * without a second fact-table scan. */
-  def trailingWinners(s: SparkSession, d: String, n: Long): DataFrame =
-    winners(s, d).filter(inTrailingWindow(s, d, n))
-
   /** Argmax over any commits-shaped frame. The winner choice is
     * per-height-local, so a height filter commutes with the argmax: range
-    * variants filter the memoized [[winners]] ([[trailingWinners]]) rather
+    * variants filter the memoized [[winners]] ([[minerTotals]]) rather
     * than re-run this over a filtered scan. */
   def winnersOf(commitsDf: DataFrame): DataFrame =
     commitsDf
@@ -98,6 +92,47 @@ object Domain {
           (-col("leader_key_address")).as("na"))).as("w"))
       .select(col("stacks_block_height"), col("w.leader_key_address"),
         col("w.burn_fee"), col("w.vtxindex"))
+
+  /** The per-miner rollup over a commits relation and its winners: one
+    * row per `leader_key_address` that committed, with mined = count,
+    * burned = sum(burn_fee), won = its winning heights and `bonus_win` =
+    * those below [[BonusBoundary]] (rpc.js:244-275, 301-305). Two
+    * partial-aggregated shuffles, commits → per-miner and winners →
+    * per-miner, joined at miner cardinality; a miner without a win gets 0
+    * wins. Every winner committed, so the left join loses no winner. */
+  def minerTotalsOf(commitsDf: DataFrame, winnersDf: DataFrame): DataFrame = {
+    val mined = commitsDf
+      .groupBy(col("leader_key_address"))
+      .agg(count(lit(1)).as("total_mined"), sum(col("burn_fee")).as("miner_burned"))
+    val won = winnersDf
+      .groupBy(col("leader_key_address"))
+      .agg(count(lit(1)).as("total_win"),
+        sum(when(col("stacks_block_height") < BonusBoundary, 1L).otherwise(0L))
+          .as("bonus_win"))
+    mined.join(won, Seq("leader_key_address"), "left")
+      .select(col("leader_key_address"), col("total_mined"), col("miner_burned"),
+        coalesce(col("total_win"), lit(0L)).as("total_win"),
+        coalesce(col("bonus_win"), lit(0L)).as("bonus_win"))
+  }
+
+  /** [[minerTotalsOf]] over all heights (`latest` = None) or over the
+    * trailing `latest`-block window ([[inTrailingWindow]]: the commit scan
+    * and the memoized [[winners]] filtered at one tip literal), memoized:
+    * the ONE per-miner rollup that a1, a2, a9, a12, f10 and the five
+    * miner-grain cache relations project. `latest` is the reference's
+    * route parameter, so the window is an argument, not a fixed set. The
+    * trailing tag carries the tip, because the window also reads orders. */
+  def minerTotals(s: SparkSession, d: String, latest: Option[Long]): DataFrame =
+    latest match {
+      case None =>
+        Memo.cached(s, d, "miner_totals", "lineitem.parquet")(
+          minerTotalsOf(commits(s, d), winners(s, d)))
+      case Some(n) =>
+        val inWindow = inTrailingWindow(s, d, n)
+        Memo.cached(s, d, s"miner_totals_$n@${operators.Windows.ordersTipOf(s, d)}",
+          "lineitem.parquet")(
+          minerTotalsOf(commits(s, d).filter(inWindow), winners(s, d).filter(inWindow)))
+    }
 
   /** Winner row_number as DuckDB SQL — the single shared definition used by
     * every oracle (ADVICE r1: one constant, not per-file re-derivations).

@@ -175,24 +175,50 @@ object Memo {
     * Every build writes a directory of its own (tag plus a random id), so
     * no two builds — two data dirs sharing a tag, two threads racing one
     * key, a rebuild after a restamp — ever write the same path (ADVICE
-    * r12). A superseded build's directory stays until the application
-    * ends: a frame handed out earlier may still read it.
+    * r12). A superseded build's directory stays for one more build: a
+    * frame handed out earlier may still read it, as a reader may hold a
+    * [[Versions]] version for one publish period. Once a newer build has
+    * itself been superseded, the directory is deleted, so a source
+    * restamped every tick holds at most two builds' directories per key.
     *
     * The build is read back with the schema it was just written with, so
     * reopening it runs no schema-inference job. */
   def cachedParquet(s: SparkSession, dir: String, tag: String,
-                    srcFile: String)(build: => DataFrame): DataFrame =
-    value(s, dir, tag, srcFile) {
+                    srcFile: String)(build: => DataFrame): DataFrame = {
+    val fp = Tables.fingerprint(s, s"$dir/$srcFile")
+    valueAt(s, dir, tag, srcFile, fp) {
       val path = scratchRoot(s).resolve(s"${tag}_${java.util.UUID.randomUUID()}")
       val df = build
       df.write.parquet(path.toString)
+      retain(s, dir, tag, fp, path)
       s.read.schema(df.schema).parquet(path.toString)
     }
+  }
+
+  /** The scratch directories of each key's [[cachedParquet]] builds,
+    * newest first, with the fingerprint each was built at. */
+  private val scratchDirs =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), List[(Any, Path)]]()
+
+  /** Record `path` as the newest build of its key at `fp`, and delete the
+    * directories built at any fingerprint older than the newest two. */
+  private def retain(s: SparkSession, dir: String, tag: String, fp: Any, path: Path): Unit = {
+    scratchDirs.keySet.removeIf(k => k._1.sparkContext.isStopped)
+    var dropped = List.empty[(Any, Path)]
+    scratchDirs.compute((s, dir, tag), (_, old) => {
+      val all = (fp -> path) :: Option(old).getOrElse(Nil)
+      val newest = all.map(_._1).distinct.take(2)
+      val (keep, drop) = all.partition(b => newest.contains(b._1))
+      dropped = drop
+      keep
+    })
+    dropped.foreach(b => deleteRecursively(b._2.toFile))
+  }
 
   /** `java.io.tmpdir/graft-memo-<appId>`. Whichever call creates it also
     * registers its deletion at application end, so it is registered once
     * per application and nothing outlives `spark.stop()`. */
-  private def scratchRoot(s: SparkSession): Path = {
+  private[graft] def scratchRoot(s: SparkSession): Path = {
     val root = Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft-memo-${s.sparkContext.applicationId}")
     try {

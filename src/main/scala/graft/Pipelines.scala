@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   * Relation `r` of version `n` lives at `<cacheDir>/r/v=<n>`. A read
   * looks the version up once and renders every relation at it. A
   * committed version never changes, so its `BaseRelation` is opened once
-  * per (relation, version) — a [[Memo.valueAt]] tagged `relation:<r>`,
-  * which a newer version replaces — and every render reads it with
+  * per (relation, version), with the schema its writer stored in the
+  * footer — a [[Memo.valueAt]] tagged `relation:<r>`, which a newer
+  * version replaces — and every render reads it with
   * `baseRelationToDataFrame`: no listing and no schema inference.
   *
   * Cache relations are written UNORDERED. Every serving read imposes its
@@ -51,21 +52,30 @@ object Pipelines {
 
   /** Write `relations` as version `n` = the newest committed chain_tip
     * version + 1 (1 in an empty dir), chain_tip last so that its commit
-    * commits `n`, then prune each below `n - 1` ([[Versions]]). A crashed
-    * tick's uncommitted `v=<n>` was never read, and is overwritten. */
+    * commits `n`, then prune each below `n - 1` ([[Versions]]). The tick
+    * first claims `n` in the cache dir, so of two ticks that overlap on one
+    * dir (the reference's `setInterval` fires whether or not the last
+    * update finished) the second fails naming the claim instead of writing
+    * into the first's version. A failed tick releases its claim; its
+    * uncommitted `v=<n>` was never read, and the next tick overwrites it. */
   private[graft] def publish(s: SparkSession, cacheDir: String,
                              relations: Seq[(String, DataFrame)]): Unit = {
     val prev = Versions.latest(s, s"$cacheDir/chain_tip")
     val n = prev.fold(1L)(_ + 1)
-    relations.sortBy(_._1 == "chain_tip").foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(Versions.path(s"$cacheDir/$name", n)) }
-    prev.foreach(p => relations.foreach(r => Versions.prune(s, s"$cacheDir/${r._1}", p)))
+    Versions.claimed(s, cacheDir, n)(
+      relations.sortBy(_._1 == "chain_tip").foreach { case (name, df) =>
+        df.write.mode("overwrite").parquet(Versions.path(s"$cacheDir/$name", n)) })
+    prev.foreach(p => (cacheDir +: relations.map(r => s"$cacheDir/${r._1}"))
+      .foreach(Versions.prune(s, _, p)))
   }
 
-  /** Relation `name` of cache version `n`, opened once per version. */
+  /** Relation `name` of cache version `n`, opened once per version with
+    * the schema its writer stored: no inference job. */
   private def open(s: SparkSession, cacheDir: String, name: String, n: Long): DataFrame =
-    s.baseRelationToDataFrame(Memo.valueAt(s, cacheDir, s"relation:$name", name, n)(
-      Tables.relationOf(s, Versions.path(s"$cacheDir/$name", n))))
+    s.baseRelationToDataFrame(Memo.valueAt(s, cacheDir, s"relation:$name", name, n) {
+      val path = Versions.path(s"$cacheDir/$name", n)
+      Tables.relationOf(s, path, Some(Tables.writtenSchema(s, path)))
+    })
 
   /** The newest committed cache version; fails descriptively without one. */
   private def version(s: SparkSession, cacheDir: String): Long =

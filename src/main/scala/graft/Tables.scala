@@ -3,7 +3,9 @@ package graft
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet table readers for the benchmark tables (TESTDATA.md), and the
   * session-scoped relation resolver that every read of a table goes
@@ -123,12 +125,31 @@ object Tables {
   }
 
   /** The parquet relation at `path` as `spark.read.parquet` resolves it:
-    * one listing and one schema-inference job. Callers hold on to it and
-    * read it with `baseRelationToDataFrame`, which neither lists nor infers. */
-  private[graft] def relationOf(s: SparkSession, path: String): BaseRelation =
-    s.read.parquet(path).queryExecution.analyzed.collectFirst {
+    * one listing and one schema-inference job, or, with `schema` given,
+    * the listing alone. Callers hold on to it and read it with
+    * `baseRelationToDataFrame`, which neither lists nor infers. */
+  private[graft] def relationOf(s: SparkSession, path: String,
+                                schema: Option[StructType] = None): BaseRelation =
+    schema.fold(s.read)(s.read.schema).parquet(path).queryExecution.analyzed.collectFirst {
       case l: LogicalRelation => l.relation
     }.getOrElse(throw new IllegalStateException(s"$path did not resolve to a file relation"))
+
+  /** The row schema a Spark writer stored in the footer of one data file
+    * of the directory `dir`, read on the driver: what inference would
+    * return for a directory one Spark write produced, without its job. */
+  private[graft] def writtenSchema(s: SparkSession, dir: String): StructType = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val part = root.getFileSystem(conf).listStatus(root)
+      .find(st => !hidden(st.getPath.getName) && st.getPath.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException(s"$dir holds no parquet data file"))
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(part, conf))
+    val json = try r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY) finally r.close()
+    require(json != null, s"${part.getPath} carries no Spark row schema")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
 
   /** Resolver entries held for `path` across live sessions (specs). */
   private[graft] def resolvedEntries(path: String): Int =

@@ -22,8 +22,9 @@ object ScalarQueries {
       .orderBy(col("event_id"))
 
   /** F10/P9 — miner_info projection with rate-of-return economics
-    * (utils.js:1-11, server.js:286-294): pure arithmetic on the leaderboard,
-    * dimension join broadcast. The price/gas inputs come from the
+    * (utils.js:1-11, server.js:286-294): pure arithmetic on the
+    * [[graft.Domain.minerTotals]] rollup, dimension join broadcast. The
+    * price/gas inputs come from the
     * [[graft.sources.Enrichment]] seam (S13–S15) — no constants in the
     * expression; the zero-egress defaults reproduce the reference
     * constants (BASELINE.md).
@@ -43,53 +44,30 @@ object ScalarQueries {
   /** [[rrMinerInfo]] without its presentation order: the `miner_info_rr*`
     * cache relations. */
   private[graft] def rrLeaderboard(latest: Option[Long]): Q = (s, d) =>
-    latest match {
-      // a trailing window filters the commit scan and the memoized winners
-      // at one tip literal (the same windowed winners as a12)
-      case Some(n) =>
-        rrOf(s, d)(Domain.commits(s, d).filter(Domain.inTrailingWindow(s, d, n)),
-          Domain.trailingWinners(s, d, n))
-      case None => rrOf(s, d)(Domain.commits(s, d), Domain.winners(s, d))
-    }
+    rrOf(s, d)(Domain.minerTotals(s, d, latest))
 
-  /** The rr economics of a commits relation and its winners: two
-    * partial-aggregated per-miner rollups joined at miner cardinality.
-    * The seam's price values are read once, when the relation is built,
-    * and enter the plan as typed long literals: a relation built before a
-    * price change keeps the old values, and the plan holds no join to the
-    * prices row. */
-  private[graft] def rrOf(s: SparkSession, d: String)(
-      commits: DataFrame, winners: DataFrame): DataFrame = {
-    val mined = commits
-      .groupBy(col("leader_key_address"))
-      .agg(
-        count(lit(1)).as("total_mined"),
-        sum(col("burn_fee")).as("miner_burned"))
-    val wins = winners
-      .groupBy(col("leader_key_address"))
-      .agg(
-        count(lit(1)).as("total_win"),
-        sum(when(col("stacks_block_height") < Domain.BonusBoundary, 1L)
-          .otherwise(0L)).as("actual_win_bonus"))
-    val lb = mined.join(wins, Seq("leader_key_address"), "left")
-      .withColumn("total_win", coalesce(col("total_win"), lit(0L)))
-      .withColumn("actual_win_bonus", coalesce(col("actual_win_bonus"), lit(0L)))
-      .withColumn("actual_win", col("total_win"))
+  /** The rr economics of a per-miner rollup ([[Domain.minerTotalsOf]]'s
+    * columns), joined to the miner dimension. The seam's price values are
+    * read once, when the relation is built, and enter the plan as typed
+    * long literals: a relation built before a price change keeps the old
+    * values, and the plan holds no join to the prices row. */
+  private[graft] def rrOf(s: SparkSession, d: String)(totals: DataFrame): DataFrame = {
     val sup = Tables.supplier(s, d).select(col("s_suppkey"), col("s_name"))
     val p = graft.sources.Enrichment.current(s)
     val stxMilli = lit(p.stxPriceMilli)
-    val earnMilli = col("actual_win_bonus") * 2466L * stxMilli +
-      (col("actual_win") - col("actual_win_bonus")) * 1000L * stxMilli
+    val earnMilli = col("bonus_win") * 2466L * stxMilli +
+      (col("total_win") - col("bonus_win")) * 1000L * stxMilli
     val costNum = (col("total_mined") * lit(p.gasSats) + col("miner_burned")) *
       lit(p.btcSatScale)
     // shared exact half-up (negative rr floors toward -inf on both engines)
     val rrMilli = graft.functions.ExactRatio.scaled(
       earnMilli * 10L - costNum, costNum, 1000L)
-    lb.join(broadcast(sup), lb("leader_key_address") === sup("s_suppkey"))
+    totals.join(broadcast(sup), totals("leader_key_address") === sup("s_suppkey"))
       .select(
         col("s_name").as("stx_address"),
         concat(lit("btc:"), col("s_name")).as("btc_address"),
-        col("actual_win"), col("actual_win_bonus"), col("total_win"),
+        col("total_win").as("actual_win"), col("bonus_win").as("actual_win_bonus"),
+        col("total_win"),
         col("total_mined"), col("miner_burned"),
         rrMilli.as("rr_milli"))
   }

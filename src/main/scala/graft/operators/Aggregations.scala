@@ -22,23 +22,14 @@ object Aggregations {
     graft.functions.ExactRatio.scaled(num, den, scale)
 
   /** A1+A4 — per-miner leaderboard over commits in range (rpc.js:244-275):
-    * mined = count, burned = sum(fee), won = count_if(winner), plus derived
+    * the [[Domain.minerTotals]] rollup (mined, burned, won) plus derived
     * average_burn (milli-units) and normalized_wins (micro-units)
     * (rpc.js:433-434 — the reference's toFixed(3) presentation rounding,
     * re-expressed as exact scaled integers so both engines agree on every
-    * input). Two partial-aggregated shuffles (commits → per-miner, winners
-    * → per-miner) joined at miner cardinality — no fact-table window.
-    * Unordered: the `miner_info` cache relation; the registered a1 adds
-    * the presentation order. */
-  private[graft] val minerLeaderboard: Q = (s, d) => {
-    val base = Domain.commits(s, d)
-      .groupBy(col("leader_key_address"))
-      .agg(count(lit(1)).as("total_mined"), sum(col("burn_fee")).as("miner_burned"))
-    val wins = Domain.winners(s, d)
-      .groupBy(col("leader_key_address"))
-      .agg(count(lit(1)).as("total_win"))
-    base.join(wins, Seq("leader_key_address"), "left")
-      .withColumn("total_win", coalesce(col("total_win"), lit(0L)))
+    * input). Unordered: the `miner_info` cache relation; the registered a1
+    * adds the presentation order. */
+  private[graft] val minerLeaderboard: Q = (s, d) =>
+    Domain.minerTotals(s, d, None)
       .withColumn("average_burn_milli",
         rationalScaled(col("miner_burned"), col("total_mined"), 1000L))
       // normalized_wins = won / average_burn = won·1000 / avg_milli
@@ -46,19 +37,16 @@ object Aggregations {
         rationalScaled(col("total_win") * 1000L, col("average_burn_milli"), 1000000L))
       .select(col("leader_key_address"), col("total_mined"), col("miner_burned"),
         col("total_win"), col("average_burn_milli"), col("normalized_wins_micro"))
-  }
   private val a1: Q = (s, d) =>
     minerLeaderboard(s, d).orderBy(col("leader_key_address"))
 
   /** A2 — canonical-fork wins with genesis-bonus split (rpc.js:301-305):
-    * a per-miner rollup of the winners relation. */
+    * the miners of the [[Domain.minerTotals]] rollup that won. */
   private val a2: Q = (s, d) =>
-    Domain.winners(s, d)
-      .groupBy(col("leader_key_address"))
-      .agg(
-        count(lit(1)).as("actual_win"),
-        sum(when(col("stacks_block_height") < Domain.BonusBoundary, 1L).otherwise(0L))
-          .as("actual_win_bonus"))
+    Domain.minerTotals(s, d, None)
+      .filter(col("total_win") > 0)
+      .select(col("leader_key_address"), col("total_win").as("actual_win"),
+        col("bonus_win").as("actual_win_bonus"))
       .orderBy(col("leader_key_address"))
 
   /** A3 — global totals (rpc.js:89-90,271,305): single-row global agg. */
@@ -95,10 +83,11 @@ object Aggregations {
   private val a8: Q = (s, d) =>
     blockRollup(s, d).orderBy(col("stacks_block_height"))
 
-  /** A9 — global burned total, scaled sats→BTC and rounded (server.js:334-352). */
+  /** A9 — global burned total, scaled sats→BTC and rounded (server.js:334-352):
+    * the column sum of the [[Domain.minerTotals]] rollup. */
   private val a9: Q = (s, d) =>
-    Domain.commits(s, d)
-      .agg(round(sum(col("burn_fee")) / lit(1e8), 2).as("btc_total"))
+    Domain.minerTotals(s, d, None)
+      .agg(round(sum(col("miner_burned")) / lit(1e8), 2).as("btc_total"))
 
   /** A10 — trailing-20 burn-fee average + raw series (mining_monitor_rpc.js:2-5).
     * Bounded-heights pre-filter: groupBy-then-limit's one shuffle
@@ -152,24 +141,14 @@ object Aggregations {
   }
 
   /** A12 — trailing-N-block leaderboards (server.js:304-331, miner_info100 /
-    * miner_info1000): same pipeline as A1 over the trailing window of
-    * [[Domain.inTrailingWindow]]. The commits side filters the scan at the
-    * memoized tip literal (PushedFilters); the wins come from
-    * [[Domain.trailingWinners]], the one windowed-winners definition the
-    * trailing rr leaderboards share. `n` is the reference's `latest`
-    * route parameter. */
-  def trailingLeaderboard(n: Long): Q = (s, d) => {
-    val base = Domain.commits(s, d).filter(Domain.inTrailingWindow(s, d, n))
-      .groupBy(col("leader_key_address"))
-      .agg(count(lit(1)).as("total_mined"), sum(col("burn_fee")).as("miner_burned"))
-    val wins = Domain.trailingWinners(s, d, n)
-      .groupBy(col("leader_key_address"))
-      .agg(count(lit(1)).as("total_win"))
-    base.join(wins, Seq("leader_key_address"), "left")
+    * miner_info1000): A1's columns of the [[Domain.minerTotals]] rollup
+    * over the trailing window. `n` is the reference's `latest` route
+    * parameter. */
+  def trailingLeaderboard(n: Long): Q = (s, d) =>
+    Domain.minerTotals(s, d, Some(n))
       .select(col("leader_key_address"), col("total_mined"), col("miner_burned"),
-        coalesce(col("total_win"), lit(0L)).as("total_win"))
+        col("total_win"))
       .orderBy(col("leader_key_address"))
-  }
   private val a12 = trailingLeaderboard(100L)
   private val a12b = trailingLeaderboard(1000L)
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -307,15 +308,16 @@ object EventStream {
       }
   }
 
-  /** The current (latest committed) state of ANY versioned merge store —
-    * an empty frame with `schema` (DDL string) before the first commit. */
-  def currentStore(s: SparkSession, storeDir: String, schema: String): DataFrame =
+  /** The current (latest committed) state of ANY versioned merge store,
+    * read with `schema` (DDL string), so the read infers nothing — an
+    * empty frame with that schema before the first commit. */
+  def currentStore(s: SparkSession, storeDir: String, schema: String): DataFrame = {
+    val st = org.apache.spark.sql.types.StructType.fromDDL(schema)
     graft.Versions.latest(s, storeDir) match {
-      case Some(v) => s.read.parquet(graft.Versions.path(storeDir, v))
-      case None => s.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
+      case Some(v) => s.read.schema(st).parquet(graft.Versions.path(storeDir, v))
+      case None => s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), st)
     }
+  }
 
   /** The leaderboard instantiation of [[currentStore]] — the read side of
     * [[leaderboardRefresh]]. */
@@ -330,12 +332,14 @@ object EventStream {
     * consumer that pins a data version (a training run that must see the
     * exact store it saw yesterday). Only the two RETAINED versions
     * ([[graft.Versions]]) are readable: an unpinned version fails loudly
-    * with the retained set instead of silently reading a reused directory. */
+    * with the retained set instead of silently reading a reused directory.
+    * The version is read with the schema its writer stored: no inference. */
   def leaderboardAt(s: SparkSession, storeDir: String, version: Long): DataFrame = {
     val retained = graft.Versions.committed(s, storeDir)
     require(retained.contains(version),
       s"version $version not retained (have: ${retained.mkString(", ")})")
-    s.read.parquet(graft.Versions.path(storeDir, version))
+    val path = graft.Versions.path(storeDir, version)
+    s.read.schema(graft.Tables.writtenSchema(s, path)).parquet(path)
   }
 
   /** CONTINUOUS INCREMENTAL LEADERBOARD — the serving composition of
@@ -552,10 +556,15 @@ object EventStream {
       .write.mode("overwrite").parquet(s"$acceptedDir/b=$batchId")
     bb.write.mode("overwrite").parquet(s"$stateDir/b=$batchId")
     if (marker.forall(_._1 < batchId)) {
-      val out = fs.create(markerPath, true)
+      // written to a temp file and renamed over the marker on close, so a
+      // crash mid-write leaves the previous marker whole
+      val out = CheckpointFileManager
+        .create(markerPath.getParent, s.sparkContext.hadoopConfiguration)
+        .createAtomic(markerPath, overwriteIfPossible = true)
       try out.write(s"$batchId:${math.max(batchMax, marker.fold(Long.MinValue)(_._2))}"
         .getBytes("UTF-8"))
-      finally out.close()
+      catch { case e: Throwable => out.cancel(); throw e }
+      out.close()
     }
   }
 }

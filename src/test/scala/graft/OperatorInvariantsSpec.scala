@@ -286,9 +286,21 @@ class ScalarQueriesSpec extends SparkSpec {
     def inWin(df: org.apache.spark.sql.DataFrame) =
       df.crossJoin(broadcast(hi)).filter(col("stacks_block_height") > col("hi") - n)
         .drop("hi")
-    functions.ScalarQueries.rrOf(spark, sf)(inWin(Domain.commits(spark, sf)),
-      Domain.winnersOf(inWin(Domain.commits(spark, sf))))
+    functions.ScalarQueries.rrOf(spark, sf)(Domain.minerTotalsOf(
+      inWin(Domain.commits(spark, sf)), Domain.winnersOf(inWin(Domain.commits(spark, sf)))))
       .orderBy(col("stx_address"))
+  }
+
+  test("the memoized trailing rollup equals the rollup of the inline-filtered commits") {
+    val tip = Tables.orders(spark, sf).agg(max("o_orderkey")).head().getLong(0)
+    Seq(1L, 50L, 100L, 1000L, tip + 1).foreach { n =>
+      val inWin = Domain.commits(spark, sf).filter(col("stacks_block_height") > tip - n)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("leader_key_address").collect().toSeq
+      val got = rows(Domain.minerTotals(spark, sf, Some(n)))
+      assert(got.nonEmpty, s"n = $n")
+      assert(got === rows(Domain.minerTotalsOf(inWin, Domain.winnersOf(inWin))), s"n = $n")
+    }
   }
 
   test("trailing rr from the memoized winners equals the inline-argmax formulation") {

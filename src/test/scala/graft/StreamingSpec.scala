@@ -188,6 +188,117 @@ class PipelinesSpec extends SparkSpec {
     plans.foreach(p => assert(ordering(p).isEmpty, s"ordering operator in:\n$p"))
   }
 
+  /** A private copy of the sf tables, so a spec may restamp them. */
+  private def tablesCopy(prefix: String): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    new java.io.File(sf).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    dir.toFile
+  }
+
+  /** Rewrite `name`'s mtime as a source rewrite of the same bytes would. */
+  private def restamp(dir: java.io.File, name: String, i: Int): Unit = {
+    val f = new java.io.File(dir, name)
+    assert(f.setLastModified(f.lastModified + 60000L * i))
+  }
+
+  /** Every miner-grain relation reads the one memoized per-miner rollup,
+    * so a tick over a restamped lineitem scans it once for `winners`, once
+    * each for block_info and burn_fee_area, and once per rollup window
+    * (all heights, 1000, 100). */
+  test("a restamped refreshCache tick scans lineitem six times") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val src = tablesCopy("graft_scans")
+    val cache = java.nio.file.Files.createTempDirectory("graft_scans_cache").toString
+    Pipelines.refreshCache(spark, src.getPath, cache)
+    restamp(src, "lineitem.parquet", 1)
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        scans.addAndGet(Plans.collect(qe.executedPlan) {
+          case f: FileSourceScanExec
+              if f.relation.location.rootPaths.exists(_.getName == "lineitem.parquet") => f
+        }.length): Unit
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      Pipelines.refreshCache(spark, src.getPath, cache)
+      org.apache.spark.graftshim.ListenerDrain.waitUntilEmpty(spark.sparkContext, 10000L)
+    } finally spark.listenerManager.unregister(l)
+    assert(scans.get === 6)
+  }
+
+  /** Two or three ticks racing on one cache dir: of the writers that pick
+    * one version, one writes it and the others fail naming its claim, so
+    * every committed version holds exactly one writer's relations. */
+  test("racing refreshCache writers: every call commits a whole version or fails naming the claim") {
+    def digest(path: String): (Long, Long) = {
+      val df = spark.read.parquet(path)
+      val r = df.agg(count(lit(1)), bit_xor(xxhash64(df.columns.toSeq.map(col): _*))).head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+    val single = java.nio.file.Files.createTempDirectory("graft_race_one").toString
+    Pipelines.refreshCache(spark, sf, single)
+    val expected = CacheQueries.Relations.map(r =>
+      r -> digest(Versions.path(s"$single/$r", 1L))).toMap
+    val dir = java.nio.file.Files.createTempDirectory("graft_race").toString
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try (1 to 12).foreach { round =>
+      val before = Versions.latest(spark, s"$dir/chain_tip").getOrElse(0L)
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val calls = (1 to 2 + round % 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[scala.util.Try[Unit]] {
+          def call() = { go.await(); scala.util.Try(Pipelines.refreshCache(spark, sf, dir)) }
+        }))
+      go.countDown()
+      val outcomes = calls.map(_.get(5L, java.util.concurrent.TimeUnit.MINUTES))
+      outcomes.foreach(_.failed.foreach(e => assert(
+        String.valueOf(e.getMessage).contains("claimed by another writer"),
+        s"round $round: a loser must fail on the claim, not mid-write: $e")))
+      val commits = outcomes.count(_.isSuccess)
+      assert(commits >= 1, s"round $round")
+      assert(Versions.latest(spark, s"$dir/chain_tip") === Some(before + commits),
+        s"round $round: each call that returned committed a version of its own")
+      Versions.committed(spark, s"$dir/chain_tip").foreach(v =>
+        CacheQueries.Relations.foreach(r =>
+          assert(digest(Versions.path(s"$dir/$r", v)) === expected(r),
+            s"round $round: $r at v=$v")))
+    } finally pool.shutdown()
+  }
+
+  /** A long-running server restamps lineitem every tick: what a tick
+    * leaves in the memo scratch root and the memo map must not grow with
+    * the tick count. */
+  test("restamped ticks keep the winners scratch dirs, scratch bytes and memo entries bounded") {
+    val src = tablesCopy("graft_soak")
+    val cache = java.nio.file.Files.createTempDirectory("graft_soak_cache").toString
+    val scratch = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft-memo-${spark.sparkContext.applicationId}")
+    def names = Option(scratch.list()).getOrElse(Array.empty[String]).toSet
+    def bytes(f: java.io.File): Long =
+      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).map(bytes).sum
+      else f.length
+    val (namesBefore, bytesBefore) = (names, bytes(scratch))
+    val tip = operators.Windows.ordersTipOf(spark, src.getPath)
+    val ticks = (1 to 10).map { i =>
+      restamp(src, "lineitem.parquet", i)
+      Pipelines.refreshCache(spark, src.getPath, cache)
+      Pipelines.dashboard(spark, cache)
+      Pipelines.burnFeeAreaPageJson(spark, cache, None, 50)
+      val memo = Seq("winners", "miner_totals", s"miner_totals_1000@$tip",
+        s"miner_totals_100@$tip").map(Memo.entries).sum
+      ((names -- namesBefore).count(_.startsWith("winners_")),
+        bytes(scratch) - bytesBefore, memo)
+    }
+    assert(ticks.forall(_._1 <= 2), s"winners_* dirs per tick: ${ticks.map(_._1)}")
+    assert(ticks.drop(2).forall(_._2 <= ticks(1)._2), s"scratch bytes per tick: ${ticks.map(_._2)}")
+    assert(ticks.forall(_._3 <= ticks.head._3), s"memo entries per tick: ${ticks.map(_._3)}")
+  }
+
   test("stateful running max accumulates across micro-batches") {
     def ts(h: Int, m: Int) = Timestamp.valueOf(f"2026-01-01 $h%02d:$m%02d:00")
     val sp = spark
@@ -291,6 +402,32 @@ class PipelinesSpec extends SparkSpec {
     // the marker precisely because it ran) and remains a no-op rewrite
     EventStream.applyDedupBatch(
       docs.filter(col("doc_id").between(100, 200)), stateDir, accDir, 0L)
+  }
+
+  test("a torn dedup marker write leaves the previous marker readable") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_marker").toString
+    val (stateDir, accDir) = (s"$root/state", s"$root/accepted")
+    EventStream.applyDedupBatch(
+      docs.filter(col("doc_id").between(100, 200)), stateDir, accDir, 0L)
+    val marker = java.nio.file.Paths.get(stateDir, "_max_doc_id")
+    def fileKey = java.nio.file.Files.readAttributes(marker,
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey
+    assert(java.nio.file.Files.readString(marker).startsWith("0:"))
+    val firstKey = fileKey
+    // what a crash in the middle of the next marker write leaves behind
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(stateDir,
+      s"._max_doc_id.${java.util.UUID.randomUUID()}.tmp"), "1:")
+    // the previous marker still parses, so the ordering guard still holds
+    val e = intercept[IllegalArgumentException] {
+      EventStream.applyDedupBatch(docs.filter(col("doc_id") < 60), stateDir, accDir, 1L)
+    }
+    assert(e.getMessage.contains("out-of-order ingest"))
+    EventStream.applyDedupBatch(
+      docs.filter(col("doc_id").between(201, 300)), stateDir, accDir, 1L)
+    assert(java.nio.file.Files.readString(marker).startsWith("1:"))
+    // a new file renamed over the marker, never a rewrite of its bytes
+    assert(fileKey != firstKey)
   }
 
   test("bounded streaming dedup re-admits duplicates once state ages out") {
