@@ -117,11 +117,14 @@ object Domain {
 
   /** [[minerTotalsOf]] over all heights (`latest` = None) or over the
     * trailing `latest`-block window ([[inTrailingWindow]]: the commit scan
-    * and the memoized [[winners]] filtered at one tip literal), memoized:
-    * the ONE per-miner rollup that a1, a2, a9, a12, f10 and the five
+    * and the memoized [[winners]] filtered at one tip literal): the ONE
+    * per-miner rollup that a1, a2, a9, a12, f10, w7/w7b/w7k and the five
     * miner-grain cache relations project. `latest` is the reference's
     * route parameter, so the window is an argument, not a fixed set. The
-    * trailing tag carries the tip, because the window also reads orders. */
+    * all-heights rollup is memoized (`Memo.cached`, tag `miner_totals`):
+    * several relations of one refresh tick read it. A trailing window is
+    * returned lazily: each is read once per tick, so a checkpoint would
+    * only add a job. */
   def minerTotals(s: SparkSession, d: String, latest: Option[Long]): DataFrame =
     latest match {
       case None =>
@@ -129,9 +132,7 @@ object Domain {
           minerTotalsOf(commits(s, d), winners(s, d)))
       case Some(n) =>
         val inWindow = inTrailingWindow(s, d, n)
-        Memo.cached(s, d, s"miner_totals_$n@${operators.Windows.ordersTipOf(s, d)}",
-          "lineitem.parquet")(
-          minerTotalsOf(commits(s, d).filter(inWindow), winners(s, d).filter(inWindow)))
+        minerTotalsOf(commits(s, d).filter(inWindow), winners(s, d).filter(inWindow))
     }
 
   /** Winner row_number as DuckDB SQL — the single shared definition used by

@@ -11,12 +11,9 @@ import org.apache.spark.sql.functions._
   * O(cache)).
   *
   * Relation `r` of version `n` lives at `<cacheDir>/r/v=<n>`. A read
-  * looks the version up once and renders every relation at it. A
-  * committed version never changes, so its `BaseRelation` is opened once
-  * per (relation, version), with the schema its writer stored in the
-  * footer — a [[Memo.valueAt]] tagged `relation:<r>`, which a newer
-  * version replaces — and every render reads it with
-  * `baseRelationToDataFrame`: no listing and no schema inference.
+  * looks the version up once and renders every relation at it, opened
+  * through [[Tables.version]]: once per (relation, version), with no
+  * listing and no schema inference.
   *
   * Cache relations are written UNORDERED. Every serving read imposes its
   * own total order, so a sort before the write would buy nothing; the
@@ -69,14 +66,6 @@ object Pipelines {
       .foreach(Versions.prune(s, _, p)))
   }
 
-  /** Relation `name` of cache version `n`, opened once per version with
-    * the schema its writer stored: no inference job. */
-  private def open(s: SparkSession, cacheDir: String, name: String, n: Long): DataFrame =
-    s.baseRelationToDataFrame(Memo.valueAt(s, cacheDir, s"relation:$name", name, n) {
-      val path = Versions.path(s"$cacheDir/$name", n)
-      Tables.relationOf(s, path, Some(Tables.writtenSchema(s, path)))
-    })
-
   /** The newest committed cache version; fails descriptively without one. */
   private def version(s: SparkSession, cacheDir: String): Long =
     Versions.latest(s, s"$cacheDir/chain_tip").getOrElse(throw new IllegalArgumentException(
@@ -99,7 +88,7 @@ object Pipelines {
   private def areaPage(s: SparkSession, cacheDir: String, n: Long,
                        after: Option[(Long, Long)], pageSize: Int): DataFrame = {
     require(pageSize > 0, "pageSize must be positive")
-    val area = open(s, cacheDir, "burn_fee_area", n)
+    val area = Tables.version(s, cacheDir, "burn_fee_area", n)
       .select(col("address"), col("height"), col("cum_filled"))
     val page = after match {
       case Some((a, h)) => area.filter(col("address") > a ||
@@ -177,7 +166,7 @@ object Pipelines {
     val n = version(s, cacheDir)
     def section[T](name: String)(render: DataFrame => T): T =
       Memo.valueAt(s, cacheDir, s"dashboard:$name", name, n)(
-        render(open(s, cacheDir, name, n)))
+        render(Tables.version(s, cacheDir, name, n)))
 
     // Locale.ROOT: the f-interpolator uses the default locale, which would
     // emit comma decimals (invalid JSON) on comma-decimal JVMs

@@ -8,8 +8,8 @@ import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Parquet table readers for the benchmark tables (TESTDATA.md), and the
-  * session-scoped relation resolver that every read of a table goes
-  * through.
+  * one opener of every parquet relation the engine reads: a source table
+  * ([[t]]) or a committed [[Versions]] version of a store ([[version]]).
   *
   * Schema is carried by Parquet itself (self-describing); Catalyst prunes
   * columns and pushes predicates into these scans, so every query should
@@ -22,40 +22,29 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * every query, against a median query of well under a second. Even with
   * the schema given, `spark.read.schema(...).parquet` lists the path a
   * second time, builds a Hadoop `JobConf` and resolves the data source on
-  * every call. The resolver builds a path's `BaseRelation` (its
-  * `HadoopFsRelation`: schema plus file index) once per (session, path,
-  * file fingerprint) and hands every call a FRESH
-  * `baseRelationToDataFrame(relation)`: a new `LogicalRelation` with new
-  * attribute ids, so two reads of one table still self-join, and a read
-  * over an unchanged listing runs no job and re-lists nothing.
-  *   - Fingerprint ([[fingerprint]], which [[Memo]] keys on too): one
-  *     recursive listing of the path per call —
-  *     (path, length, mtime) of every visible entry, partition
-  *     subdirectories included, skipping `_`/`.`-prefixed names exactly as
-  *     Spark's file index does. A rewritten or restamped source re-resolves
-  *     on its next read; `_SUCCESS`, `_zonemap` and `.crc` files never
-  *     cause churn.
-  *   - One entry per (session, path): a new fingerprint REPLACES the old
-  *     entry, and entries of stopped sessions are purged on access (the
-  *     [[Memo]] contract), so a long-lived server refreshing every tick
-  *     holds a bounded map.
-  *   - Only the resolved relation (plus the lazily read footer stats of
-  *     the scan fan-out below) is cached — never a `DataFrame`. Its file
-  *     index is the listing taken right after the entry's fingerprint, so a
-  *     file that changes between the two only makes the next read resolve
-  *     again.
+  * every call. The resolver builds a table's `BaseRelation` (its
+  * `HadoopFsRelation`: schema plus file index) once per file fingerprint
+  * ([[fingerprint]], the staleness rule [[Memo]] keys on) as the
+  * [[Memo.valueAt]] entry `relation:<table>` of the data dir, and hands
+  * every call a FRESH `baseRelationToDataFrame(relation)`: a new
+  * `LogicalRelation` with new attribute ids, so two reads of one table
+  * still self-join, and a read over an unchanged listing runs no job and
+  * lists the path once. Only the resolved relation (plus the lazily read
+  * footer stats of the scan fan-out below) is cached — never a
+  * `DataFrame`. Its file index is the listing taken right after the
+  * fingerprint's, so a file that changes between the two only makes the
+  * next read resolve again.
+  *
   * The relation depends on session confs fixed at build time
   * (`Sessions.engineConfs`); no reader mutates session state.
   */
 object Tables {
 
-  /** One resolved (session, path): the listing it was resolved at, the
-    * relation, and — read only for fanned readers — the parquet footer
-    * stats behind the scan fan-out decision. Keyed by the same fingerprint
-    * as the relation, so a rewritten file gets a fresh partition count on
-    * its next read. */
-  private final class Resolved(val fingerprint: Seq[(String, Long, Long)],
-                               val relation: BaseRelation,
+  /** One resolved source table: the relation and — read only for fanned
+    * readers — the parquet footer stats behind the scan fan-out decision.
+    * Held at the fingerprint the relation was resolved at, so a rewritten
+    * file gets a fresh partition count on its next read. */
+  private final class Resolved(val relation: BaseRelation,
                                files: Seq[FileStatus],
                                hadoopConf: org.apache.hadoop.conf.Configuration) {
     /** Parquet data files of the relation. */
@@ -80,9 +69,6 @@ object Tables {
     }
   }
 
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Resolved]()
-
   /** Spark's hidden-path rule (InMemoryFileIndex): `.`-prefixed names and
     * `_`-prefixed names that are not partition directories. */
   private def hidden(name: String): Boolean =
@@ -103,33 +89,20 @@ object Tables {
     files.map(st =>
       (st.getPath.toString, st.getLen, st.getModificationTime)).sortBy(_._1)
 
-  /** The staleness rule of every session-scoped cache in the engine (this
-    * resolver and [[Memo]]): (path, length, mtime) of every visible entry
-    * under `path`, sorted. A missing path throws FileNotFoundException. */
+  /** The staleness rule of the engine's one cache layer ([[Memo]]):
+    * (path, length, mtime) of every visible entry under `path`, partition
+    * subdirectories included, sorted. Hidden names are skipped exactly as
+    * Spark's file index skips them, so `_SUCCESS`, `_zonemap` and `.crc`
+    * files never cause churn. A missing path throws FileNotFoundException. */
   private[graft] def fingerprint(s: SparkSession, path: String): Seq[(String, Long, Long)] =
     fingerprintOf(listing(s, path))
-
-  private def resolve(s: SparkSession, path: String): Resolved = {
-    resolved.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    val files = listing(s, path)
-    val fp = fingerprintOf(files)
-    val key = (s, path)
-    val hit = resolved.get(key)
-    if (hit != null && hit.fingerprint == fp) hit
-    else {
-      val e = new Resolved(fp, relationOf(s, path), files,
-        s.sparkContext.hadoopConfiguration)
-      resolved.put(key, e)
-      e
-    }
-  }
 
   /** The parquet relation at `path` as `spark.read.parquet` resolves it:
     * one listing and one schema-inference job, or, with `schema` given,
     * the listing alone. Callers hold on to it and read it with
     * `baseRelationToDataFrame`, which neither lists nor infers. */
-  private[graft] def relationOf(s: SparkSession, path: String,
-                                schema: Option[StructType] = None): BaseRelation =
+  private def relationOf(s: SparkSession, path: String,
+                         schema: Option[StructType] = None): BaseRelation =
     schema.fold(s.read)(s.read.schema).parquet(path).queryExecution.analyzed.collectFirst {
       case l: LogicalRelation => l.relation
     }.getOrElse(throw new IllegalStateException(s"$path did not resolve to a file relation"))
@@ -137,7 +110,7 @@ object Tables {
   /** The row schema a Spark writer stored in the footer of one data file
     * of the directory `dir`, read on the driver: what inference would
     * return for a directory one Spark write produced, without its job. */
-  private[graft] def writtenSchema(s: SparkSession, dir: String): StructType = {
+  private def writtenSchema(s: SparkSession, dir: String): StructType = {
     val conf = s.sparkContext.hadoopConfiguration
     val root = new Path(dir)
     val part = root.getFileSystem(conf).listStatus(root)
@@ -151,9 +124,17 @@ object Tables {
     DataType.fromJson(json).asInstanceOf[StructType]
   }
 
-  /** Resolver entries held for `path` across live sessions (specs). */
-  private[graft] def resolvedEntries(path: String): Int =
-    resolved.keySet.stream().filter(_._2 == path).count().toInt
+  /** Relation `name` of the committed [[Versions]] version `v` under
+    * `dir` (`<dir>/<name>/v=<v>`). A committed version never changes, so
+    * its number is the fingerprint: the relation is opened once per
+    * version, with the schema its writer stored (no inference job), as the
+    * [[Memo.valueAt]] entry `relation:<name>` of `dir`, which a newer
+    * version replaces. A hit lists nothing. */
+  private[graft] def version(s: SparkSession, dir: String, name: String, v: Long): DataFrame =
+    s.baseRelationToDataFrame(Memo.valueAt(s, dir, s"relation:$name", name, v) {
+      val path = Versions.path(s"$dir/$name", v)
+      relationOf(s, path, Some(writtenSchema(s, path)))
+    })
 
   /** The fewest rows a fanned-out scan task must receive ([[fanoutFor]]). */
   private val FanoutRowsPerTask = 512L
@@ -211,7 +192,9 @@ object Tables {
   private def t(s: SparkSession, dir: String, name: String,
                 fan: Boolean = false): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val e = resolve(s, path)
+    val files = listing(s, path)
+    val e = Memo.valueAt(s, dir, s"relation:$name", s"$name.parquet", fingerprintOf(files))(
+      new Resolved(relationOf(s, path), files, s.sparkContext.hadoopConfiguration))
     val df = s.baseRelationToDataFrame(e.relation)
     if (!fan) df
     else fanoutFor(s, e) match {

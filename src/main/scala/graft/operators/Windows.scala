@@ -274,18 +274,14 @@ object Windows {
       .orderBy(col("stacks_block_height").desc)
   }
 
-  /** The per-miner burn leaderboard both pagination forms serve. */
-  private def minerBurns(s: SparkSession, d: String): DataFrame =
-    Domain.commits(s, d)
-      .groupBy(col("leader_key_address"))
-      .agg(sum(col("burn_fee")).as("miner_burned"))
-
   /** W7 — offset pagination with the reference's page/size route params as
     * real arguments (server.js:153-154), plus the total count. The
     * row_number runs over the POST-AGG leaderboard (bounded by miner
-    * cardinality); for unbounded serving use [[keysetPage]]. */
+    * cardinality), a projection of the one per-miner rollup
+    * ([[Domain.minerTotals]]); for unbounded serving use [[keysetPage]]. */
   def pagination(page: Long, size: Long): Q = (s, d) => {
-    val lb = minerBurns(s, d)
+    val lb = Domain.minerTotals(s, d, None)
+      .select(col("leader_key_address"), col("miner_burned"))
     val total = lb.agg(count(lit(1)).as("total_miners"))
     lb.withColumn("rn",
         row_number().over(Window.orderBy(col("leader_key_address"))))
@@ -309,9 +305,12 @@ object Windows {
     * address LIMIT size`. The predicate prunes before any ranking, so a page
     * fetch is O(page) work no matter how deep into the result set it is —
     * the scale-safe serving pattern when miners number in the millions
-    * (row_number pagination re-ranks everything above the offset). */
+    * (row_number pagination re-ranks everything above the offset). The
+    * page filters the memoized per-miner rollup ([[Domain.minerTotals]]),
+    * so a hit reads miner-grain rows, not the commit scan. */
   def keysetPage(after: Long, size: Int): Q = (s, d) =>
-    minerBurns(s, d)
+    Domain.minerTotals(s, d, None)
+      .select(col("leader_key_address"), col("miner_burned"))
       .filter(col("leader_key_address") > after)
       .orderBy(col("leader_key_address"))
       .limit(size)

@@ -309,14 +309,19 @@ object EventStream {
   }
 
   /** The current (latest committed) state of ANY versioned merge store,
-    * read with `schema` (DDL string), so the read infers nothing — an
-    * empty frame with that schema before the first commit. */
-  def currentStore(s: SparkSession, storeDir: String, schema: String): DataFrame = {
-    val st = org.apache.spark.sql.types.StructType.fromDDL(schema)
+    * opened through [[graft.Tables.version]] (no inference job) — an
+    * empty frame with `schema` (DDL string) before the first commit. */
+  def currentStore(s: SparkSession, storeDir: String, schema: String): DataFrame =
     graft.Versions.latest(s, storeDir) match {
-      case Some(v) => s.read.schema(st).parquet(graft.Versions.path(storeDir, v))
-      case None => s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), st)
+      case Some(v) => storeVersion(s, storeDir, v)
+      case None => s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        org.apache.spark.sql.types.StructType.fromDDL(schema))
     }
+
+  /** Committed version `v` of the store at `storeDir`. */
+  private def storeVersion(s: SparkSession, storeDir: String, v: Long): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(storeDir)
+    graft.Tables.version(s, root.getParent.toString, root.getName, v)
   }
 
   /** The leaderboard instantiation of [[currentStore]] — the read side of
@@ -333,13 +338,12 @@ object EventStream {
     * exact store it saw yesterday). Only the two RETAINED versions
     * ([[graft.Versions]]) are readable: an unpinned version fails loudly
     * with the retained set instead of silently reading a reused directory.
-    * The version is read with the schema its writer stored: no inference. */
+    * The version opens like [[currentStore]]'s: no inference. */
   def leaderboardAt(s: SparkSession, storeDir: String, version: Long): DataFrame = {
     val retained = graft.Versions.committed(s, storeDir)
     require(retained.contains(version),
       s"version $version not retained (have: ${retained.mkString(", ")})")
-    val path = graft.Versions.path(storeDir, version)
-    s.read.schema(graft.Tables.writtenSchema(s, path)).parquet(path)
+    storeVersion(s, storeDir, version)
   }
 
   /** CONTINUOUS INCREMENTAL LEADERBOARD — the serving composition of

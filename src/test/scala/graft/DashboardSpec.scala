@@ -319,26 +319,27 @@ class DashboardSpec extends SparkSpec {
     assert(reads(spark.newSession(), dir, at) === expected)
   }
 
-  test("refreshes keep two committed versions, one memo entry and no resolver entries") {
+  test("refreshes keep two committed versions, one memo entry, one relation entry each") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dash_bounded").toString
-    def resolverEntries = CacheQueries.Relations.map(r =>
-      Tables.resolvedEntries(s"$dir/$r") +
-        (1L to 10L).map(v => Tables.resolvedEntries(Versions.path(s"$dir/$r", v))).sum).sum
+    // every relation but miner_info is read by the dashboard or a page:
+    // each holds one opened version, the newest
+    def relationEntries = CacheQueries.Relations.map(r => r -> Memo.entries(dir, s"relation:$r"))
+    val oneEach = CacheQueries.Relations.map(r => r -> (if (r == "miner_info") 0 else 1))
     val memoBefore = Memo.entries("dashboard:block_info")
     Pipelines.refreshCache(spark, sf, dir)
     val expected = Pipelines.dashboard(spark, dir)
-    val resolverAfterOne = resolverEntries
+    assert(relationEntries === oneEach)
     (1 to 5).foreach { _ =>
       Pipelines.refreshCache(spark, sf, dir)
       assert(Pipelines.dashboard(spark, dir) === expected)
       Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
+      assert(relationEntries === oneEach)
     }
     CacheQueries.Relations.foreach { r =>
       assert(Versions.committed(spark, s"$dir/$r") === Seq(6L, 5L), r)
       assert(new java.io.File(dir, r).list().toSeq.sorted === Seq("v=5", "v=6"), r)
     }
     assert(Memo.entries("dashboard:block_info") === memoBefore + 1)
-    assert(resolverEntries === resolverAfterOne)
   }
 
   test("winnerPie and rateOfReturn carry the all/r1000/r100 triple") {

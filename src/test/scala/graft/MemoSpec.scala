@@ -184,6 +184,19 @@ class MemoSpec extends SparkSpec {
     assert(Memo.entries("memospec_missing_core") === 0)
   }
 
+  /** A serving process that refreshes on a timer never drains the log. */
+  test("an undrained build log keeps at most its cap, newest builds last") {
+    val dir = java.nio.file.Files.createTempDirectory("memospec_log").toString
+    Memo.drainBuilds()
+    val n = 2 * Memo.BuildLogCap
+    (1 to n).foreach(i =>
+      Memo.valueAt(spark, dir, s"memospec_log_$i", "documents.parquet", i)(i))
+    val logged = Memo.drainBuilds().map(_._1)
+    assert(logged.size <= Memo.BuildLogCap, s"${logged.size} builds held")
+    assert(logged.lastOption === Some(s"memospec_log_$n"), "the newest build is kept")
+    assert(!logged.contains("memospec_log_1"), "the oldest build is dropped")
+  }
+
   /** The cell_asg → k-means shape: a value build nested inside a core
     * build, both on the one map. */
   test("a value built inside a cached build nests; the parent logs exclusive time") {

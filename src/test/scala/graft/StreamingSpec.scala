@@ -292,11 +292,12 @@ class PipelinesSpec extends SparkSpec {
       val memo = Seq("winners", "miner_totals", s"miner_totals_1000@$tip",
         s"miner_totals_100@$tip").map(Memo.entries).sum
       ((names -- namesBefore).count(_.startsWith("winners_")),
-        bytes(scratch) - bytesBefore, memo)
+        bytes(scratch) - bytesBefore, memo, Memo.entries(src.getPath, "relation:lineitem"))
     }
     assert(ticks.forall(_._1 <= 2), s"winners_* dirs per tick: ${ticks.map(_._1)}")
     assert(ticks.drop(2).forall(_._2 <= ticks(1)._2), s"scratch bytes per tick: ${ticks.map(_._2)}")
     assert(ticks.forall(_._3 <= ticks.head._3), s"memo entries per tick: ${ticks.map(_._3)}")
+    assert(ticks.forall(_._4 == 1), s"lineitem relation entries per tick: ${ticks.map(_._4)}")
   }
 
   test("stateful running max accumulates across micro-batches") {
@@ -557,6 +558,32 @@ class PipelinesSpec extends SparkSpec {
         EventStream.leaderboardAt(spark, s"$dir/store", 99L)
       }
     } finally q.stop()
+  }
+
+  test("two reads of one committed store version share one relation; a newer version replaces it") {
+    val sp = spark
+    import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("lb_open").toString
+    val store = s"$dir/store"
+    def fold(rows: Seq[(Long, Long)], batchId: Long): Unit =
+      EventStream.applyMergeBatch(rows.toDF("leader_key_address", "burn_fee"), store,
+        batchId, EventStream.LeaderboardSchema, EventStream.mergeLeaderboard)
+    def relation(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+      }.get
+    fold(Seq((1L, 100L)), 0L)
+    val a = EventStream.currentLeaderboard(spark, store)
+    var b: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf { b = EventStream.currentLeaderboard(spark, store) } === 0)
+    assert(relation(a) eq relation(b), "one committed version must share one relation")
+    fold(Seq((2L, 50L)), 1L)
+    val c = EventStream.currentLeaderboard(spark, store)
+    assert(relation(c) ne relation(a))
+    assert(c.orderBy("leader_key_address").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ===
+      Seq((1L, 1L, 100L), (2L, 1L, 50L)))
+    assert(Memo.entries(dir, "relation:store") === 1, "a newer version replaces the entry")
   }
 
   test("streaming sketch store: micro-batches fold to the one-pass distinct estimates") {

@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, Partitionin
 import org.apache.spark.sql.functions.{expr, xxhash64}
 import org.apache.spark.sql.sources.BaseRelation
 
-/** Laws of the session-scoped relation resolver behind the table readers:
+/** Laws of the relation resolver behind the table readers (the [[Memo]]
+  * entry `relation:<table>` of the data dir):
   * a resolved table launches no schema-inference job, every call is a
   * fresh `LogicalRelation` over one shared relation, a rewritten or
   * restamped source re-resolves in place — and the session's
@@ -60,7 +61,7 @@ class TablesSpec extends SparkSpec {
     assert(df.columns.toSeq === Seq("a", "b"))
     assert(df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((3L, "x")))
-    assert(Tables.resolvedEntries(path) === 1,
+    assert(Memo.entries(dir, "relation:orders") === 1,
       "a new fingerprint must replace the entry, not add one")
   }
 
@@ -76,7 +77,7 @@ class TablesSpec extends SparkSpec {
     assert(jobsOf { df = Tables.orders(spark, dir) } >= 1,
       "the restamped path must re-run schema inference")
     assert(hash(df) === before)
-    assert(Tables.resolvedEntries(path) === 1)
+    assert(Memo.entries(dir, "relation:orders") === 1)
     // the new relation is a new listing: it carries the new stamp
     assert(relation(df) ne relation(first))
     val stamps = (r: BaseRelation) =>
