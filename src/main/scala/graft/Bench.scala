@@ -61,27 +61,6 @@ object Bench {
     // dev loop: an optional comma-separated arg restricts to named queries
     // (isolated timings — full-run numbers carry ±2x cross-query noise)
     val only = args.headOption.map(_.split(",").toSet)
-    // exact-groundtruth tier: skipped BY MEASURED DATA above the ceiling
-    // (ScaleTiers — the sf100 cliques make their candidate sets answer-
-    // bound; the capped twins are the tier that runs there). An explicit
-    // `only` arg overrides the skip: a dev pointing the bench at a named
-    // exact query at scale is asking for exactly that probe.
-    // failure-isolated like every per-query crash (the no-documents-table
-    // dir must still produce a JSON record — the document-family queries
-    // will land in "failed" on their own)
-    val skipped =
-      if (only.isDefined) Set.empty[String]
-      else try ScaleTiers.skippedAt(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] scale-tier probe failed (${e.getMessage}); " +
-          "running all queries"); Set.empty[String] }
-    if (skipped.nonEmpty)
-      System.err.println(s"[bench] exact-groundtruth tier skipped at this " +
-        s"scale (> ${ScaleTiers.ExactTierMaxDocs} docs): " +
-        skipped.toSeq.sorted.mkString(","))
-    // deterministic name order: run-to-run comparability beats hash order
-    val chosen = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) && !skipped(n) }
     // Shared-core (Memo) builds are attributed to their OWN `memo:<tag>`
     // line items, and the enclosing query's time is reported build-free:
     // memoization made per-query numbers order-dependent (the first query
@@ -101,6 +80,28 @@ object Bench {
       }
       builds.map(_._2).sum
     }
+    // exact-groundtruth tier: skipped BY MEASURED DATA above the ceiling
+    // (ScaleTiers — the sf100 cliques make their candidate sets answer-
+    // bound; the capped twins are the tier that runs there). An explicit
+    // `only` arg overrides the skip: a dev pointing the bench at a named
+    // exact query at scale is asking for exactly that probe.
+    // failure-isolated like every per-query crash (the no-documents-table
+    // dir must still produce a JSON record — the document-family queries
+    // will land in "failed" on their own)
+    val skipped =
+      if (only.isDefined) Set.empty[String]
+      else try ScaleTiers.skippedAt(spark, sfDir)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] scale-tier probe failed (${e.getMessage}); " +
+          "running all queries"); Set.empty[String] }
+    drainInto() // the probe's builds (the documents relation and row count)
+    if (skipped.nonEmpty)
+      System.err.println(s"[bench] exact-groundtruth tier skipped at this " +
+        s"scale (> ${ScaleTiers.ExactTierMaxDocs} docs): " +
+        skipped.toSeq.sorted.mkString(","))
+    // deterministic name order: run-to-run comparability beats hash order
+    val chosen = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) && !skipped(n) }
     // Warm the JVM/codegen/scan paths once per FAMILY so the first timed
     // query of each isn't charged JIT/codegen warmup (r1: first query +4s;
     // r3: family-first queries +1-2s each). Families and their warm query

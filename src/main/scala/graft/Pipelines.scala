@@ -61,7 +61,7 @@ object Pipelines {
     val n = prev.fold(1L)(_ + 1)
     Versions.claimed(s, cacheDir, n)(
       relations.sortBy(_._1 == "chain_tip").foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(Versions.path(s"$cacheDir/$name", n)) })
+        df.write.mode("overwrite").parquet(Versions.pathFor(s, s"$cacheDir/$name", n)) })
     prev.foreach(p => (cacheDir +: relations.map(r => s"$cacheDir/${r._1}"))
       .foreach(Versions.prune(s, _, p)))
   }
@@ -154,16 +154,25 @@ object Pipelines {
     *   - rateOfReturn carries real values (the reference's packRR ships
     *     empty lists — superseded to intent, SURVEY §2.12 R4).
     *
-    * The cache version is looked up once per call. Each section reads one
-    * relation at that version and is rendered once per version: a
-    * [[Memo.valueAt]] tagged `dashboard:<relation>`, so a read over an
-    * unchanged cache costs one version lookup and opens nothing. The price
-    * fields stay a live read on every call: the enrichment fetcher
-    * rewrites them on its own clock, outside the cache dir. */
+    * The cache version and the prices are looked up on every call; the
+    * prices stay a live read because the enrichment fetcher rewrites them
+    * on its own clock, outside the cache dir. The document is rendered
+    * once per (version, prices): a [[Memo.valueAt]] tagged `dashboard`
+    * with both as its fingerprint, so a price change at an unchanged
+    * version renders again and replaces it. Each section reads one
+    * relation at the version and is rendered once per version (tag
+    * `dashboard:<relation>`), so that render opens nothing either. */
   def dashboard(s: SparkSession, cacheDir: String): String = {
     // the burnchain tip timestamp comes from the chain_tip cache relation,
     // not an inlined constant (ADVICE r3); its versions are the cache's
     val n = version(s, cacheDir)
+    val pr = sources.Enrichment.current(s)
+    // a source of its own: a new document retires no section entry
+    Memo.valueAt(s, cacheDir, "dashboard", "dashboard", (n, pr))(render(s, cacheDir, n, pr))
+  }
+
+  private def render(s: SparkSession, cacheDir: String, n: Long,
+                     pr: sources.Enrichment.Prices): String = {
     def section[T](name: String)(render: DataFrame => T): T =
       Memo.valueAt(s, cacheDir, s"dashboard:$name", name, n)(
         render(Tables.version(s, cacheDir, name, n)))
@@ -263,7 +272,6 @@ object Pipelines {
 
     // price / btc_total / btc_hash_power (server.js:268-275) via the
     // S13–S15 enrichment seam (live) + the cached a9 total
-    val pr = sources.Enrichment.current(s)
     val stx = pr.stxPriceMilli.toDouble / 1000.0
     val btc = pr.btcSatScale * 10000L
     val hashPower = pr.hashPower

@@ -445,7 +445,7 @@ object EventStream {
     val prev = graft.Versions.latest(s, storeDir)
     if (!prev.exists(_ >= batchId)) {
       merge(currentStore(s, storeDir, schema), batch)
-        .write.mode("overwrite").parquet(graft.Versions.path(storeDir, batchId))
+        .write.mode("overwrite").parquet(graft.Versions.pathFor(s, storeDir, batchId))
       prev.foreach(graft.Versions.prune(s, storeDir, _))
     }
   }
@@ -549,12 +549,13 @@ object EventStream {
           s"<= already-indexed max $maxId — near-dups of earlier docs " +
           "would be silently admitted")
     }
+    val bb = graft.operators.Dedup.bandSignatures(batch).localCheckpoint(true)
     val state =
       if (fs.exists(new org.apache.hadoop.fs.Path(stateDir)))
-        // select away the b=<id> partition column parquet discovery adds
-        s.read.parquet(stateDir).select("doc_id", "band_idx", "bh")
-      else graft.operators.Dedup.bandSignatures(batch.limit(0))
-    val bb = graft.operators.Dedup.bandSignatures(batch).localCheckpoint(true)
+        // opened with the schema every b=<id> was written with: no
+        // inference job. The select drops the b partition column.
+        s.read.schema(bb.schema).parquet(stateDir).select("doc_id", "band_idx", "bh")
+      else bb.limit(0)
     val verdicts = graft.operators.Dedup.verdictsFor(state, batch, bb)
     batch.join(verdicts.filter(col("accepted")), Seq("doc_id"), "leftsemi")
       .write.mode("overwrite").parquet(s"$acceptedDir/b=$batchId")

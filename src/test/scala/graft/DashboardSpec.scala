@@ -199,6 +199,23 @@ class DashboardSpec extends SparkSpec {
     } finally spark.conf.unset(sources.Enrichment.PathKey)
   }
 
+  test("a price file rewritten between two reads at one version renders the new prices") {
+    val dir = refreshed("graft_dash_reprice")
+    val prices = java.nio.file.Files.createTempFile("graft_dash_reprice", ".json")
+    def read(): JValue = JsonMethods.parse(Pipelines.dashboard(spark, dir))
+    try {
+      spark.conf.set(sources.Enrichment.PathKey, prices.toString)
+      java.nio.file.Files.writeString(prices, """{"stx_price_milli": 2500}""")
+      val first = read()
+      java.nio.file.Files.writeString(prices, """{"stx_price_milli": 4250}""")
+      val second = read()
+      assert((first \ "price" \ "stx") === JDouble(2.5))
+      assert((second \ "price" \ "stx") === JDouble(4.25))
+      assert(first.removeField(_._1 == "price") === second.removeField(_._1 == "price"))
+      assert(Memo.entries(dir, "dashboard") === 1, "a new price replaces the rendered document")
+    } finally spark.conf.unset(sources.Enrichment.PathKey)
+  }
+
   test("a read over an unchanged cache with no price file runs no Catalyst query") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener

@@ -560,6 +560,28 @@ class PipelinesSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a merge-store batch that would leave a gap fails loudly; a replayed batch stays a no-op") {
+    val sp = spark
+    import sp.implicits._
+    val store = s"${java.nio.file.Files.createTempDirectory("lb_gap")}/store"
+    def fold(rows: Seq[(Long, Long)], batchId: Long): Unit =
+      EventStream.applyMergeBatch(rows.toDF("leader_key_address", "burn_fee"), store,
+        batchId, EventStream.LeaderboardSchema, EventStream.mergeLeaderboard)
+    def rows() = EventStream.currentLeaderboard(spark, store)
+      .orderBy("leader_key_address").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    fold(Seq((1L, 100L)), 0L)
+    fold(Seq((2L, 50L)), 1L)
+    val before = rows()
+    val e = intercept[IllegalStateException](fold(Seq((3L, 7L)), 3L))
+    assert(e.getMessage.contains(s"version 3 of $store") &&
+      e.getMessage.contains("newest committed version 1"), e.getMessage)
+    assert(!new java.io.File(Versions.path(store, 3L)).exists)
+    fold(Seq((2L, 50L)), 1L)
+    assert(rows() === before)
+    assert(Versions.latest(spark, store) === Some(1L))
+  }
+
   test("two reads of one committed store version share one relation; a newer version replaces it") {
     val sp = spark
     import sp.implicits._
