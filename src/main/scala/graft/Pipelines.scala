@@ -10,27 +10,30 @@ import org.apache.spark.sql.functions._
   * a timer, and readers never touch the source tables (the read path is
   * O(cache)).
   *
-  * Relation `r` of version `n` lives at `<cacheDir>/r/v=<n>`. A read
-  * looks the version up once and renders every relation at it, opened
-  * through [[Tables.version]]: once per (relation, version), with no
-  * listing and no schema inference.
+  * Relation `r` of version `n` lives in the dir the version's manifest
+  * names, `<cacheDir>/r/v=<n>-<attempt id>`. A read looks the version up
+  * once and renders every relation at it, opened through
+  * [[Tables.version]]: once per (relation, version), with no listing and
+  * no schema inference.
   *
   * Cache relations are written UNORDERED. Every serving read imposes its
   * own total order, so a sort before the write would buy nothing; the
   * presentation order lives in the query registry (a1, j8, a8, w5, f10)
   * and in [[operators.Windows.gapfill]] / [[functions.ScalarQueries.rrMinerInfo]].
   *
-  * At 100 TB: each cache write is a small AGGREGATED result
-  * (leaderboard ≈ #miners, chain ≈ #heights in range, rollup ≈ #heights) —
-  * the big fact table never gets copied, only scanned.
+  * Not every relation is aggregate-sized: the leaderboards hold ≈ #miners
+  * rows and burn_fee_area ≈ #miners × window, but block_info holds one row
+  * per height with every commit re-encoded as a string, so a version of
+  * it grows with the fact table (707 MB at sf10, where lineitem is
+  * 1.1 GB), and the two retained versions make the cache larger than its
+  * source. The dashboard reads 20 of its rows.
   */
 object Pipelines {
 
   /** The update() cycle: recompute every dashboard relation and publish
     * them as the cache's next version (the reference recomputes all Redis
     * keys per tick, server.js:280-331). Idempotent — same contract as the
-    * whole-key Redis SET. Every relation here is aggregate-sized (≈ #miners
-    * or #heights-in-window rows), never a copy of the fact table. */
+    * whole-key Redis SET. */
   def refreshCache(s: SparkSession, sfDir: String, cacheDir: String): Unit =
     publish(s, cacheDir, Seq(
       // miner_info: P9 projection of A1+A2+A4 (rpc.js:430-445)
@@ -47,29 +50,20 @@ object Pipelines {
       "btc_total" -> operators.Aggregations.queries("a9_btc_total")(s, sfDir),
       "chain_tip" -> Domain.chainTip(s, sfDir)))
 
-  /** Write `relations` as version `n` = the newest committed chain_tip
-    * version + 1 (1 in an empty dir), chain_tip last so that its commit
-    * commits `n`, then prune each below `n - 1` ([[Versions]]). The tick
-    * first claims `n` in the cache dir, so of two ticks that overlap on one
-    * dir (the reference's `setInterval` fires whether or not the last
-    * update finished) the second fails naming the claim instead of writing
-    * into the first's version. A failed tick releases its claim; its
-    * uncommitted `v=<n>` was never read, and the next tick overwrites it. */
+  /** Write `relations` as the cache's next [[Versions]] version (1 in an
+    * empty dir). Of two ticks that overlap on one dir (the reference's
+    * `setInterval` fires whether or not the last update finished), the
+    * second to commit fails naming the version instead of writing into
+    * the first's; a failed or killed tick leaves nothing a reader or the
+    * next tick sees. */
   private[graft] def publish(s: SparkSession, cacheDir: String,
-                             relations: Seq[(String, DataFrame)]): Unit = {
-    val prev = Versions.latest(s, s"$cacheDir/chain_tip")
-    val n = prev.fold(1L)(_ + 1)
-    Versions.claimed(s, cacheDir, n)(
-      relations.sortBy(_._1 == "chain_tip").foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(Versions.pathFor(s, s"$cacheDir/$name", n)) })
-    prev.foreach(p => (cacheDir +: relations.map(r => s"$cacheDir/${r._1}"))
-      .foreach(Versions.prune(s, _, p)))
-  }
+                             relations: Seq[(String, DataFrame)]): Unit =
+    Versions.publish(s, cacheDir, Versions.latest(s, cacheDir).fold(1L)(_ + 1), relations)
 
   /** The newest committed cache version; fails descriptively without one. */
   private def version(s: SparkSession, cacheDir: String): Long =
-    Versions.latest(s, s"$cacheDir/chain_tip").getOrElse(throw new IllegalArgumentException(
-      s"dashboard: $cacheDir has no chain_tip relation — re-run refreshCache (cache layout predates the derived tip timestamp)"))
+    Versions.latest(s, cacheDir).getOrElse(throw new IllegalArgumentException(
+      s"dashboard: $cacheDir has no committed version — run refreshCache first"))
 
   /** Full-series burnFeeArea page (VERDICT r5 item 5): the reference's
     * burnFeeArea emits EVERY miner's series (mining_monitor_rpc.js:46-113);
@@ -163,8 +157,6 @@ object Pipelines {
     * relation at the version and is rendered once per version (tag
     * `dashboard:<relation>`), so that render opens nothing either. */
   def dashboard(s: SparkSession, cacheDir: String): String = {
-    // the burnchain tip timestamp comes from the chain_tip cache relation,
-    // not an inlined constant (ADVICE r3); its versions are the cache's
     val n = version(s, cacheDir)
     val pr = sources.Enrichment.current(s)
     // a source of its own: a new document retires no section entry
@@ -213,6 +205,8 @@ object Pipelines {
       }
       (b20.last.getLong(0), series, fees.mkString(","))
     }
+    // the burnchain tip timestamp comes from the chain_tip cache relation,
+    // not an inlined constant (ADVICE r3)
     val tipTs = section("chain_tip")(_.select(col("tip_ts")).head().getLong(0))
     val currentStatus =
       s"""{"current_block":{"stacks_block_height":$tipHeight,""" +

@@ -124,15 +124,16 @@ object Tables {
     DataType.fromJson(json).asInstanceOf[StructType]
   }
 
-  /** Relation `name` of the committed [[Versions]] version `v` under
-    * `dir` (`<dir>/<name>/v=<v>`). A committed version never changes, so
-    * its number is the fingerprint: the relation is opened once per
-    * version, with the schema its writer stored (no inference job), as the
-    * [[Memo.valueAt]] entry `relation:<name>` of `dir`, which a newer
-    * version replaces. A hit lists nothing. */
+  /** Relation `name` of the committed [[Versions]] version `v` of the
+    * store at `dir` (the dir its manifest names). A committed version never
+    * changes, so its number is the fingerprint: the manifest is read and
+    * the relation opened once per version, with the schema its writer
+    * stored (no inference job), as the [[Memo.valueAt]] entry
+    * `relation:<name>` of `dir`, which a newer version replaces. A hit
+    * reads and lists nothing. */
   private[graft] def version(s: SparkSession, dir: String, name: String, v: Long): DataFrame =
     s.baseRelationToDataFrame(Memo.valueAt(s, dir, s"relation:$name", name, v) {
-      val path = Versions.path(s"$dir/$name", v)
+      val path = Versions.dir(s, dir, name, v)
       relationOf(s, path, Some(writtenSchema(s, path)))
     })
 

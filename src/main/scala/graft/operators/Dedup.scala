@@ -103,12 +103,6 @@ object Dedup {
   private def h64(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** MinHash signature j over pre-hashed shingles: min(h ⊕ seed_j) — the
-    * per-seed fold, kept as the law REFERENCE for the native one-pass
-    * graft_minhash below (DedupSpec). */
-  private[graft] def minhashUnrolled(j: Int): Column =
-    array_min(transform(col("hs"), h => h.bitwiseXOR(lit(seeds(j)))))
-
   /** LSH band rows (doc_id, band_idx, bh) for a documents frame: 8
     * minhashes over hashed shingles, 4 bands of 2. This is the index d2
     * self-joins — and, persisted, it is the STATE of the incremental
@@ -334,19 +328,12 @@ object Dedup {
     * ([[hashedCol]]); an earlier form took the raw token array and put the
     * md5 inside this fold, recomputing every digest once per bit (16–32×
     * redundant hashing — measured 2.5× on d8's whole pipeline). */
-  private def bitVote(hs: Column, p: Int): Column =
+  private[graft] def bitVote(hs: Column, p: Int): Column =
     aggregate(hs, lit(0),
       (acc, h) => acc + when(substring(h, p, 1) >= "8", 1).otherwise(-1))
 
   /** One md5 per array element, hoisted out of the per-bit vote folds. */
   private def hashedCol(xs: Column): Column = transform(xs, t => md5(t))
-
-  /** The pre-r13 per-bit interpreted fold, kept as the law REFERENCE the
-    * native graft_simhash expression is compared against (DedupSpec). */
-  private[graft] def simhashUnrolled(hs: Column, bits: Int): Column =
-    (1 to bits).map(p =>
-      when(bitVote(hs, p) > 0, lit(1L << (p - 1))).otherwise(lit(0L)))
-      .reduce(_ + _)
 
   /** D3 — 16-bit SimHash per document (row-local; identical docs get
     * identical simhash, near-identical docs differ in few bits). The

@@ -199,10 +199,10 @@ object Similarity {
     * form). Lexicographic struct comparison ≡ ORDER BY cos DESC, cell_id
     * ASC, so the DuckDB oracle's row_number form picks the identical
     * cell. */
-  private def cellNorms(cells: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double], Double)] =
+  private[graft] def cellNorms(cells: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double], Double)] =
     cells.map { case (id, cv) => (id, cv, math.sqrt(cv.map(x => x * x).sum)) }
 
-  private def cellScore(c: (Long, Seq[Double], Double)): Column =
+  private[graft] def cellScore(c: (Long, Seq[Double], Double)): Column =
     struct(
       (dot(col("v"), typedlit(c._2)) / (col("norm") * lit(c._3))).as("cos"),
       lit(-c._1).as("neg_id"))
@@ -248,41 +248,6 @@ object Similarity {
                                      cells: Seq[(Long, Seq[Double])]): DataFrame =
     v.select(col("vec_id"), col("v"), col("norm"),
       cellIdOf(col("v"), col("norm"), cells).as("cell_id"))
-
-  /** The pre-r13 statically-unrolled argmax, kept as the law REFERENCE the
-    * native expression is triangle-compared against (KMeansSpec) — k
-    * literal struct scores through greatest(); only valid ≤ UnrollMax. */
-  private[graft] def assignCellsUnrolled(v: DataFrame,
-                                     cells: Seq[(Long, Seq[Double])]): DataFrame =
-    v.withColumn("best", greatest(cellNorms(cells).map(cellScore): _*))
-      .select(col("vec_id"), col("v"), col("norm"),
-        (-col("best.neg_id")).as("cell_id"))
-
-  /** Join-form assignment for large codebooks: broadcast the k-row
-    * codebook, score each (vector, cell) pair, keep the per-vector argmax
-    * via max over the SAME (cos, -cell_id) struct order the unrolled form
-    * compares, then join the winning cell back to the vector payload.
-    * The n·k intermediate rows carry ONLY (vec_id, 16-byte score) — the
-    * first cut ran the 512-byte vector array through max_by's buffer for
-    * every scored pair, an allocation storm that measured 162 s for the
-    * sf10 build (200 k × 448 cells); scoring thin and joining the payload
-    * back once per vector is ~3× cheaper. Partial aggregation collapses
-    * the k-fanout map-side, so the exchange carries n rows — the one-time
-    * postings-build cost every production IVF pays. */
-  private[graft] def assignCellsJoin(v: DataFrame,
-                                         cells: Seq[(Long, Seq[Double])]): DataFrame = {
-    val s = v.sparkSession
-    val cb = s.createDataFrame(cellNorms(cells)).toDF("cell_id", "cv", "cnorm")
-    val best = v.crossJoin(broadcast(cb))
-      .select(col("vec_id"), struct(
-        (dot(col("v"), col("cv")) / (col("norm") * col("cnorm"))).as("cos"),
-        (-col("cell_id")).as("neg_id")).as("score"))
-      .groupBy(col("vec_id"))
-      .agg(max(col("score")).as("b"))
-      .select(col("vec_id"), (-col("b.neg_id")).as("cell_id"))
-    v.join(best, Seq("vec_id"))
-      .select(col("vec_id"), col("v"), col("norm"), col("cell_id"))
-  }
 
   /** Admit a delta of vectors into a stored IVF postings table: assign the
     * delta row-locally with the SAME broadcast codebook and append.
@@ -632,24 +597,6 @@ object Similarity {
       .select(framed.columns.filter(_ != "v").map(col).toSeq ++
         (0 until PqM).map(m =>
           element_at(col("_codes"), m + 1).as(s"code$m")): _*)
-      .withColumn("recon_sq", (0 until PqM).map(m =>
-        element_at(typedlit(sub(m).map(_._3)), col(s"code$m") + 1)).reduce(_ + _))
-  }
-
-  /** The pre-r13 unrolled encode, kept as the law REFERENCE for the native
-    * graft_pq_codes path (NorthStarSpec). */
-  private[graft] def pqEncodeUnrolled(assigned: DataFrame,
-                              sub: Seq[Seq[(Long, Seq[Double], Double)]]): DataFrame = {
-    def encScore(m: Int, c: (Long, Seq[Double], Double)): Column =
-      struct(
-        (lit(2.0) * dot(slice(col("v"), m * PqSub + 1, PqSub), typedlit(c._2))
-          - lit(c._3)).as("s"),
-        lit(-c._1).as("nc"))
-    assigned
-      .select(Seq(col("vec_id"), col("cell_id")) ++
-        (0 until PqM).map(m =>
-          (-greatest(sub(m).map(c => encScore(m, c)): _*).getField("nc"))
-            .cast("int").as(s"code$m")): _*)
       .withColumn("recon_sq", (0 until PqM).map(m =>
         element_at(typedlit(sub(m).map(_._3)), col(s"code$m") + 1)).reduce(_ + _))
   }

@@ -69,7 +69,7 @@ object Enrichment {
     val ttl = confOr(s, TtlKey, DefaultTtlSec)
     val fallback = s.createDataFrame(
       java.util.List.of(Row(stx, btc, gas, hp, null)), fallbackSchema)
-    val one = s.conf.getOption(PathKey) match {
+    val one = conf(s, PathKey) match {
       case Some(path) =>
         val mtimeSec = new java.io.File(path).lastModified / 1000L
         s.read.schema(schemaDdl).json(path)
@@ -100,7 +100,7 @@ object Enrichment {
     * from confs and defaults and no Dataset is built, so a reader pays no
     * Catalyst query; with one, this is the live one-row [[prices]] read.
     * Never memoize it: the fetcher rewrites the file on its own clock. */
-  def current(s: SparkSession): Prices = s.conf.getOption(PathKey) match {
+  def current(s: SparkSession): Prices = conf(s, PathKey) match {
     case None => configured(s)
     case Some(_) =>
       val r = prices(s).select(col("stx_price_milli"), col("btc_sat_scale"),
@@ -114,8 +114,12 @@ object Enrichment {
     confOr(s, StxMilliKey, DefaultStxMilli),
     confOr(s, BtcScaleKey, DefaultBtcScale),
     confOr(s, GasSatsKey, DefaultGasSats),
-    s.conf.getOption(HashPowerKey).getOrElse(DefaultHashPower))
+    conf(s, HashPowerKey).getOrElse(DefaultHashPower))
 
   private def confOr(s: SparkSession, key: String, default: Long): Long =
-    s.conf.getOption(key).map(_.toLong).getOrElse(default)
+    conf(s, key).map(_.toLong).getOrElse(default)
+
+  /** A session conf, or None when unset. `getOption` throws (and catches)
+    * an exception per unset key, which a serving read pays on every call. */
+  private def conf(s: SparkSession, key: String): Option[String] = Option(s.conf.get(key, null))
 }

@@ -318,11 +318,10 @@ object EventStream {
         org.apache.spark.sql.types.StructType.fromDDL(schema))
     }
 
-  /** Committed version `v` of the store at `storeDir`. */
-  private def storeVersion(s: SparkSession, storeDir: String, v: Long): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    graft.Tables.version(s, root.getParent.toString, root.getName, v)
-  }
+  /** Committed version `v` of the store at `storeDir`: its one relation,
+    * `state`. */
+  private def storeVersion(s: SparkSession, storeDir: String, v: Long): DataFrame =
+    graft.Tables.version(s, storeDir, "state", v)
 
   /** The leaderboard instantiation of [[currentStore]] — the read side of
     * [[leaderboardRefresh]]. */
@@ -442,12 +441,9 @@ object EventStream {
                                      batchId: Long, schema: String,
                                      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val s = batch.sparkSession
-    val prev = graft.Versions.latest(s, storeDir)
-    if (!prev.exists(_ >= batchId)) {
-      merge(currentStore(s, storeDir, schema), batch)
-        .write.mode("overwrite").parquet(graft.Versions.pathFor(s, storeDir, batchId))
-      prev.foreach(graft.Versions.prune(s, storeDir, _))
-    }
+    if (!graft.Versions.latest(s, storeDir).exists(_ >= batchId))
+      graft.Versions.publish(s, storeDir, batchId,
+        Seq("state" -> merge(currentStore(s, storeDir, schema), batch)))
   }
 
   private[graft] val SketchSchema = "day DATE, sk BINARY"

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.json4s._
+import scala.jdk.CollectionConverters._
 import org.json4s.jackson.JsonMethods
 
 /** The nine cache relations `refreshCache` writes, each paired with the
@@ -244,8 +245,8 @@ class DashboardSpec extends SparkSpec {
     val pageBefore = Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
     // a new version: half the area rows (every second point of the
     // (address, height) order), every other relation as it was
-    val v = Versions.latest(spark, s"$dir/chain_tip").get
-    def current(name: String) = spark.read.parquet(Versions.path(s"$dir/$name", v))
+    val v = Versions.latest(spark, dir).get
+    def current(name: String) = spark.read.parquet(Versions.dir(spark, dir, name, v))
     val area = current("burn_fee_area")
     val kept = area.orderBy("address", "height").collect()
       .zipWithIndex.collect { case (r, i) if i % 2 == 1 => r }
@@ -268,14 +269,17 @@ class DashboardSpec extends SparkSpec {
     val uri = new java.io.File(dir).toURI.toString.stripSuffix("/")
     assert(uri.startsWith("file:/"))
     assert(Pipelines.dashboard(spark, uri) === Pipelines.dashboard(spark, dir))
-    // a chain_tip with no committed version is no chain_tip
-    val tip = new java.io.File(dir, "chain_tip")
-    assert(new java.io.File(tip, "v=1/_SUCCESS").delete())
-    val e = intercept[IllegalArgumentException](Pipelines.dashboard(spark, dir))
-    assert(e.getMessage.contains(s"$dir has no chain_tip relation"), e.getMessage)
-    org.apache.commons.io.FileUtils.deleteDirectory(tip)
+    // a version whose manifest names no chain_tip has no chain_tip
+    val manifest = java.nio.file.Paths.get(dir, "_versions", "1")
+    val lines = java.nio.file.Files.readAllLines(manifest)
+    java.nio.file.Files.write(manifest, lines.toArray(Array.empty[String]).toSeq
+      .filterNot(_.startsWith("chain_tip\t")).asJava)
+    val e = intercept[IllegalStateException](Pipelines.dashboard(spark.newSession(), dir))
+    assert(e.getMessage.contains(s"version 1 of $dir has no relation chain_tip"), e.getMessage)
+    // a cache dir with no committed version fails naming it
+    assert(manifest.toFile.delete())
     val e2 = intercept[IllegalArgumentException](Pipelines.burnFeeAreaPageJson(spark, dir, None, 50))
-    assert(e2.getMessage.contains(s"$dir has no chain_tip relation"), e2.getMessage)
+    assert(e2.getMessage.contains(s"$dir has no committed version"), e2.getMessage)
   }
 
   /** The area page cursors the concurrency specs read at: the start, and
@@ -318,10 +322,10 @@ class DashboardSpec extends SparkSpec {
     val dir = refreshed("graft_dash_crash")
     val at = cursors(dir)
     val expected = reads(spark, dir, at)
-    val n = Versions.latest(spark, s"$dir/chain_tip").get
-    // a crashed tick's leftovers: a part file under v=n+1, no _SUCCESS
+    val n = Versions.latest(spark, dir).get
+    // a crashed tick's leftovers: a part file under its own v=n+1 dir, no manifest
     CacheQueries.Relations.foreach { r =>
-      val v = java.nio.file.Paths.get(dir, r, s"v=${n + 1}")
+      val v = java.nio.file.Paths.get(dir, r, s"v=${n + 1}-crashed")
       java.nio.file.Files.createDirectories(v)
       java.nio.file.Files.writeString(v.resolve("part-00000-crashed.snappy.parquet"), "torn")
     }
@@ -329,9 +333,9 @@ class DashboardSpec extends SparkSpec {
     // a session of its own holds no memo entries: it opens the version
     assert(reads(spark.newSession(), dir, at) === expected)
     Pipelines.refreshCache(spark, sf, dir)
+    assert(Versions.latest(spark, dir) === Some(n + 1))
     CacheQueries.Relations.foreach { r =>
-      assert(Versions.latest(spark, s"$dir/$r") === Some(n + 1), r)
-      assert(!new java.io.File(dir, s"$r/v=${n + 1}/part-00000-crashed.snappy.parquet").exists, r)
+      assert(!Versions.dir(spark, dir, r, n + 1).endsWith("-crashed"), r)
     }
     assert(reads(spark.newSession(), dir, at) === expected)
   }
@@ -352,9 +356,11 @@ class DashboardSpec extends SparkSpec {
       Pipelines.burnFeeAreaPageJson(spark, dir, None, 50)
       assert(relationEntries === oneEach)
     }
+    assert(Versions.committed(spark, dir) === Seq(6L, 5L))
+    assert(new java.io.File(dir, "_versions").list().toSeq.sorted === Seq("5", "6"))
     CacheQueries.Relations.foreach { r =>
-      assert(Versions.committed(spark, s"$dir/$r") === Seq(6L, 5L), r)
-      assert(new java.io.File(dir, r).list().toSeq.sorted === Seq("v=5", "v=6"), r)
+      assert(new java.io.File(dir, r).list().toSeq.sorted ===
+        Seq(5L, 6L).map(v => new java.io.File(Versions.dir(spark, dir, r, v)).getName), r)
     }
     assert(Memo.entries("dashboard:block_info") === memoBefore + 1)
   }

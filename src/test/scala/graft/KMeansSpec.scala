@@ -1,5 +1,59 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+import operators.Similarity.{cellNorms, cellScore}
+
+/** The pre-r13 plans of the cell assignment and the PQ encode, kept as the
+  * law REFERENCES the native expressions (graft_argmax_cell,
+  * graft_pq_codes) are compared against. */
+object SimilarityReferences {
+  private def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+
+  /** The statically-unrolled argmax: k literal struct scores through
+    * greatest(); only valid ≤ UnrollMax. */
+  def assignCellsUnrolled(v: DataFrame, cells: Seq[(Long, Seq[Double])]): DataFrame =
+    v.withColumn("best", greatest(cellNorms(cells).map(cellScore): _*))
+      .select(col("vec_id"), col("v"), col("norm"),
+        (-col("best.neg_id")).as("cell_id"))
+
+  /** Join-form assignment: broadcast the k-row codebook, score each
+    * (vector, cell) pair, keep the per-vector argmax via max over the SAME
+    * (cos, -cell_id) struct order the unrolled form compares, then join
+    * the winning cell back to the vector payload. */
+  def assignCellsJoin(v: DataFrame, cells: Seq[(Long, Seq[Double])]): DataFrame = {
+    val cb = v.sparkSession.createDataFrame(cellNorms(cells)).toDF("cell_id", "cv", "cnorm")
+    val best = v.crossJoin(broadcast(cb))
+      .select(col("vec_id"), struct(
+        (dot(col("v"), col("cv")) / (col("norm") * col("cnorm"))).as("cos"),
+        (-col("cell_id")).as("neg_id")).as("score"))
+      .groupBy(col("vec_id"))
+      .agg(max(col("score")).as("b"))
+      .select(col("vec_id"), (-col("b.neg_id")).as("cell_id"))
+    v.join(best, Seq("vec_id"))
+      .select(col("vec_id"), col("v"), col("norm"), col("cell_id"))
+  }
+
+  /** The unrolled encode: per subspace, the greatest() of the literal
+    * codeword scores. */
+  def pqEncodeUnrolled(assigned: DataFrame,
+                       sub: Seq[Seq[(Long, Seq[Double], Double)]]): DataFrame = {
+    val width = sub.head.head._2.length
+    def encScore(m: Int, c: (Long, Seq[Double], Double)): Column =
+      struct(
+        (lit(2.0) * dot(slice(col("v"), m * width + 1, width), typedlit(c._2))
+          - lit(c._3)).as("s"),
+        lit(-c._1).as("nc"))
+    assigned
+      .select(Seq(col("vec_id"), col("cell_id")) ++
+        sub.indices.map(m =>
+          (-greatest(sub(m).map(c => encScore(m, c)): _*).getField("nc"))
+            .cast("int").as(s"code$m")): _*)
+      .withColumn("recon_sq", sub.indices.map(m =>
+        element_at(typedlit(sub(m).map(_._3)), col(s"code$m") + 1)).reduce(_ + _))
+  }
+}
+
 /** The trained IVF codebook path (x3b): Lloyd's iterations must produce a
   * stable k-cell codebook with usable recall. On the isotropic random
   * testdata, k-means is recall-NEUTRAL vs the fixed-vector codebook
@@ -30,9 +84,9 @@ class KMeansSpec extends SparkSpec {
     assert(cells.size <= operators.Similarity.UnrollMax) // unroll form valid
     val native = operators.Similarity.assignCells(v, cells)
       .select("vec_id", "cell_id")
-    val unrolled = operators.Similarity.assignCellsUnrolled(v, cells)
+    val unrolled = SimilarityReferences.assignCellsUnrolled(v, cells)
       .select("vec_id", "cell_id")
-    val joined = operators.Similarity.assignCellsJoin(v, cells)
+    val joined = SimilarityReferences.assignCellsJoin(v, cells)
       .select("vec_id", "cell_id")
     assert(native.exceptAll(unrolled).isEmpty && unrolled.exceptAll(native).isEmpty)
     assert(native.exceptAll(joined).isEmpty && joined.exceptAll(native).isEmpty)
@@ -44,7 +98,7 @@ class KMeansSpec extends SparkSpec {
     val asg = operators.Similarity.scaledAssigned(spark, sf)
     val sub = operators.Similarity.trainedPqCodebook(spark, sf)
     val native = operators.Similarity.pqEncode(asg, sub)
-    val unrolled = operators.Similarity.pqEncodeUnrolled(asg, sub)
+    val unrolled = SimilarityReferences.pqEncodeUnrolled(asg, sub)
     assert(native.columns.toSeq === unrolled.columns.toSeq)
     assert(native.exceptAll(unrolled).isEmpty && unrolled.exceptAll(native).isEmpty)
   }

@@ -1,6 +1,21 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+
+/** The pre-r13 interpreted folds, kept as the law REFERENCES the native
+  * graft_minhash and graft_simhash expressions are compared against. */
+object DedupReferences {
+  /** MinHash signature j over pre-hashed shingles: min(h ⊕ seed_j). */
+  def minhashUnrolled(j: Int): Column =
+    array_min(transform(col("hs"), h => h.bitwiseXOR(lit(operators.Dedup.seeds(j)))))
+
+  /** The per-bit vote folds, one aggregate() per bit. */
+  def simhashUnrolled(hs: Column, bits: Int): Column =
+    (1 to bits).map(p =>
+      when(operators.Dedup.bitVote(hs, p) > 0, lit(1L << (p - 1))).otherwise(lit(0L)))
+      .reduce(_ + _)
+}
 
 /** Invariants for the training-data-pipeline layer (dedup / similarity /
   * text analysis) on sf0.001. */
@@ -361,7 +376,7 @@ class DedupSpec extends SparkSpec {
         typedlit(operators.Dedup.seeds)).as("mh"), col("hs"))
       .agg(count(lit(1)).as("n"),
         sum(when((0 until 8).map(j =>
-            element_at(col("mh"), j + 1) <=> operators.Dedup.minhashUnrolled(j))
+            element_at(col("mh"), j + 1) <=> DedupReferences.minhashUnrolled(j))
           .reduce(_ && _), 0L).otherwise(1L)).as("bad")).head()
     assert(stats.getLong(0) > 0L)
     assert(stats.getLong(1) === 0L, "minhash diverged from the folds")
@@ -378,7 +393,7 @@ class DedupSpec extends SparkSpec {
     for (bits <- Seq(16, 32)) {
       val bad = hs.select(
         call_function("graft_simhash", col("hs"), lit(bits)).as("native"),
-        operators.Dedup.simhashUnrolled(col("hs"), bits).as("unrolled"))
+        DedupReferences.simhashUnrolled(col("hs"), bits).as("unrolled"))
         .filter(col("native") =!= col("unrolled")).count()
       assert(bad === 0L, s"graft_simhash($bits) diverged from the fold")
     }

@@ -127,8 +127,8 @@ class PipelinesSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
     // the committed version: the root holds two versions after a refresh
-    def committed(name: String) = spark.read.parquet(Versions.path(s"$dir/$name",
-      Versions.latest(spark, s"$dir/chain_tip").get))
+    def committed(name: String) = spark.read.parquet(Versions.dir(spark, dir, name,
+      Versions.latest(spark, dir).get))
     val queries = CacheQueries.ordered(spark, sf)
     assert(queries.map(_._1) === CacheQueries.Relations)
     queries.foreach { case (name, query) =>
@@ -233,9 +233,10 @@ class PipelinesSpec extends SparkSpec {
   }
 
   /** Two or three ticks racing on one cache dir: of the writers that pick
-    * one version, one writes it and the others fail naming its claim, so
-    * every committed version holds exactly one writer's relations. */
-  test("racing refreshCache writers: every call commits a whole version or fails naming the claim") {
+    * one version, one commits it and the others fail naming it at their
+    * commit, so every committed version holds exactly one writer's
+    * relations, and a loser leaves none of its own. */
+  test("racing refreshCache writers: every call commits a whole version or fails naming the version") {
     def digest(path: String): (Long, Long) = {
       val df = spark.read.parquet(path)
       val r = df.agg(count(lit(1)), bit_xor(xxhash64(df.columns.toSeq.map(col): _*))).head()
@@ -243,12 +244,13 @@ class PipelinesSpec extends SparkSpec {
     }
     val single = java.nio.file.Files.createTempDirectory("graft_race_one").toString
     Pipelines.refreshCache(spark, sf, single)
-    val expected = CacheQueries.Relations.map(r =>
-      r -> digest(Versions.path(s"$single/$r", 1L))).toMap
+    val expected = CacheQueries.Relations.map(r => r -> digest(Versions.dir(spark, single, r, 1L))).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft_race").toString
+    val lost = raw"version (\d+) of ${java.util.regex.Pattern.quote(dir)} is not the one after".r.unanchored
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    var losers = 0
     try (1 to 12).foreach { round =>
-      val before = Versions.latest(spark, s"$dir/chain_tip").getOrElse(0L)
+      val before = Versions.latest(spark, dir).getOrElse(0L)
       val go = new java.util.concurrent.CountDownLatch(1)
       val calls = (1 to 2 + round % 2).map(_ => pool.submit(
         new java.util.concurrent.Callable[scala.util.Try[Unit]] {
@@ -256,18 +258,28 @@ class PipelinesSpec extends SparkSpec {
         }))
       go.countDown()
       val outcomes = calls.map(_.get(5L, java.util.concurrent.TimeUnit.MINUTES))
-      outcomes.foreach(_.failed.foreach(e => assert(
-        String.valueOf(e.getMessage).contains("claimed by another writer"),
-        s"round $round: a loser must fail on the claim, not mid-write: $e")))
       val commits = outcomes.count(_.isSuccess)
+      losers += outcomes.count(_.isFailure)
+      outcomes.foreach(_.failed.foreach(e => String.valueOf(e.getMessage) match {
+        case lost(v) => assert(v.toLong > before && v.toLong <= before + commits,
+          s"round $round: a loser names a version committed this round: $e")
+        case _ => fail(s"round $round: a loser must fail naming its version at the commit, not mid-write: $e")
+      }))
       assert(commits >= 1, s"round $round")
-      assert(Versions.latest(spark, s"$dir/chain_tip") === Some(before + commits),
+      assert(Versions.latest(spark, dir) === Some(before + commits),
         s"round $round: each call that returned committed a version of its own")
-      Versions.committed(spark, s"$dir/chain_tip").foreach(v =>
-        CacheQueries.Relations.foreach(r =>
-          assert(digest(Versions.path(s"$dir/$r", v)) === expected(r),
-            s"round $round: $r at v=$v")))
+      val retained = Versions.committed(spark, dir)
+      assert(new java.io.File(dir, "_versions").list().toSeq.sorted === retained.map(_.toString).sorted,
+        s"round $round: no manifest but the retained ones")
+      CacheQueries.Relations.foreach { r =>
+        val dirs = retained.map(v => Versions.dir(spark, dir, r, v))
+        dirs.zip(retained).foreach { case (d, v) =>
+          assert(digest(d) === expected(r), s"round $round: $r at v=$v") }
+        assert(new java.io.File(dir, r).list().toSeq.sorted === dirs.map(new java.io.File(_).getName).sorted,
+          s"round $round: $r holds only the retained versions' dirs")
+      }
     } finally pool.shutdown()
+    assert(losers > 0, "no round had a loser: the writers never raced")
   }
 
   /** A long-running server restamps lineitem every tick: what a tick
@@ -291,13 +303,73 @@ class PipelinesSpec extends SparkSpec {
       Pipelines.burnFeeAreaPageJson(spark, cache, None, 50)
       val memo = Seq("winners", "miner_totals", s"miner_totals_1000@$tip",
         s"miner_totals_100@$tip").map(Memo.entries).sum
+      // the cache's manifests, and the most version dirs any relation holds
+      val versions = (new java.io.File(cache, "_versions").list().length,
+        CacheQueries.Relations.map(r => new java.io.File(cache, r).list().length).max)
       ((names -- namesBefore).count(_.startsWith("winners_")),
-        bytes(scratch) - bytesBefore, memo, Memo.entries(src.getPath, "relation:lineitem"))
+        bytes(scratch) - bytesBefore, memo, Memo.entries(src.getPath, "relation:lineitem"), versions)
     }
     assert(ticks.forall(_._1 <= 2), s"winners_* dirs per tick: ${ticks.map(_._1)}")
     assert(ticks.drop(2).forall(_._2 <= ticks(1)._2), s"scratch bytes per tick: ${ticks.map(_._2)}")
     assert(ticks.forall(_._3 <= ticks.head._3), s"memo entries per tick: ${ticks.map(_._3)}")
     assert(ticks.forall(_._4 == 1), s"lineitem relation entries per tick: ${ticks.map(_._4)}")
+    assert(ticks.forall(t => t._5._1 <= 2 && t._5._2 <= 2),
+      s"(manifests, version dirs of a relation) per tick: ${ticks.map(_._5)}")
+  }
+
+  /** A writer killed mid-tick leaves torn relation dirs: under the
+    * earlier claim protocol a `v=<n+1>` beside its `_claim-<n+1>`, under
+    * the manifest protocol a `v=<n+1>-<attempt>` beside a temp manifest.
+    * None of them is read or stops a later tick, and the prune deletes
+    * the dirs and the temp manifest with their version. */
+  test("a killed writer's leftovers stop no tick and are gone two ticks after the next commit") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dead_writer").toString
+    Pipelines.refreshCache(spark, sf, dir)
+    val doc = Pipelines.dashboard(spark, dir)
+    val n = Versions.latest(spark, dir).get
+    val torn = CacheQueries.Relations.flatMap(r => Seq(s"v=${n + 1}", s"v=${n + 1}-dead").map { v =>
+      val d = java.nio.file.Paths.get(dir, r, v)
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.writeString(d.resolve("part-00000-torn.snappy.parquet"), "torn")
+      d.toFile
+    })
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, s"_claim-${n + 1}"))
+    val tmp = java.nio.file.Paths.get(dir, "_versions", s"${n + 1}-dead").toFile
+    java.nio.file.Files.createDirectories(tmp.toPath.getParent)
+    java.nio.file.Files.writeString(tmp.toPath, "torn")
+    Pipelines.refreshCache(spark, sf, dir)
+    assert(Versions.latest(spark, dir) === Some(n + 1))
+    assert(Pipelines.dashboard(spark.newSession(), dir) === doc)
+    Pipelines.refreshCache(spark, sf, dir)
+    assert(torn.forall(_.exists) && tmp.exists, "kept while their version is retained")
+    Pipelines.refreshCache(spark, sf, dir)
+    assert(torn.filter(_.exists).isEmpty && !tmp.exists, s"left: ${torn.filter(_.exists)}")
+    assert(Versions.committed(spark, dir) === Seq(n + 3, n + 2))
+  }
+
+  /** The manifest is the commit: it names every relation of its version,
+    * and a tick that throws writes none. */
+  test("a committed manifest names all nine relations; a tick whose relation throws leaves no manifest and no dirs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_manifest").toString
+    Pipelines.refreshCache(spark, sf, dir)
+    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(dir, "_versions", "1"))
+    val named = lines.toArray(Array.empty[String]).toSeq.map(_.split('\t').toSeq)
+    assert(named.map(_.head).sorted === CacheQueries.Relations.sorted)
+    named.foreach { case Seq(r, d) =>
+      assert(d.startsWith(s"$r/v=1-") && Versions.dir(spark, dir, r, 1L) === s"$dir/$d")
+      assert(Tables.version(spark, dir, r, 1L).count() > 0, r)
+    }
+    def listing() = (new java.io.File(dir).list().toSeq.sorted,
+      CacheQueries.Relations.map(r => new java.io.File(dir, r).list().toSeq.sorted))
+    val before = listing()
+    val boom = spark.range(3).select(raise_error(lit("boom")).cast("long").as("x"))
+    val e = intercept[Exception](Pipelines.publish(spark, dir,
+      CacheQueries.Relations.map(r => r -> (if (r == "chain_tip") boom else spark.range(1).toDF("x")))))
+    assert(String.valueOf(e.getMessage).contains("boom") ||
+      String.valueOf(Option(e.getCause).map(_.getMessage).orNull).contains("boom"), e.toString)
+    assert(listing() === before, "the failed tick's dirs are deleted")
+    assert(new java.io.File(dir, "_versions").list().toSeq === Seq("1"))
+    assert(Versions.latest(spark, dir) === Some(1L))
   }
 
   test("stateful running max accumulates across micro-batches") {
@@ -576,7 +648,8 @@ class PipelinesSpec extends SparkSpec {
     val e = intercept[IllegalStateException](fold(Seq((3L, 7L)), 3L))
     assert(e.getMessage.contains(s"version 3 of $store") &&
       e.getMessage.contains("newest committed version 1"), e.getMessage)
-    assert(!new java.io.File(Versions.path(store, 3L)).exists)
+    assert(!new java.io.File(store, "_versions/3").exists)
+    assert(new java.io.File(store, "state").list().forall(!_.startsWith("v=3")))
     fold(Seq((2L, 50L)), 1L)
     assert(rows() === before)
     assert(Versions.latest(spark, store) === Some(1L))
@@ -605,7 +678,7 @@ class PipelinesSpec extends SparkSpec {
     assert(c.orderBy("leader_key_address").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ===
       Seq((1L, 1L, 100L), (2L, 1L, 50L)))
-    assert(Memo.entries(dir, "relation:store") === 1, "a newer version replaces the entry")
+    assert(Memo.entries(store, "relation:state") === 1, "a newer version replaces the entry")
   }
 
   test("streaming sketch store: micro-batches fold to the one-pass distinct estimates") {

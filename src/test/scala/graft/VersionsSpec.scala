@@ -37,18 +37,22 @@ object CountingFileSystem {
 }
 
 /** [[Versions.latest]] finds the newest committed version from the one a
-  * session saw last: two existence checks over an unchanged store, a
-  * forward walk over new commits, the listing when the hint is gone. */
+  * session saw last: two manifest existence checks over an unchanged
+  * store, a forward walk over new commits, the listing when the hint is
+  * gone. [[Versions.publish]] keeps the versions consecutive. */
 class VersionsSpec extends SparkSpec {
 
+  /** A writer of its own: its hint is not the reading session's. */
+  private lazy val writer = spark.newSession()
+
   /** Commit version `v` of the store at `root` the way a writer does: its
-    * files, then its `_SUCCESS`. */
-  private def commit(root: String, v: Long): Unit = {
-    val dir = java.nio.file.Paths.get(Versions.path(root, v))
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.writeString(dir.resolve("part-00000.parquet"), "rows")
-    java.nio.file.Files.createFile(dir.resolve("_SUCCESS")): Unit
-  }
+    * relation `r`, then its manifest. */
+  private def commit(root: String, v: Long): Unit =
+    Versions.publish(writer, root, v, Seq("r" -> writer.range(1).toDF("x")))
+
+  /** The names in dir `sub` of the store at `root`. */
+  private def names(root: String, sub: String): Seq[String] =
+    Option(new java.io.File(root, sub).list()).toSeq.flatten.sorted
 
   private def store(prefix: String): String =
     s"${java.nio.file.Files.createTempDirectory(prefix)}/store"
@@ -73,28 +77,29 @@ class VersionsSpec extends SparkSpec {
 
   test("a session that read version n sees n + 1 on its first read after another session commits it") {
     val dir = java.nio.file.Files.createTempDirectory("graft_versions_next").toString
-    val root = s"$dir/chain_tip"
     val other = spark.newSession()
     def tick(): Unit = Pipelines.publish(other, dir, Seq("chain_tip" -> other.range(1).toDF("x")))
     tick()
-    assert(Versions.latest(spark, root) === Some(1L))
+    assert(Versions.latest(spark, dir) === Some(1L))
     tick()
-    assert(Versions.latest(spark, root) === Some(2L))
+    assert(Versions.latest(spark, dir) === Some(2L))
     // several commits since the last read: the walk goes forward to the newest
     tick(); tick()
-    assert(Versions.latest(spark, root) === Some(4L))
-    // an uncommitted next version is not the newest
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(Versions.path(root, 5L)))
-    assert(Versions.latest(spark, root) === Some(4L))
+    assert(Versions.latest(spark, dir) === Some(4L))
+    // an uncommitted next version (a writer's dir and temp manifest) is not the newest
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "chain_tip", "v=5-dead"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_versions", "5-dead"), "torn")
+    assert(Versions.latest(spark, dir) === Some(4L))
   }
 
   test("a hint left behind by three commits and a prune falls back to the listing") {
     val root = store("graft_versions_stale")
     commit(root, 1L)
     assert(Versions.latest(spark, root) === Some(1L))
+    // committing 4 prunes below 3, the hint's version among them
     (2L to 4L).foreach(commit(root, _))
-    Versions.prune(spark, root, 3L)
-    assert(!new java.io.File(Versions.path(root, 2L)).exists)
+    assert(names(root, "_versions") === Seq("3", "4"))
+    assert(names(root, "r").map(_.takeWhile(_ != '-')) === Seq("v=3", "v=4"))
     assert(Versions.latest(spark, root) === Some(4L))
     // a store deleted and written again from its first version
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
@@ -105,15 +110,18 @@ class VersionsSpec extends SparkSpec {
 
   test("a write that would leave a gap fails naming the store and both versions") {
     val root = store("graft_versions_gap")
-    assert(Versions.pathFor(spark, root, 7L) === Versions.path(root, 7L), "any first version")
-    commit(root, 7L)
+    commit(root, 7L) // any first version
     commit(root, 8L)
-    assert(Versions.pathFor(spark, root, 9L) === Versions.path(root, 9L))
-    assert(Versions.pathFor(spark, root, 8L) === Versions.path(root, 8L), "a committed version again")
-    Seq(10L, 6L).foreach { v =>
-      val e = intercept[IllegalStateException](Versions.pathFor(spark, root, v))
+    // a gap, a version below the first, a committed version again: each
+    // fails at its commit and deletes what it wrote
+    Seq(10L, 6L, 8L).foreach { v =>
+      val e = intercept[IllegalStateException](commit(root, v))
       assert(e.getMessage.contains(s"version $v of $root") &&
         e.getMessage.contains("newest committed version 8"), e.getMessage)
     }
+    assert(names(root, "_versions") === Seq("7", "8"))
+    assert(names(root, "r").map(_.takeWhile(_ != '-')) === Seq("v=7", "v=8"))
+    commit(root, 9L)
+    assert(Versions.latest(spark, root) === Some(9L))
   }
 }
